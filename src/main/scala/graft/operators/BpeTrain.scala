@@ -103,8 +103,8 @@ object BpeTrain {
   def train(spark: SparkSession, words: DataFrame, nMerges: Int,
       maxDriverPairs: Long = 1L << 20): Seq[Merge] = {
     import spark.implicits._
-    // lazy checkpoint: the alphabet-sizing count below fully scans the
-    // frame, materializing the checkpoint in the same job (r16 §1.2)
+    // lazy checkpoint: the first merge iteration's pair-count pass fully
+    // scans the frame, materializing the checkpoint in that same job
     var base = words.select($"word", $"c")
       .as[(String, Long)]
       .map { case (w, c) => (w.map(_.toString).toIndexedSeq :+ "</w>", c) }

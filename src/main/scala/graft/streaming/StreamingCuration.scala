@@ -84,8 +84,9 @@ object StreamingCuration {
     * writes with its compute jobs (guide §2.6 — Spark happily runs
     * several jobs at once; actions are only sequential because the
     * driver calls them sequentially). Every write is awaited before
-    * [[processBatch]] returns, so the next batch's store reads — and
-    * any in-stream compaction — still see fully committed stores.
+    * [[processBatch]] returns or throws, so the next batch's store reads
+    * — and any in-stream compaction or replay — see fully committed
+    * stores and no write still in flight.
     */
   private lazy val storeWriteEc: scala.concurrent.ExecutionContextExecutorService =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -105,118 +106,124 @@ object StreamingCuration {
     val spark = batch.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = storeWriteEc
-    val docs = batch.select($"doc_id", $"text", $"source", $"v")
-      .localCheckpoint(true)
+    val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def writeAsync(df: DataFrame, store: String): Unit =
+      writes += Future(writeStore(df, s"$storeDir/$store", batchId))
+    // a failed attempt propagates only once its started writes are done:
+    // none of them may land after (and so overwrite) the replay's writes
+    try {
+      val docs = batch.select($"doc_id", $"text", $"source", $"v")
+        .localCheckpoint(true)
 
-    // ---- 1. exact dedup: persistent digest store + same-batch min-id
-    val hashes = docs.select($"doc_id", md5($"text").as("__h"))
-    val md5Store = readStore(spark, s"$storeDir/md5", batchId,
-      "h STRING, batch_id BIGINT")
-    // store writes are kicked off async once their read frame is frozen
-    // (readStore listed the files above; a replayed batch's own rows are
-    // excluded by batch_id either way) and awaited before return — the
-    // write job backfills executors while the stage's compute jobs run
-    val md5W = Future(writeStore(
-      hashes.select($"__h".as("h")).distinct(), s"$storeDir/md5", batchId))
-    val keepExact = hashes
-      .join(md5Store.select($"h".as("__h")).distinct()
-        .withColumn("__seen", lit(true)), Seq("__h"), "left")
-      .withColumn("__min_id", min($"doc_id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"__h")))
-      .filter(!coalesce($"__seen", lit(false)) && $"doc_id" === $"__min_id")
-      .select($"doc_id").localCheckpoint(true)
+      // ---- 1. exact dedup: persistent digest store + same-batch min-id
+      val hashes = docs.select($"doc_id", md5($"text").as("__h"))
+      val md5Store = readStore(spark, s"$storeDir/md5", batchId,
+        "h STRING, batch_id BIGINT")
+      // store writes are kicked off async once their read frame is frozen
+      // (readStore listed the files above; a replayed batch's own rows are
+      // excluded by batch_id either way) and awaited before return — the
+      // write job backfills executors while the stage's compute jobs run
+      writeAsync(hashes.select($"__h".as("h")).distinct(), "md5")
+      val keepExact = hashes
+        .join(md5Store.select($"h".as("__h")).distinct()
+          .withColumn("__seen", lit(true)), Seq("__h"), "left")
+        .withColumn("__min_id", min($"doc_id").over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"__h")))
+        .filter(!coalesce($"__seen", lit(false)) && $"doc_id" === $"__min_id")
+        .select($"doc_id").localCheckpoint(true)
 
-    // ---- 2. near-dup vs the persistent bucket + vector stores. A doc
-    // with NO vector (the crawl's left join) skips this stage entirely,
-    // exactly like the batch pipeline's vecs-semi-join — it can be
-    // neither a near-dup candidate nor a store entry.
-    // ONE checkpoint carries the vectors AND their bucket arrays (the
-    // separate newVecs/newB materializations were two jobs over the same
-    // rows); the exploded index view below is a narrow recompute from it
-    val newVB = docs.join(keepExact, Seq("doc_id"), "left_semi")
-      .filter($"v".isNotNull)
-      .select($"doc_id".as("vec_id"), $"v",
-        graft.functions.LshBucketsExpr($"v", cfg.nPlanes, cfg.dim, cfg.nTables).as("bs"))
-      .localCheckpoint(true)
-    val newVecs = newVB.select($"vec_id", $"v")
-    val oldVecs = readStore(spark, s"$storeDir/vec", batchId,
-      "vec_id BIGINT, v ARRAY<DOUBLE>, batch_id BIGINT")
-      .select($"vec_id", $"v")
-    val newB = newVB.select($"vec_id",
-      posexplode($"bs").as(Seq("table", "bucket")))
-    val oldB = readStore(spark, s"$storeDir/bucket", batchId,
-      "table INT, bucket INT, vec_id BIGINT, batch_id BIGINT")
-      .select($"table", $"bucket", $"vec_id")
-    // both stage-2 stores read above — their writes overlap the
-    // candidate/CC work below ([[storeWriteEc]]). ALL post-exact vectors
-    // enter the stores, kept or near-dup-dropped — a rejected near-dup
-    // still blocks its own future copies
-    val vecW = Future(writeStore(newVecs, s"$storeDir/vec", batchId))
-    val bktW = Future(writeStore(newB, s"$storeDir/bucket", batchId))
-    // candidates: new-vs-new (a < b) and new-vs-old, dedup'd before the
-    // exact verify — the lshNearDupPairs shape with a store side
-    val bSide = newB.select($"table".as("tb"), $"bucket".as("bb"), $"vec_id".as("b_id"))
-    val candNN = newB.join(bSide,
-        $"table" === $"tb" && $"bucket" === $"bb" && $"vec_id" < $"b_id")
-      .select($"vec_id".as("a_id"), $"b_id")
-    val oSide = oldB.select($"table".as("tb"), $"bucket".as("bb"), $"vec_id".as("b_id"))
-    val candNO = newB.join(oSide, $"table" === $"tb" && $"bucket" === $"bb")
-      .select($"vec_id".as("a_id"), $"b_id")
-    val candidates = candNN.unionByName(candNO).distinct()
-    val embAll = newVecs.unionByName(oldVecs)
-    val edges = Similarity
-      .verifyPairs(embAll, "vec_id", "v", cfg.threshold, candidates)
-      .select($"a_id", $"b_id")
-    val comp = Dedup.connectedComponents(edges, "a_id", "b_id")
-      .localCheckpoint(true) // (id, component = min reachable id)
-    // a component touching ANY already-seen vector has a published
-    // representative — all its new members drop; a new-only component
-    // keeps its min id (= the component label)
-    val contamComps = comp
-      .join(oldVecs.select($"vec_id".as("id")), Seq("id"), "left_semi")
-      .select($"component").distinct()
-    val dropNear = comp
-      .join(newVecs.select($"vec_id".as("id")), Seq("id"), "left_semi")
-      .join(contamComps.withColumn("__c", lit(true)), Seq("component"), "left")
-      .filter(coalesce($"__c", lit(false)) || $"id" =!= $"component")
-      .select($"id".as("doc_id"))
-    val keepNear = keepExact.join(dropNear, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      // ---- 2. near-dup vs the persistent bucket + vector stores. A doc
+      // with NO vector (the crawl's left join) skips this stage entirely,
+      // exactly like the batch pipeline's vecs-semi-join — it can be
+      // neither a near-dup candidate nor a store entry.
+      // ONE checkpoint carries the vectors AND their bucket arrays (the
+      // separate newVecs/newB materializations were two jobs over the same
+      // rows); the exploded index view below is a narrow recompute from it
+      val newVB = docs.join(keepExact, Seq("doc_id"), "left_semi")
+        .filter($"v".isNotNull)
+        .select($"doc_id".as("vec_id"), $"v",
+          graft.functions.LshBucketsExpr($"v", cfg.nPlanes, cfg.dim, cfg.nTables).as("bs"))
+        .localCheckpoint(true)
+      val newVecs = newVB.select($"vec_id", $"v")
+      val oldVecs = readStore(spark, s"$storeDir/vec", batchId,
+        "vec_id BIGINT, v ARRAY<DOUBLE>, batch_id BIGINT")
+        .select($"vec_id", $"v")
+      val newB = newVB.select($"vec_id",
+        posexplode($"bs").as(Seq("table", "bucket")))
+      val oldB = readStore(spark, s"$storeDir/bucket", batchId,
+        "table INT, bucket INT, vec_id BIGINT, batch_id BIGINT")
+        .select($"table", $"bucket", $"vec_id")
+      // both stage-2 stores read above — their writes overlap the
+      // candidate/CC work below ([[storeWriteEc]]). ALL post-exact vectors
+      // enter the stores, kept or near-dup-dropped — a rejected near-dup
+      // still blocks its own future copies
+      writeAsync(newVecs, "vec")
+      writeAsync(newB, "bucket")
+      // candidates: new-vs-new (a < b) and new-vs-old, dedup'd before the
+      // exact verify — the lshNearDupPairs shape with a store side
+      val bSide = newB.select($"table".as("tb"), $"bucket".as("bb"), $"vec_id".as("b_id"))
+      val candNN = newB.join(bSide,
+          $"table" === $"tb" && $"bucket" === $"bb" && $"vec_id" < $"b_id")
+        .select($"vec_id".as("a_id"), $"b_id")
+      val oSide = oldB.select($"table".as("tb"), $"bucket".as("bb"), $"vec_id".as("b_id"))
+      val candNO = newB.join(oSide, $"table" === $"tb" && $"bucket" === $"bb")
+        .select($"vec_id".as("a_id"), $"b_id")
+      val candidates = candNN.unionByName(candNO).distinct()
+      val embAll = newVecs.unionByName(oldVecs)
+      val edges = Similarity
+        .verifyPairs(embAll, "vec_id", "v", cfg.threshold, candidates)
+        .select($"a_id", $"b_id")
+      val comp = Dedup.connectedComponents(edges, "a_id", "b_id")
+        .localCheckpoint(true) // (id, component = min reachable id)
+      // a component touching ANY already-seen vector has a published
+      // representative — all its new members drop; a new-only component
+      // keeps its min id (= the component label)
+      val contamComps = comp
+        .join(oldVecs.select($"vec_id".as("id")), Seq("id"), "left_semi")
+        .select($"component").distinct()
+      val dropNear = comp
+        .join(newVecs.select($"vec_id".as("id")), Seq("id"), "left_semi")
+        .join(contamComps.withColumn("__c", lit(true)), Seq("component"), "left")
+        .filter(coalesce($"__c", lit(false)) || $"id" =!= $"component")
+        .select($"id".as("doc_id"))
+      val keepNear = keepExact.join(dropNear, Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
 
-    // ---- 3. decontamination: static eval side inputs (order-free)
-    val evalNorms = cfg.evalVecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    // NOT checkpointed (r16): its three consumers all evaluate lazily in
-    // the caller's one output action, and both inputs are already
-    // checkpointed — the semi-join is a cheap in-job recompute, while the
-    // eager materialization sat on the batch's sequential critical path
-    val survDocs = docs.join(keepNear, Seq("doc_id"), "left_semi")
-    val vecContam = survDocs.filter($"doc_id" >= cfg.evalIdMax && $"v".isNotNull)
-      .select($"doc_id",
-        graft.functions.MaxCosineExpr($"v", cfg.evalVecs, evalNorms).as("mc"))
-      .filter($"mc" >= 0.9).select($"doc_id")
-    val shinglesB = spark.sparkContext.broadcast(cfg.evalShingles)
-    val inEval = udf((sh: String) => sh != null && shinglesB.value.contains(sh))
-    val textContam = TextFunctions
-      .explodedWordShingles(survDocs.filter($"doc_id" >= cfg.evalIdMax),
-        Seq("doc_id"), "text", cfg.shingleN)
-      .filter(inEval($"shingle"))
-      .select($"doc_id").distinct()
-    val dropContam = vecContam.unionByName(textContam).distinct()
-      .unionByName(keepNear.filter($"doc_id" < cfg.evalIdMax))
-    val keepClean = keepNear.join(dropContam, Seq("doc_id"), "left_anti")
+      // ---- 3. decontamination: static eval side inputs (order-free)
+      val evalNorms = cfg.evalVecs.map(v => math.sqrt(v.map(x => x * x).sum))
+      // NOT checkpointed (r16): its three consumers all evaluate lazily in
+      // the caller's one output action, and both inputs are already
+      // checkpointed — the semi-join is a cheap in-job recompute, while the
+      // eager materialization sat on the batch's sequential critical path
+      val survDocs = docs.join(keepNear, Seq("doc_id"), "left_semi")
+      val vecContam = survDocs.filter($"doc_id" >= cfg.evalIdMax && $"v".isNotNull)
+        .select($"doc_id",
+          graft.functions.MaxCosineExpr($"v", cfg.evalVecs, evalNorms).as("mc"))
+        .filter($"mc" >= 0.9).select($"doc_id")
+      val shinglesB = spark.sparkContext.broadcast(cfg.evalShingles)
+      val inEval = udf((sh: String) => sh != null && shinglesB.value.contains(sh))
+      val textContam = TextFunctions
+        .explodedWordShingles(survDocs.filter($"doc_id" >= cfg.evalIdMax),
+          Seq("doc_id"), "text", cfg.shingleN)
+        .filter(inEval($"shingle"))
+        .select($"doc_id").distinct()
+      val dropContam = vecContam.unionByName(textContam).distinct()
+        .unionByName(keepNear.filter($"doc_id" < cfg.evalIdMax))
+      val keepClean = keepNear.join(dropContam, Seq("doc_id"), "left_anti")
 
-    // ---- 4. quality: apply the side-input model, keep score > 0.5
-    val feats = QualityClassifier.featurize(
-      survDocs.join(keepClean, Seq("doc_id"), "left_semi"), "text", cfg.dim)
-    val out = feats.withColumn("score", QualityClassifier.score($"f", cfg.model))
-      .filter($"score" > 0.5)
-      .select($"doc_id", $"source", $"text")
-    // every store write committed before the batch hands off — the next
-    // batch's reads (and in-stream compaction) see complete stores
-    Await.result(Future.sequence(Seq(md5W, vecW, bktW)),
-      scala.concurrent.duration.Duration.Inf)
-    out
+      // ---- 4. quality: apply the side-input model, keep score > 0.5
+      val feats = QualityClassifier.featurize(
+        survDocs.join(keepClean, Seq("doc_id"), "left_semi"), "text", cfg.dim)
+      val out = feats.withColumn("score", QualityClassifier.score($"f", cfg.model))
+        .filter($"score" > 0.5)
+        .select($"doc_id", $"source", $"text")
+      // every store write committed before the batch hands off — the next
+      // batch's reads (and in-stream compaction) see complete stores
+      writes.foreach(Await.result(_, Duration.Inf))
+      out
+    } finally writes.foreach(Await.ready(_, Duration.Inf))
   }
 
   /** Deploy over a streaming crawl (doc_id, text, source, v): each

@@ -18,7 +18,6 @@ object StreamBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batchSize = if (args.length > 1) args(1).toInt else 10000
     val parts = if (args.length > 2) args(2).toInt else 32
-    val changelog = args.length > 3 && args(3) == "changelog"
     // `hdfs` swaps in the in-JVM HDFSBackedStateStoreProvider — a plain
     // windowed agg doesn't need RocksDB (only transformWithState does),
     // and the per-micro-batch state commit is the measured bottleneck
@@ -26,8 +25,6 @@ object StreamBench {
       (args.length > 4 && args(4) == "hdfs")
     val builder = org.apache.spark.sql.SparkSession.builder()
       .master("local[32]").appName("graft-streambench")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        changelog.toString)
     val spark = GraftSession.configure(builder, shufflePartitions = parts).getOrCreate()
     if (hdfs) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
@@ -134,7 +131,7 @@ object StreamBench {
       if (wjoin) rows.count(r => r.event_type == "view" || r.event_type == "click")
       else rows.length
     val rps = fed / sec
-    println(f"""{"metric":"$metric","value":$rps%.0f,"unit":"rows/s","rows":$fed,"sec":$sec%.2f,"batch":$batchSize,"parts":$parts,"changelog":$changelog,"sf":"$dir"}""")
+    println(f"""{"metric":"$metric","value":$rps%.0f,"unit":"rows/s","rows":$fed,"sec":$sec%.2f,"batch":$batchSize,"parts":$parts,"sf":"$dir"}""")
     spark.stop()
   }
 }

@@ -256,30 +256,35 @@ class PipelineSpec extends AnyFunSuite {
     graft.streaming.StreamingCuration.deleteStore(tmp)
   }
 
+  // ---- a small synthetic crawl for the store-discipline cases below
+  private val dim = 64
+  // deterministic per-seed Gaussian vectors: pairwise cosine ~ N(0, 1/64),
+  // so only a planted identical-vector twin clears the 0.95 threshold
+  private def vec(seed: Long): Seq[Double] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(dim)(rnd.nextGaussian())
+  }
+  /** (doc_id, text, vector seed) rows as a crawl batch. */
+  private def mk(rows: Seq[(Long, String, Long)]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, tx, vSeed) =>
+        org.apache.spark.sql.Row(id, tx, "web", vec(vSeed)) }),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, text STRING, source STRING, v ARRAY<DOUBLE>"))
+  private lazy val cfg = {
+    val evalV = { val r = new scala.util.Random(-1L); Array.fill(dim)(r.nextGaussian()) }
+    graft.streaming.StreamingCuration.Config(
+      nPlanes = 8, nTables = 2, threshold = 0.95,
+      evalVecs = Array(evalV), evalShingles = Set.empty,
+      model = graft.operators.QualityClassifier.Model(Seq.fill(dim)(0.0), 10.0, Nil),
+      dim = dim, evalIdMax = 0L)
+  }
+
   test("compaction swap is crash-ordered: a kill between the renames loses no store row") {
     import spark.implicits._
     import graft.streaming.StreamingCuration
     val tmp = java.nio.file.Files.createTempDirectory("crash_compaction").toString
     val store = s"$tmp/store"
-    val dim = 64
-    // deterministic per-seed Gaussian vectors: pairwise cosine ~ N(0, 1/64),
-    // so only the planted identical-vector twin clears the 0.95 threshold
-    def vec(seed: Long): Seq[Double] = {
-      val rnd = new scala.util.Random(seed)
-      Seq.fill(dim)(rnd.nextGaussian())
-    }
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, source STRING, v ARRAY<DOUBLE>")
-    def mk(rows: Seq[(Long, String, Long)]) =
-      spark.createDataFrame(spark.sparkContext.parallelize(
-        rows.map { case (id, tx, vSeed) =>
-          org.apache.spark.sql.Row(id, tx, "web", vec(vSeed)) }), schema)
-    val evalV = { val r = new scala.util.Random(-1L); Array.fill(dim)(r.nextGaussian()) }
-    val cfg = StreamingCuration.Config(
-      nPlanes = 8, nTables = 2, threshold = 0.95,
-      evalVecs = Array(evalV), evalShingles = Set.empty,
-      model = graft.operators.QualityClassifier.Model(Seq.fill(dim)(0.0), 10.0, Nil),
-      dim = dim, evalIdMax = 0L)
 
     val batch0 = (1L to 20L).map(i => (i, s"document number $i with its own words", i))
     StreamingCuration.processBatch(mk(batch0), cfg, store, batchId = 0L).count()
@@ -331,6 +336,44 @@ class PipelineSpec extends AnyFunSuite {
       "a follow-up pass must clean the stale aside")
     assert(spark.read.parquet(s"$store/md5").select($"h").distinct().count() == before,
       "the follow-up pass changed the store's content")
+    StreamingCuration.deleteStore(tmp)
+  }
+
+  test("a batch that fails mid-way has no store write of its attempt outlive the replay") {
+    import spark.implicits._
+    import graft.streaming.StreamingCuration
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("failed_attempt").toString
+    val store = s"$tmp/store"
+    // a corrupt file in a committed md5 partition: the attempt starts its
+    // async md5 write, then its stage-1 store read throws
+    val corrupt = Paths.get(store, "md5", "batch_id=7", "part-corrupt.parquet")
+    Files.createDirectories(corrupt.getParent)
+    Files.write(corrupt, "not a parquet file".getBytes("UTF-8"))
+    val attempt = (1L to 20L).map(i => (i, s"attempt one document $i", i))
+    intercept[Exception] {
+      StreamingCuration.processBatch(mk(attempt), cfg, store, batchId = 0L)
+    }
+    // the failure propagated only once the attempt's write had finished:
+    // its partition is committed and no staging output is left in flight
+    import scala.jdk.CollectionConverters._
+    def inFlight = {
+      val walk = Files.walk(Paths.get(store, "md5"))
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .exists(n => n.startsWith(".spark-staging") || n == "_temporary")
+      finally walk.close()
+    }
+    assert(Files.isDirectory(Paths.get(store, "md5", "batch_id=0")) && !inFlight,
+      "processBatch threw while its md5 store write was still running")
+    // the replay (the corruption repaired) carries other rows: its own
+    // rows, and none of the failed attempt's, make up the batch's partition
+    Files.delete(corrupt)
+    val replay = (101L to 110L).map(i => (i, s"replayed document $i", i))
+    StreamingCuration.processBatch(mk(replay), cfg, store, batchId = 0L).count()
+    val stored = spark.read.parquet(s"$store/md5").filter($"batch_id" === 0L)
+      .select($"h").as[String].collect().sorted.toSeq
+    val expected = mk(replay).select(md5($"text")).as[String].collect().sorted.toSeq
+    assert(stored == expected)
     StreamingCuration.deleteStore(tmp)
   }
 }

@@ -94,6 +94,92 @@ class RecoverySpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  // ---- top-N restarts. One row per key per batch fixes each key's
+  // arrival order, so the +I/-D changelog an uninterrupted run emits is
+  // the exact expected output of a restarted one.
+  private val topKeys = Seq("a", "b", "c", "d", "e")
+  private def topBatch(b: Int): Seq[KeyedScored] = topKeys.zipWithIndex.map {
+    case (k, i) =>
+      val id = (b * topKeys.size + i).toLong
+      KeyedScored(k, id, ((id * 7919L) % 101).toDouble)
+  }
+
+  /** A session with few shuffle (= state) partitions for a small query. */
+  private def smallSession(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s
+  }
+
+  /** Runs top-3 over `batches` into `dir`, fed batch by batch; a new
+    * source in `s` replays `committed` first, which the checkpoint
+    * already holds, so the query resumes after them.
+    */
+  private def runTopN(s: org.apache.spark.sql.SparkSession, dir: String,
+      committed: Seq[Seq[KeyedScored]], batches: Seq[Seq[KeyedScored]]): Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    implicit val enc: org.apache.spark.sql.Encoder[KeyedScored] =
+      org.apache.spark.sql.Encoders.product[KeyedScored]
+    val input = MemoryStream[KeyedScored]
+    committed.foreach(b => input.addData(b: _*))
+    val q = StatefulOps.topN(input.toDS(), 3).toDF()
+      .writeStream.outputMode("append").format("parquet")
+      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt").start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  private def topNOut(dir: String): Seq[TopNChange] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/out").as[TopNChange].collect().toSeq
+      .sortBy(c => (c.key, c.id, c.row_kind))
+  }
+
+  private def stateFiles(dir: String, suffix: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "ckpt", "state"))
+    try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(suffix)).toList
+    finally walk.close()
+  }
+
+  test("RocksDB top-N restarted after more than 10 changelog batches equals an uninterrupted run") {
+    val base = java.nio.file.Files.createTempDirectory("graft_topn_ckpt").toString
+    val batches = (0 until 15).map(topBatch)
+    runTopN(smallSession(), s"$base/whole", Nil, batches)
+    runTopN(smallSession(), s"$base/restart", Nil, batches.take(12))
+    // the commits went to changelogs (snapshots upload in the background),
+    // so recovery replays changelogs on top of the latest snapshot
+    assert(stateFiles(s"$base/restart", ".changelog").contains("12.changelog"))
+    runTopN(smallSession(), s"$base/restart", batches.take(12), batches.drop(12))
+    assert(topNOut(s"$base/restart") == topNOut(s"$base/whole"))
+    StreamingCuration.deleteStore(base)
+  }
+
+  test("a checkpoint written without changelogs, through Hadoop's file manager, carries its state over") {
+    val base = java.nio.file.Files.createTempDirectory("graft_topn_legacy").toString
+    val batches = (0 until 11).map(topBatch)
+    runTopN(smallSession(), s"$base/whole", Nil, batches)
+    // Spark's defaults, set on this session only: a full snapshot per
+    // commit, written through the FileContext manager
+    val legacy = smallSession()
+    legacy.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
+    legacy.conf.set("spark.sql.streaming.checkpointFileManagerClass", classOf[
+      org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager]
+      .getName)
+    runTopN(legacy, s"$base/restart", Nil, batches.take(5))
+    assert(stateFiles(s"$base/restart", ".zip").nonEmpty &&
+      stateFiles(s"$base/restart", ".changelog").isEmpty)
+    // the session defaults: the first restart loads the legacy snapshot
+    // and writes changelogs, the second replays them on top of it
+    runTopN(smallSession(), s"$base/restart", batches.take(5), batches.slice(5, 8))
+    assert(stateFiles(s"$base/restart", ".changelog").contains("8.changelog"))
+    runTopN(smallSession(), s"$base/restart", batches.take(8), batches.drop(8))
+    assert(topNOut(s"$base/restart") == topNOut(s"$base/whole"))
+    StreamingCuration.deleteStore(base)
+  }
+
   test("rate source (datagen analog) exposes the documented schema") {
     val rate = spark.readStream.format("rate").option("rowsPerSecond", "5").load()
     assert(rate.isStreaming)
