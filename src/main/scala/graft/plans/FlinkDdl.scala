@@ -1555,7 +1555,7 @@ object FlinkDdl {
     val sinkSchema = registered(spark, name).get._4
     val out = mapSelectToSink(spark, name, sinkSchema, df, statics, listed)
     val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(s"graft_ins_$name").toString)
+      tempCheckpoint(spark, s"graft_ins_$name"))
     val appendOnly = df.queryExecution.analyzed.collectFirst {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
     }.isEmpty
@@ -1711,7 +1711,7 @@ object FlinkDdl {
       fail(s"streaming INSERT selects ${dry.columns.length} columns; " +
         s"sink $sinkName declares ${sinkSchema.fields.length}")
     val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(s"graft_cum_$sinkName").toString)
+      tempCheckpoint(spark, s"graft_cum_$sinkName"))
     val store = s"$ckpt/graft_cum_store"
     val wmDir = java.nio.file.Paths.get(s"$ckpt/graft_cum_wm")
     // integer floor-div (see WindowTvf.buildSubquery): exact for large
@@ -1888,7 +1888,7 @@ object FlinkDdl {
       fail(s"streaming INSERT selects ${dry.columns.length} columns; " +
         s"sink $sinkName declares ${sinkSchema.fields.length}")
     val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(s"graft_ins_$sinkName").toString)
+      tempCheckpoint(spark, s"graft_ins_$sinkName"))
     innerDf.writeStream.trigger(trigger).option("checkpointLocation", ckpt)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s2 = batch.sparkSession
@@ -1932,6 +1932,17 @@ object FlinkDdl {
     else graft.operators.Changelog.materialize(
       changelog.withColumn("__seq", org.apache.spark.sql.functions.monotonically_increasing_id()),
       pk, "__seq").drop("__seq", "row_kind") // current state = declared columns only
+  }
+
+  /** Checkpoint directory of a streaming INSERT deployed without one. It
+    * is fresh per query, so no later query can resume from it; it is
+    * deleted when the JVM exits instead of piling up in the temp dir.
+    */
+  private def tempCheckpoint(spark: SparkSession, prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .deleteOnExit(new org.apache.hadoop.fs.Path(dir))
+    dir
   }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {

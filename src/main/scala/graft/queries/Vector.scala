@@ -383,10 +383,13 @@ object Vector {
     // index arrays (the inverse of the kernel's row-major triangle
     // layout) — no join, so the 1×2080 unpack can't read as a cartesian
     val idx = for (i <- 1 to Dim; j <- i to Dim) yield (i, j)
+    // DuckDB's round keeps the sign of a sum that rounds to zero
+    // (-1.4e-5 → -0.0); Spark's gives 0.0, so 0.0 * v puts the sign back
+    val r = round($"v", 4)
     packed.select(posexplode($"g").as(Seq("k", "v")))
       .select(element_at(typedLit(idx.map(_._1)), $"k" + 1).as("i"),
         element_at(typedLit(idx.map(_._2)), $"k" + 1).as("j"),
-        round($"v", 4).as("g"))
+        when(r === 0.0, lit(0.0) * $"v").otherwise(r).as("g"))
   }
 
   /** Top-k principal components of the embedding corpus: the Gram

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Changelog input for the retract-consuming Top-N: `row_kind` follows
@@ -30,8 +29,8 @@ class RetractableTopN(n: Int) extends KeyedProcess[String, ChangeScored, TopNCha
   @transient private var rows: ValueState[List[(Long, Double)]] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[List[(Long, Double)]] = ExpressionEncoder()
-    rows = h.getValueState[List[(Long, Double)]]("rows", enc, TTLConfig.NONE)
+    rows = h.getValueState[List[(Long, Double)]]("rows", StateEncoders.longDoubleList,
+      TTLConfig.NONE)
   }
 
   private def topOf(m: List[(Long, Double)]): List[(Long, Double)] =
@@ -85,8 +84,8 @@ class RetractWindowAgg(windowMs: Long)
   @transient private var closedUpTo: ValueState[Long] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[List[(Long, Long, Double)]] = ExpressionEncoder()
-    acc = h.getValueState[List[(Long, Long, Double)]]("acc", enc, TTLConfig.NONE)
+    acc = h.getValueState[List[(Long, Long, Double)]]("acc", StateEncoders.longLongDoubleList,
+      TTLConfig.NONE)
     closedUpTo = h.getValueState[Long]("closed", Encoders.scalaLong, TTLConfig.NONE)
   }
 

@@ -32,8 +32,7 @@ class StreamingCumulateProcess(stepMs: Long, maxSizeMs: Long)
   @transient private var buf: ListState[OverIn] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val inEnc: Encoder[OverIn] = Encoders.product[OverIn]
-    buf = h.getListState[OverIn]("buf", inEnc, TTLConfig.NONE)
+    buf = h.getListState[OverIn]("buf", StateEncoders.overIn, TTLConfig.NONE)
   }
 
   override def onElement(key: String, v: OverIn, tv: TimerValues,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 case class EvictedWindow(key: Long, w_start: Long, w_end: Long,
@@ -40,8 +39,7 @@ class EvictedTumbleProcess(sizeMs: Long, evictor: Evictor)
   @transient private var closed: ValueState[Boolean] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[TimedValue] = ExpressionEncoder()
-    buf = h.getListState[TimedValue]("buf", enc, TTLConfig.NONE)
+    buf = h.getListState[TimedValue]("buf", StateEncoders.timedValue, TTLConfig.NONE)
     // guards late rows from re-opening a fired window (which would emit
     // a duplicate EvictedWindow row); GC'd by an event-time timer one
     // lateness horizon past the close — same trade as Triggers' marker

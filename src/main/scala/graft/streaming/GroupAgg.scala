@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Changelog input row for the retracting group aggregate: `row_kind`
@@ -41,13 +40,12 @@ class StreamingGroupAgg(ttlMillis: Option[Long] = None)
   @transient private var acc: ValueState[(Long, Double)] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[(Long, Double)] = ExpressionEncoder()
     // Flink's StateTtlConfig analog (the STATE_TTL hint surface): an
     // idle group's accumulator expires on processing time — both engines
     // trade exactness of late refinements for bounded state
     val ttl = ttlMillis.map(ms => TTLConfig(java.time.Duration.ofMillis(ms)))
       .getOrElse(TTLConfig.NONE)
-    acc = h.getValueState[(Long, Double)]("acc", enc, ttl)
+    acc = h.getValueState[(Long, Double)]("acc", StateEncoders.longDouble, ttl)
   }
 
   private def out(kind: String, key: Long, c: Long, s: Double): GroupAggChange =

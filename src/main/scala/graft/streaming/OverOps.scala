@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Streaming OVER window — the reference's row-time OVER aggregate
@@ -162,9 +161,8 @@ class StreamingOverProcess(peerGrouped: Boolean = false, lagMax: Int = 0,
     extends KeyedProcess[String, OverIn, OverOut] {
   // acc = (sum, cnt, mn, mx, fst, sq, nn non-null counts, fst null mask,
   //        fst string slots, running string min, running string max)
-  private type Acc = (Seq[Double], Long, Seq[Double], Seq[Double], Seq[Double],
-    Seq[Double], Seq[Long], Seq[Boolean], Seq[String], Seq[String], Seq[String])
-  private type Lags = (Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])
+  private type Acc = StateEncoders.OverAcc
+  private type Lags = StateEncoders.OverLags
   @transient private var buf: ListState[OverIn] = _
   @transient private var acc: ValueState[Acc] = _
   @transient private var lagState: ValueState[Lags] = _
@@ -174,24 +172,18 @@ class StreamingOverProcess(peerGrouped: Boolean = false, lagMax: Int = 0,
   @transient private var lastAct: ValueState[Long] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val inEnc: Encoder[OverIn] = Encoders.product[OverIn]
-    implicit val accEnc: Encoder[Acc] = ExpressionEncoder()
-    implicit val lagEnc: Encoder[Lags] = ExpressionEncoder()
-    implicit val distEnc: Encoder[(Seq[Seq[Double]], Seq[Double], Seq[Long])] =
-      ExpressionEncoder()
-    buf = h.getListState[OverIn]("buf", inEnc, TTLConfig.NONE)
-    acc = h.getValueState[Acc]("acc", accEnc, TTLConfig.NONE)
+    buf = h.getListState[OverIn]("buf", StateEncoders.overIn, TTLConfig.NONE)
+    acc = h.getValueState[Acc]("acc", StateEncoders.overAcc, TTLConfig.NONE)
     if (lagMax > 0)
-      lagState = h.getValueState[Lags]("lags", lagEnc, TTLConfig.NONE)
+      lagState = h.getValueState[Lags]("lags", StateEncoders.overLags, TTLConfig.NONE)
     if (distinctSlots.nonEmpty)
       distState = h.getValueState[(Seq[Seq[Double]], Seq[Double], Seq[Long])](
-        "dist", distEnc, TTLConfig.NONE)
+        "dist", StateEncoders.overDist, TTLConfig.NONE)
     if (distinctStrSlots.nonEmpty) {
-      implicit val distSEnc: Encoder[Seq[Seq[String]]] = ExpressionEncoder()
       // its OWN state name: queries without string DISTINCT never
       // create it, so pre-existing checkpoints stay restorable
       distStrState = h.getValueState[Seq[Seq[String]]](
-        "dist_s", distSEnc, TTLConfig.NONE)
+        "dist_s", StateEncoders.stringSeqs, TTLConfig.NONE)
     }
     // its OWN state name, created only under a TTL'd deploy — un-hinted
     // queries' state layout (and their checkpoints) stay byte-identical
@@ -426,15 +418,12 @@ class StreamingBoundedOverProcess(rangeMs: Long, lagMax: Int = 0,
     ValueState[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val inEnc: Encoder[OverIn] = Encoders.product[OverIn]
-    implicit val lagEnc: Encoder[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])] =
-      ExpressionEncoder()
-    buf = h.getListState[OverIn]("buf", inEnc, TTLConfig.NONE)
-    recent = h.getListState[OverIn]("recent", inEnc, TTLConfig.NONE)
+    buf = h.getListState[OverIn]("buf", StateEncoders.overIn, TTLConfig.NONE)
+    recent = h.getListState[OverIn]("recent", StateEncoders.overIn, TTLConfig.NONE)
     emittedUpTo = h.getValueState[Long]("emitted", Encoders.scalaLong, TTLConfig.NONE)
     if (lagMax > 0)
       lagState = h.getValueState[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])](
-        "lags", lagEnc, TTLConfig.NONE)
+        "lags", StateEncoders.overLags, TTLConfig.NONE)
   }
 
   override def onElement(key: String, v: OverIn, tv: TimerValues,
@@ -533,15 +522,12 @@ class StreamingBoundedRowsProcess(nRows: Int, lagMax: Int = 0,
     ValueState[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val inEnc: Encoder[OverIn] = Encoders.product[OverIn]
-    implicit val lagEnc: Encoder[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])] =
-      ExpressionEncoder()
-    buf = h.getListState[OverIn]("buf", inEnc, TTLConfig.NONE)
-    recent = h.getListState[OverIn]("recent", inEnc, TTLConfig.NONE)
+    buf = h.getListState[OverIn]("buf", StateEncoders.overIn, TTLConfig.NONE)
+    recent = h.getListState[OverIn]("recent", StateEncoders.overIn, TTLConfig.NONE)
     emittedUpTo = h.getValueState[Long]("emitted", Encoders.scalaLong, TTLConfig.NONE)
     if (lagMax > 0)
       lagState = h.getValueState[(Seq[Seq[Double]], Seq[Seq[Boolean]], Seq[Seq[String]])](
-        "lags", lagEnc, TTLConfig.NONE)
+        "lags", StateEncoders.overLags, TTLConfig.NONE)
   }
 
   override def onElement(key: String, v: OverIn, tv: TimerValues,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Streaming semi / anti join — the reference's
@@ -31,8 +30,8 @@ class SemiAntiProcess(boundMs: Long) extends KeyedProcess[Long, TemporalIn, Semi
   @transient private var prunedUpTo: ValueState[Long] = _ // rights pruned ≤ this
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val lEnc: Encoder[(Long, Long, Boolean)] = ExpressionEncoder()
-    lefts = h.getListState[(Long, Long, Boolean)]("lefts", lEnc, TTLConfig.NONE)
+    lefts = h.getListState[(Long, Long, Boolean)]("lefts", StateEncoders.longLongBoolean,
+      TTLConfig.NONE)
     rights = h.getListState[Long]("rights", Encoders.scalaLong, TTLConfig.NONE)
     prunedUpTo = h.getValueState[Long]("pruned", Encoders.scalaLong, TTLConfig.NONE)
   }

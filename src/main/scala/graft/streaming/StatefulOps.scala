@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Input/output row shapes for the stateful custom operators. Concrete
@@ -34,8 +33,8 @@ class StreamingTopN(n: Int) extends KeyedProcess[String, KeyedScored, TopNChange
   @transient private var top: ValueState[List[KeyedScored]] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[List[KeyedScored]] = ExpressionEncoder()
-    top = h.getValueState[List[KeyedScored]]("topn", enc, TTLConfig.NONE)
+    top = h.getValueState[List[KeyedScored]]("topn", StateEncoders.keyedScoredList,
+      TTLConfig.NONE)
   }
 
   private def ordered(xs: List[KeyedScored]): List[KeyedScored] =
@@ -63,8 +62,8 @@ class CountWindow(size: Int) extends KeyedProcess[Long, KeyedValue, CountWindowO
   @transient private var acc: ValueState[(Long, Long, Double)] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[(Long, Long, Double)] = ExpressionEncoder()
-    acc = h.getValueState[(Long, Long, Double)]("acc", enc, TTLConfig.NONE)
+    acc = h.getValueState[(Long, Long, Double)]("acc", StateEncoders.longLongDouble,
+      TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: KeyedValue, tv: TimerValues,
@@ -89,10 +88,9 @@ class KeepLastDedup(ttl: TTLConfig = TTLConfig.NONE)
   @transient private var lastSeen: ValueState[KeyedValue] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val enc: Encoder[KeyedValue] = ExpressionEncoder()
     // ttl = Flink StateTtlConfig analog: expired entries read as null, so
     // a re-arriving key after the TTL emits no retraction
-    lastSeen = h.getValueState[KeyedValue]("last", enc, ttl)
+    lastSeen = h.getValueState[KeyedValue]("last", StateEncoders.keyedValue, ttl)
   }
 
   override def onElement(key: Long, v: KeyedValue, tv: TimerValues,

@@ -23,10 +23,8 @@ class StreamingCepProcess(a: String, b: String, c: String, withinMs: Long)
   @transient private var reg: ValueState[Cep.NfaState] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val evEnc: Encoder[Cep.Event] = Encoders.product[Cep.Event]
-    implicit val regEnc: Encoder[Cep.NfaState] = Encoders.product[Cep.NfaState]
-    buf = h.getListState[Cep.Event]("buf", evEnc, TTLConfig.NONE)
-    reg = h.getValueState[Cep.NfaState]("reg", regEnc, TTLConfig.NONE)
+    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
+    reg = h.getValueState[Cep.NfaState]("reg", StateEncoders.cepNfaState, TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
@@ -70,8 +68,7 @@ class StreamingPatternProcess(alts: IndexedSeq[IndexedSeq[Cep.Step]], withinMs: 
   @transient private var buf: ListState[Cep.Event] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val evEnc: Encoder[Cep.Event] = Encoders.product[Cep.Event]
-    buf = h.getListState[Cep.Event]("buf", evEnc, TTLConfig.NONE)
+    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
@@ -114,8 +111,7 @@ class StreamingRelaxedProcess(elems: IndexedSeq[Cep.RelElem], withinMs: Long,
   @transient private var buf: ListState[Cep.Event] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val evEnc: Encoder[Cep.Event] = Encoders.product[Cep.Event]
-    buf = h.getListState[Cep.Event]("buf", evEnc, TTLConfig.NONE)
+    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
@@ -153,8 +149,7 @@ class StreamingFunnelProcess(elems: IndexedSeq[Cep.RelElem], withinMs: Long)
   @transient private var buf: ListState[Cep.Event] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val evEnc: Encoder[Cep.Event] = Encoders.product[Cep.Event]
-    buf = h.getListState[Cep.Event]("buf", evEnc, TTLConfig.NONE)
+    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: Cep.Event, tv: TimerValues,

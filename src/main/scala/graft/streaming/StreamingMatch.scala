@@ -29,11 +29,8 @@ private[graft] trait MatchBuffer {
   @transient protected var seq: ValueState[Long] = _
 
   protected def openState(h: StatefulProcessorHandle): Unit = {
-    implicit val evEnc: Encoder[StreamingMatch.MrSEvent] =
-      Encoders.product[StreamingMatch.MrSEvent]
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    buf = h.getListState[StreamingMatch.MrSEvent]("buf", evEnc, TTLConfig.NONE)
-    seq = h.getValueState[Long]("seq", longEnc, TTLConfig.NONE)
+    buf = h.getListState[StreamingMatch.MrSEvent]("buf", StateEncoders.mrsEvent, TTLConfig.NONE)
+    seq = h.getValueState[Long]("seq", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   /** Buffer + sort the watermark-ready events, run the shared scan, and

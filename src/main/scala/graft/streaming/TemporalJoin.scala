@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 /** Streaming temporal (event-time as-of) join — the reference's
@@ -33,11 +32,9 @@ class TemporalJoinProcess extends KeyedProcess[Long, TemporalIn, TemporalMatch] 
   @transient private var prunedUpTo: ValueState[Long] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val payloadEnc: Encoder[(Long, Double)] = ExpressionEncoder()
-    implicit val probeEnc: Encoder[(Long, Long)] = ExpressionEncoder()
     versions = h.getMapState[Long, (Long, Double)]("versions", Encoders.scalaLong,
-      payloadEnc, TTLConfig.NONE)
-    probes = h.getListState[(Long, Long)]("probes", probeEnc, TTLConfig.NONE)
+      StateEncoders.longDouble, TTLConfig.NONE)
+    probes = h.getListState[(Long, Long)]("probes", StateEncoders.longLong, TTLConfig.NONE)
     prunedUpTo = h.getValueState[Long]("pruned", Encoders.scalaLong, TTLConfig.NONE)
   }
 

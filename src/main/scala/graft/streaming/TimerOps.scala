@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 case class TimedValue(key: Long, id: Long, ts_ms: Long, value: Double)
@@ -29,10 +28,8 @@ class GapSessionProcess(gapMs: Long)
   @transient private var acc: ValueState[GapSession] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val tvEnc: Encoder[TimedValue] = ExpressionEncoder()
-    implicit val gsEnc: Encoder[GapSession] = ExpressionEncoder()
-    buf = h.getListState[TimedValue]("buf", tvEnc, TTLConfig.NONE)
-    acc = h.getValueState[GapSession]("acc", gsEnc, TTLConfig.NONE)
+    buf = h.getListState[TimedValue]("buf", StateEncoders.timedValue, TTLConfig.NONE)
+    acc = h.getValueState[GapSession]("acc", StateEncoders.gapSession, TTLConfig.NONE)
   }
 
   override def onElement(key: Long, v: TimedValue, tv: TimerValues,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 case class WindowedValue(key: String, w_start: Long, w_end: Long, ts_ms: Long, value: Double)
@@ -28,8 +27,7 @@ class EarlyFiringTumbleProcess(sizeMs: Long, earlyMs: Long)
   @transient private var closed: ValueState[Boolean] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val accEnc: Encoder[(Long, Double)] = ExpressionEncoder()
-    acc = h.getValueState[(Long, Double)]("acc", accEnc, TTLConfig.NONE)
+    acc = h.getValueState[(Long, Double)]("acc", StateEncoders.longDouble, TTLConfig.NONE)
     armed = h.getValueState[Boolean]("armed", Encoders.scalaBoolean, TTLConfig.NONE)
     // the closed marker guards against late re-opens; GC'd by an
     // event-time timer one lateness horizon past the close (TTL state is

@@ -30,8 +30,7 @@ class StreamingWindowRank(windowMs: Long, n: Int)
   @transient private var closedUpTo: ValueState[Long] = _
 
   override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    implicit val inEnc: Encoder[WinRankIn] = Encoders.product[WinRankIn]
-    buf = h.getListState[WinRankIn]("buf", inEnc, TTLConfig.NONE)
+    buf = h.getListState[WinRankIn]("buf", StateEncoders.winRankIn, TTLConfig.NONE)
     closedUpTo = h.getValueState[Long]("closed", Encoders.scalaLong, TTLConfig.NONE)
   }
 

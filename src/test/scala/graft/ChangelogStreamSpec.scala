@@ -11,7 +11,7 @@ import graft.streaming.ChangelogStream
   * accumulated log must replay (Changelog.materialize) back to the
   * final snapshot.
   */
-class ChangelogStreamSpec extends AnyFunSuite {
+class ChangelogStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("snapshotDiff emits the exact changelog algebra") {
@@ -39,7 +39,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
   test("streaming changelog of a complete-mode count agg replays to the final table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_chlog").toString
+    val dir = tempDir("graft_chlog")
     val input = MemoryStream[String]
     val counts = input.toDF().groupBy($"value".as("word"))
       .agg(count(lit(1)).as("n"))

@@ -11,11 +11,11 @@ import java.nio.file.{Files, Paths}
   * pipeline. Overwrite protection follows Flink's
   * `table.plan.force-recompile` contract through the SET surface.
   */
-class CompilePlanSpec extends AnyFunSuite {
+class CompilePlanSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_plan").toFile.getAbsolutePath
+    tempDir("graft_plan")
 
   test("COMPILE PLAN writes a self-contained artifact; EXECUTE PLAN replays it after DROPs") {
     val dir = tmp()

@@ -11,7 +11,7 @@ import graft.FlinkSql
   * declared schema, computed columns project, watermark clauses are
   * recorded, datagen shapes deterministic rows to the declared schema.
   */
-class FlinkDdlSpec extends AnyFunSuite {
+class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("filesystem parquet table reads with the declared schema; computed column projects") {
@@ -1046,7 +1046,7 @@ class FlinkDdlSpec extends AnyFunSuite {
   }
 
   test("row-level DELETE and UPDATE rewrite filesystem tables (FLIP-282)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rowlevel").toString
+    val dir = tempDir("graft_rowlevel")
     Tables.orders(spark, TestSpark.sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders")
@@ -1395,7 +1395,7 @@ class FlinkDdlSpec extends AnyFunSuite {
   }
 
   test("dynamic csv options hint switches the delimiter per query") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hint_csv").toString
+    val dir = tempDir("graft_hint_csv")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/t.csv"),
       "1;a;1.5\n2;b;2.5\n".getBytes)
     FlinkDdl.execute(spark,

@@ -12,11 +12,11 @@ import graft.streaming.{ChangeIn, GroupAgg, GroupAggChange}
   * stateful operators' `TTLConfig` (processing-time expiry, like Flink's
   * StateTtlConfig).
   */
-class FlinkHintsSpec extends AnyFunSuite {
+class FlinkHintsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_hints").toFile.getAbsolutePath
+    tempDir("graft_hints")
 
   test("duration literals parse with Flink's unit table") {
     assert(FlinkHints.parseDuration("123", "t") == 123L)

@@ -713,7 +713,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   test("CREATE FUNCTION over an ADD JAR'd class registers via the reflective eval bridge") {
     // compile a ScalarFunction-shaped class at test time (javac is in the
     // JDK image), jar it, ADD JAR, register, and call it through SQL
-    val dir = java.nio.file.Files.createTempDirectory("graft_udf_jar")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udf_jar"))
     val src = dir.resolve("GraftSuffixUdf.java")
     java.nio.file.Files.writeString(src,
       """public class GraftSuffixUdf {
@@ -778,7 +778,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("CREATE FUNCTION invocations take FLIP-387 named arguments (scalar + table)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udf_named")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udf_named"))
     java.nio.file.Files.writeString(dir.resolve("GraftPadUdf.java"),
       """public class GraftPadUdf {
         |  public String eval(String text, long width) {
@@ -858,7 +858,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("FLIP-387 optional named arguments via @ArgumentHint (scalar + procedure, javac-jar e2e)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udf_opt")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udf_opt"))
     // the user jar carries its OWN ArgumentHint annotation (Flink's
     // lives in flink-table-common, absent here) — the bridge duck-types
     // it by simple name + name()/isOptional() members
@@ -940,7 +940,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // compiled WITHOUT flink on the classpath, so the context slot is
     // Object on one overload and a user-defined interface on the other
     // (the bridge hands the interface a failing proxy)
-    val dir = java.nio.file.Files.createTempDirectory("graft_proc_jar")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_proc_jar"))
     java.nio.file.Files.writeString(dir.resolve("GraftCtx.java"),
       "public interface GraftCtx { Object getExecutionEnvironment(); }\n")
     java.nio.file.Files.writeString(dir.resolve("GraftCompactProc.java"),
@@ -1019,7 +1019,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("FLIP-311 procedures: named arguments, typed overload ranking, heterogeneous results") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_proc_named")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_proc_named"))
     java.nio.file.Files.writeString(dir.resolve("GraftNamedProc.java"),
       """public class GraftNamedProc {
         |  // same arity, different types: first-match would pick wrong
@@ -1083,7 +1083,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("CREATE FUNCTION over a TableFunction-shaped class bridges LATERAL TABLE onto explode") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udtf_jar")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udtf_jar"))
     // returning shape: the zero-dependency POJO port (rows = Iterable<T>)
     val src1 = dir.resolve("GraftSplitUdtf.java")
     java.nio.file.Files.writeString(src1,
@@ -1236,7 +1236,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("a bridged UDTF deploys in a STREAMING INSERT (LATERAL TABLE over a watermarked source)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udtf_stream")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udtf_stream"))
     val src = dir.resolve("GraftCsvUdtf.java")
     java.nio.file.Files.writeString(src,
       """import java.util.*;
@@ -1282,7 +1282,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("CREATE FUNCTION over an AggregateFunction-shaped class bridges onto a typed Aggregator") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udaf_jar")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udaf_jar"))
     // Flink's AggregateFunction shape as a plain POJO: weighted average
     // with an in-place accumulator and the REQUIRED two-phase merge
     val src = dir.resolve("GraftWAvgUdaf.java")
@@ -1353,7 +1353,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("CREATE FUNCTION over a TableAggregateFunction-shaped class: Top2 emits multi-row groups") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_udtagg_jar")
+    val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udtagg_jar"))
     // the Flink documentation's canonical table aggregate (Top2), duck-
     // typed: emitValue(acc, Collector<T>) ports to Consumer<T> like the
     // table bridge's collector convention; rows are a result POJO

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * from this image; protobuf is covered by the from-scratch wire codec,
   * see ProtobufSpec).
   */
-class FormatsSpec extends AnyFunSuite {
+class FormatsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def sample = {
@@ -20,7 +20,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   private def roundTrip(fmt: String, opts: Map[String, String] = Map.empty): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_fmt_$fmt").toString
+    val dir = tempDir(s"graft_fmt_$fmt")
     val df = sample
     df.write.mode("overwrite").options(opts).format(fmt).save(dir)
     val back = spark.read.options(opts).format(fmt)
@@ -38,7 +38,7 @@ class FormatsSpec extends AnyFunSuite {
     roundTrip("csv", Map("header" -> "true", "nullValue" -> "\\N")))
 
   test("csv/json schema inference recovers types") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_infer").toString
+    val dir = tempDir("graft_infer")
     sample.write.mode("overwrite").option("header", "true").csv(dir)
     val inferred = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
     val types = inferred.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
@@ -48,7 +48,7 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("compressed parquet write (zstd) reads back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zstd").toString
+    val dir = tempDir("graft_zstd")
     sample.write.mode("overwrite").option("compression", "zstd").parquet(dir)
     assert(spark.read.parquet(dir).count() == 3)
     assert(new java.io.File(dir).listFiles().exists(_.getName.contains("zstd")))
@@ -56,7 +56,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("streaming file source picks up files as they arrive (FileSource streaming mode)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstream").toString
+    val dir = tempDir("graft_fstream")
     // seed one file so the schema is known, then drop another mid-stream
     sample.limit(2).write.mode("append").parquet(dir)
     val q = spark.readStream.schema(sample.schema).parquet(dir)
@@ -187,7 +187,7 @@ class FormatsSpec extends AnyFunSuite {
     val want = base.select($"event_id", $"ts").collect().map(_.toSeq).toSet
 
     def stage(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ev_layout").toString
+      val dir = tempDir("graft_ev_layout")
       df.write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
     }

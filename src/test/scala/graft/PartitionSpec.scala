@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   * pruning visible in PartitionFilters, and DPP subqueries injected for
   * selective dim joins.
   */
-class PartitionSpec extends AnyFunSuite {
+class PartitionSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
+  // shared by the suite's tests, so it outlives each of them
   private lazy val partDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.exitTempDir("graft_part")
     Tables.lineitem(spark, TestSpark.sfDir)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
     dir
@@ -37,7 +38,7 @@ class PartitionSpec extends AnyFunSuite {
     // join column itself would be statically inferred instead). The dim
     // must be a filtered file scan, and the benefit heuristic is relaxed
     // for fixture-sized tables.
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("graft_dpp_dim")
     Seq(("R", "returned"), ("A", "audited"), ("N", "normal"))
       .toDF("rf", "grp").write.mode("overwrite").parquet(dimDir)
     val prev = spark.conf.getOption("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio")
@@ -60,7 +61,7 @@ class PartitionSpec extends AnyFunSuite {
   }
 
   test("bucketed tables make the key join and aggregation shuffle-free") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val dir = tempDir("graft_bkt")
     graft.operators.Layout.writeBucketed(
       Tables.lineitem(spark, TestSpark.sfDir).select("l_orderkey", "l_quantity"),
       "bkt_lineitem", s"$dir/l", "l_orderkey", buckets = 8)

@@ -9,14 +9,14 @@ import graft.streaming._
   * query restarts (Flink checkpoint/savepoint analog for custom state),
   * stream-stream windowed join, observed metrics.
   */
-class RecoverySpec extends AnyFunSuite {
+class RecoverySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("custom operator state survives a checkpointed restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // memory sink can't recover from a checkpoint — use the file sink
-    val base = java.nio.file.Files.createTempDirectory("graft_state_ckpt").toString
+    val base = tempDir("graft_state_ckpt")
     val input = MemoryStream[KeyedValue]
     def start() = StatefulOps.keepLast(input.toDS()).toDF()
       .writeStream.outputMode("append").format("parquet")
@@ -67,7 +67,7 @@ class RecoverySpec extends AnyFunSuite {
   test("streaming window join state survives a checkpointed restart (no dupes, no losses)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_wjoin_ckpt").toString
+    val base = tempDir("graft_wjoin_ckpt")
     val views = MemoryStream[Ev]
     val clicks = MemoryStream[Ev]
     def ev(id: Long, sec: Long, user: Long) =
@@ -144,7 +144,7 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("RocksDB top-N restarted after more than 10 changelog batches equals an uninterrupted run") {
-    val base = java.nio.file.Files.createTempDirectory("graft_topn_ckpt").toString
+    val base = tempDir("graft_topn_ckpt")
     val batches = (0 until 15).map(topBatch)
     runTopN(smallSession(), s"$base/whole", Nil, batches)
     runTopN(smallSession(), s"$base/restart", Nil, batches.take(12))
@@ -153,11 +153,10 @@ class RecoverySpec extends AnyFunSuite {
     assert(stateFiles(s"$base/restart", ".changelog").contains("12.changelog"))
     runTopN(smallSession(), s"$base/restart", batches.take(12), batches.drop(12))
     assert(topNOut(s"$base/restart") == topNOut(s"$base/whole"))
-    StreamingCuration.deleteStore(base)
   }
 
   test("a checkpoint written without changelogs, through Hadoop's file manager, carries its state over") {
-    val base = java.nio.file.Files.createTempDirectory("graft_topn_legacy").toString
+    val base = tempDir("graft_topn_legacy")
     val batches = (0 until 11).map(topBatch)
     runTopN(smallSession(), s"$base/whole", Nil, batches)
     // Spark's defaults, set on this session only: a full snapshot per
@@ -177,7 +176,6 @@ class RecoverySpec extends AnyFunSuite {
     assert(stateFiles(s"$base/restart", ".changelog").contains("8.changelog"))
     runTopN(smallSession(), s"$base/restart", batches.take(8), batches.drop(8))
     assert(topNOut(s"$base/restart") == topNOut(s"$base/whole"))
-    StreamingCuration.deleteStore(base)
   }
 
   test("rate source (datagen analog) exposes the documented schema") {

@@ -10,7 +10,7 @@ import graft.operators.Multimodal
   * dimension refresh (the broadcast-state pattern), and per-partition
   * batched decode.
   */
-class ScalePostureSpec extends AnyFunSuite {
+class ScalePostureSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("lshParams meets the target recall by the public sign-LSH identity") {
@@ -98,7 +98,7 @@ class ScalePostureSpec extends AnyFunSuite {
     // (overwriting the dim mid-query throws FILE_NOT_EXIST) — the refresh
     // pattern is re-reading the dimension INSIDE foreachBatch, the analog
     // of Flink's broadcast-state updates from a control stream.
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dimDir = tempDir("graft_dim")
     Seq((1L, "v1")).toDF("k", "tag").write.mode("overwrite").parquet(dimDir)
     val input = MemoryStream[Ev]
     val seen = new java.util.concurrent.ConcurrentHashMap[Long, String]()

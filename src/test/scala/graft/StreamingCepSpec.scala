@@ -9,7 +9,7 @@ import graft.streaming.StreamingCep
 /** Streaming CEP: partial matches persist across micro-batches; the
   * watermark orders out-of-order events before they reach the NFA.
   */
-class StreamingCepSpec extends AnyFunSuite {
+class StreamingCepSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def raw(key: Long, id: Long, sec: Long, sym: String) =
@@ -398,7 +398,7 @@ class StreamingCepSpec extends AnyFunSuite {
   test("streaming MATCH_RECOGNIZE state survives a checkpointed restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_mr_ckpt").toString
+    val base = tempDir("graft_mr_ckpt")
     val body =
       """PARTITION BY user_id
         |ORDER BY ts

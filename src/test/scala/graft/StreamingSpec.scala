@@ -14,7 +14,7 @@ import java.sql.Timestamp
   */
 case class DriftDoc(ts: java.sql.Timestamp, source: String, text: String)
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def ev(id: Long, sec: Long, user: Long = 1L, typ: String = "click", v: Double = 1.0) =
@@ -264,7 +264,7 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint restart: a new query on the same checkpoint resumes exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     val outDir = s"$dir/out"
     val ckpt = s"$dir/ckpt"
     val input = MemoryStream[Ev]

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Kernels for the LLM-pipeline surface. */
-class VectorTextSpec extends AnyFunSuite {
+class VectorTextSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("cosine: self-similarity 1, orthogonal 0, opposite -1") {
@@ -45,6 +45,22 @@ class VectorTextSpec extends AnyFunSuite {
     assert(got(1L) == got(2L))
     assert(got(3L) == (~got(1L) & 0xFFFF)) // opposite vector flips every plane
     got.values.foreach(b => assert(b >= 0 && b < (1 << 16)))
+  }
+
+  test("q115 keeps the sign of a Gram entry that rounds to zero, as DuckDB's round does") {
+    import spark.implicits._
+    val dir = tempDir("graft_q115")
+    val e = Array.fill(64)(0f)
+    e(0) = 0.01f
+    e(1) = -0.0014f
+    Seq(e.toSeq).toDF("embedding").write.parquet(s"$dir/embeddings.parquet")
+    val g = graft.queries.Vector.q115_gram_matrix(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    def sign(x: Double) = math.signum(1.0 / x)
+    assert(g((1, 2)) == 0.0 && sign(g((1, 2))) == -1.0, "-1.4e-5 rounds to -0.0")
+    assert(g((2, 2)) == 0.0 && sign(g((2, 2))) == 1.0, "1.96e-6 rounds to 0.0")
+    assert(g((1, 3)) == 0.0 && sign(g((1, 3))) == 1.0, "an exact 0.0 stays 0.0")
+    assert(g((1, 1)) == 1.0e-4)
   }
 
   test("PCA: q116 components match an independent exact eigen-solve of the real Gram") {
