@@ -29,6 +29,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional focus list (e.g. timing one query, or the sf1 scale runs);
+    // unset for full-suite runs. Checked before the session starts.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(SparkEntry.selectQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
@@ -62,10 +65,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // optional focus list for local probes (e.g. the sf1 scale runs);
-    // unset for the driver's full-suite runs
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 

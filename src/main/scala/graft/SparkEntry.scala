@@ -61,4 +61,18 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++
       Temporal.oracle ++ Text.oracle ++ Vector.oracle
+
+  /** The query names in a comma-separated filter (Verify's third argument,
+    * Bench's SPARK_GRAFT_BENCH_ONLY). Throws on an empty list or on any
+    * name that is not a key of [[queries]], so a typo fails the run
+    * instead of selecting nothing.
+    */
+  def selectQueries(csv: String): Set[String] = {
+    val names = csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(names.nonEmpty, s"no query name in '$csv'")
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
 }

@@ -7,8 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query-name filter (local use)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
+    val only = args.lift(2).map(SparkEntry.selectQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -38,16 +38,24 @@ object BpeTrain {
     out.toIndexedSeq
   }
 
+  /** A word's initial symbols plus the end-of-word marker: one symbol per
+    * code point, so a character outside the BMP stays one symbol instead
+    * of two lone surrogate halves (which UTF-8-encode as '?').
+    */
+  private[graft] def symbols(word: String): IndexedSeq[String] =
+    word.codePoints().toArray.toIndexedSeq
+      .map(cp => new String(Character.toChars(cp))) :+ "</w>"
+
   /** One chosen merge. */
   final case class Merge(rank: Int, left: String, right: String, pairCount: Long)
 
   /** Symbol comparison for the argmax tie-break: UTF-8 BYTE order (via
     * UTF8String), exactly the order the original distributed
     * orderBy($"l", $"r") sorted by. Java String compareTo is UTF-16
-    * code-unit order, which disagrees on unpaired surrogate halves —
-    * and `w.map(_.toString)` splits non-BMP symbols into exactly those —
-    * so a String-order tie-break could pick a different merge than the
-    * pinned Spark sort (r16, ADVICE).
+    * code-unit order, which disagrees on symbols outside the BMP (their
+    * surrogate code units sort below U+E000–U+FFFF, their UTF-8 bytes
+    * above) — so a String-order tie-break could pick a different merge
+    * than the pinned Spark sort (r16, ADVICE).
     */
   private def u8cmp(a: String, b: String): Int =
     org.apache.spark.unsafe.types.UTF8String.fromString(a)
@@ -107,7 +115,7 @@ object BpeTrain {
     // scans the frame, materializing the checkpoint in that same job
     var base = words.select($"word", $"c")
       .as[(String, Long)]
-      .map { case (w, c) => (w.map(_.toString).toIndexedSeq :+ "</w>", c) }
+      .map { case (w, c) => (symbols(w), c) }
       .toDF("syms", "c")
       .localCheckpoint(false)
     // pending merges since the last checkpoint: applied in-closure by the
@@ -213,7 +221,7 @@ object BpeTrain {
   /** Token count of one word under a trained merge table, applying the
     * merges in rank order (the BPE encode rule). */
   def encodeCount(word: String, merges: Seq[(String, String)]): Int = {
-    var syms: IndexedSeq[String] = word.map(_.toString).toIndexedSeq :+ "</w>"
+    var syms = symbols(word)
     merges.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
     syms.length
   }

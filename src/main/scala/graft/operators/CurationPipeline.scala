@@ -89,9 +89,6 @@ object CurationPipeline {
       docs: DataFrame, vecs: DataFrame, evalVecs: Array[Array[Double]],
       evalSh: DataFrame, model: QualityClassifier.Model)
 
-  /** Run the five stages; returns (stage, rows_in, rows_out). */
-  def run(s: SparkSession, d: String): DataFrame = runDetailed(s, d).stages
-
   def runDetailed(s: SparkSession, d: String): Run = {
     import s.implicits._
     val (docs0, vecs0) = plantedCrawl(s, d)

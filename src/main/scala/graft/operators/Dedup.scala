@@ -346,7 +346,6 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val __t0 = System.nanoTime()
       val fromNeighbors = sym.join(labels, sym("v") === labels("id"))
         .select(col("u").as("id"), col("component"))
       val half = labels.union(fromNeighbors)
@@ -377,8 +376,6 @@ object Dedup {
       labels.unpersist()
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc-debug] round $iter sum=$s converged=$converged took ${(System.nanoTime() - __t0) / 1e9}%.2f s")
     }
     labels
   }

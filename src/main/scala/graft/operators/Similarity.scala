@@ -79,8 +79,12 @@ object Similarity {
     val total = all.count()
     val n =
       if (total <= sampleCap) all // scanned once per iteration, not recomputed
-      else all.filter(pmod(xxhash64(col("a_id")), lit(total / sampleCap + 1)) === 0)
-        .localCheckpoint(true)
+      else {
+        val sample = all.filter(pmod(xxhash64(col("a_id")), lit(total / sampleCap + 1)) === 0)
+          .localCheckpoint(true)
+        all.unpersist() // the eager sample no longer reads the full corpus
+        sample
+      }
     var cents = sampleCentroids(n, nCells)
     for (_ <- 0 until iters) {
       val assigned = n.withColumn("cell", element_at(
@@ -107,7 +111,6 @@ object Similarity {
       }.toArray
     }
     n.unpersist() // release the training sample's checkpointed blocks
-    if (n ne all) all.unpersist()
     cents
   }
 

@@ -177,22 +177,18 @@ object Text {
     val sims = Dedup.simHash(plantedDocs(s, d), "doc_id", "text")
       .localCheckpoint(false) // the twinHam agg below materializes it
     val base = sims.filter($"doc_id" < 1000000000000000L)
-    // the two hamming-gap aggregates are independent — overlap them
-    // (§2.6); the first to run materializes the lazy signature checkpoint
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val twinHamF = Future(base.as("x")
+    // twinHam runs first: its full scan of `sims` materializes the lazy
+    // signature checkpoint, which adjHam then reads (forking the two
+    // would race both jobs through the simhash pass)
+    val twinHam = base.as("x")
       .join(sims.as("y"), col("x.doc_id") + lit(1000000000000000L) === col("y.doc_id"))
       .select(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("ham"))
       .agg(count(lit(1)).as("n"), avg($"ham").as("mean"),
-        avg(when($"ham" <= 20, 1.0).otherwise(0.0)).as("frac20")).head())
-    val adjHamF = Future(base.as("x")
+        avg(when($"ham" <= 20, 1.0).otherwise(0.0)).as("frac20")).head()
+    val adjHam = base.as("x")
       .join(base.as("y"), col("x.doc_id") + lit(1L) === col("y.doc_id"))
       .select(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("ham"))
-      .agg(count(lit(1)).as("n"), avg($"ham").as("mean")).head())
-    import scala.concurrent.duration.Duration
-    val twinHam = Await.result(twinHamF, Duration.Inf)
-    val adjHam = Await.result(adjHamF, Duration.Inf)
+      .agg(count(lit(1)).as("n"), avg($"ham").as("mean")).head()
     Seq((nDocs, adjHam.getLong(0),
       twinHam.getLong(0) == nDocs &&
         twinHam.getDouble(1) <= 10.0 && twinHam.getDouble(2) >= 0.98,
@@ -883,7 +879,8 @@ object Text {
     * with the same heuristic SQL as the q127 oracle, plus an
     * accuracy ≥ 0.85 boolean PER SOURCE (the trained model must
     * reproduce the weak labels it distilled — the fasttext-distillation
-    * acceptance bar). Floor basis (`tools/ProbeFloors`, all-rows sweep):
+    * acceptance bar). Floor basis (BASELINE.md round 13, "Contract floors
+    * vs measured", all-rows sweep):
     * min per-source accuracy measured 1.0/1.0/1.0 at sf0.001/0.01/0.1
     * and 0.864 at sf10 (the MakeScale vocab-suffixed copies carry zero
     * English stopwords, so their weak labels sit at the feature-hash
@@ -1009,7 +1006,7 @@ object Text {
     // round-trip + shrink certificates over the whole vocabulary (the
     // encode loop runs on distinct words only — the q141 posture)
     val enc = words.as[(String, Long)].map { case (w, c) =>
-      var syms: IndexedSeq[String] = w.map(_.toString).toIndexedSeq :+ "</w>"
+      var syms = BpeTrain.symbols(w)
       ms.foreach { case (l, r) => syms = BpeTrain.applyMerge(syms, l, r) }
       (c, syms.mkString == w + "</w>", syms.length <= w.length + 1)
     }.toDF("c", "rt", "shrink")

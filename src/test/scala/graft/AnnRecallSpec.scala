@@ -16,10 +16,10 @@ import graft.operators.{Dedup, Similarity}
   * (`Vector.plantedCorpus`: v'ᵢ = vᵢ + 0.25·rot(vᵢ), cosine ≈ 0.97 on the
   * fixture); planted document twins append one word (3-shingle Jaccard ≈
   * 0.89–0.97). Everything is hash-seeded and deterministic; floors sit
-  * well under the measured values (tools/ProbeRecall: q42 recall .484,
-  * q56 .994, q102 .976, q34 twin-collision .25 vs random .00002, q31
-  * recall 1.0 / estimate err mean .016, q32 hamming twins 5.6 vs random
-  * 18.6) so a fixture regeneration has margin.
+  * well under the values measured on this fixture when they were set
+  * (q42 recall .484, q56 .994, q102 .976, q34 twin-collision .25 vs
+  * random .00002, q31 recall 1.0 / estimate err mean .016, q32 hamming
+  * twins 5.6 vs random 18.6) so a fixture regeneration has margin.
   */
 class AnnRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -110,13 +110,16 @@ class BpeSpec extends AnyFunSuite {
     assert(!BpeTrain.argmaxWins((("z", "x"), 2L), (("\uD835", "x"), 2L)))
     // counts still dominate the tie-break
     assert(BpeTrain.argmaxWins((("z", "x"), 3L), (("\uD835", "x"), 2L)))
-    // and inside the engine the split halves are UTF-8-sanitized by the
-    // DataFrame round-trip: the surviving observable is that the loop
-    // stays deterministic on such symbols end-to-end
+    // symbols outside the BMP: UTF-16 order puts '𝕒' (U+1D552, surrogate
+    // units 0xD835…) below '！' (U+FF01), UTF-8 byte order puts it above
+    assert(BpeTrain.argmaxWins((("\uFF01", "x"), 2L), (("𝕒", "x"), 2L)))
+    // and training splits words by code point, so the real symbol
+    // survives as one symbol (not two '?' surrogate halves) and takes
+    // its byte-order place on the count tie with 'z'
     import spark.implicits._
     val words = Seq(("zx", 2L), ("𝕒x", 2L)).toDF("word", "c")
-    val merges = BpeTrain.train(spark, words, 2)
-    assert(merges.head.left == "x" && merges.head.right == "</w>")
-    assert(merges(1).left == "?" && merges(1).right == "?")
+    val merges = BpeTrain.train(spark, words, 3)
+    assert(merges.map(m => (m.left, m.right)) ==
+      Seq(("x", "</w>"), ("z", "x</w>"), ("𝕒", "x</w>")))
   }
 }

@@ -15,7 +15,7 @@ import graft.plans.FlinkDdl
   * unknown metadata keys, garbage watermarks, missing WITH clauses,
   * unbalanced generics.
   */
-class DdlFuzzSpec extends AnyFunSuite {
+class DdlFuzzSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def forAllSeeded[A](gen: Gen[A], n: Int)(check: A => Unit): Unit =
@@ -213,7 +213,7 @@ class DdlFuzzSpec extends AnyFunSuite {
     Gen.const("SELECT * FROM fz_missing_src"))
 
   test("every generated INSERT maps cleanly or fails with a typed error") {
-    val dir = java.nio.file.Files.createTempDirectory("fz_ins").toString
+    val dir = tempDir("fz_ins")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE fz_ins (id BIGINT, v DOUBLE)
          |WITH ('connector' = 'filesystem', 'path' = '$dir/t', 'format' = 'parquet')""".stripMargin)

@@ -298,7 +298,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
     assert(ins.isInstanceOf[graft.plans.FlinkInsertCommand])
     val res = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, ins).head()
     assert(res.getString(0) == "OK" && res.getLong(1) > 0)
-    val out = java.nio.file.Files.createTempDirectory("ddl_fs_sink").toString
+    val out = tempDir("ddl_fs_sink")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE ddl_sink_fs (k BIGINT, n BIGINT)
          |WITH ('connector' = 'filesystem', 'path' = '$out/t', 'format' = 'parquet')""".stripMargin)
@@ -313,7 +313,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("PARTITIONED BY writes partition directories; reads prune on them") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_part").toString
+    val dir = tempDir("ddl_part")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE ddl_part_t (
          |  id BIGINT, v DOUBLE, bucket STRING
@@ -369,7 +369,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
     assert(after.filter(col("bucket") === "even").count() == 7)
     assert(after.filter(col("bucket") === "odd").count() == 50, "untouched partition kept")
     // on an unpartitioned table OVERWRITE replaces everything
-    val out2 = java.nio.file.Files.createTempDirectory("ddl_ovw").toString
+    val out2 = tempDir("ddl_ovw")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE ddl_ovw_t (id BIGINT)
          |WITH ('connector' = 'filesystem', 'path' = '$out2/t', 'format' = 'parquet')""".stripMargin)
@@ -379,7 +379,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("INSERT with a partial column list fills unlisted columns with NULL") {
-    val out = java.nio.file.Files.createTempDirectory("ddl_collist").toString
+    val out = tempDir("ddl_collist")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE ddl_cl_t (id BIGINT, name STRING, score DOUBLE)
          |WITH ('connector' = 'filesystem', 'path' = '$out/t', 'format' = 'parquet')""".stripMargin)
@@ -398,7 +398,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
 
   test("CTAS writes the SELECT to the sink and registers the view; DROP TABLE unregisters") {
     createOrders()
-    val dir = java.nio.file.Files.createTempDirectory("ddl_ctas").toString
+    val dir = tempDir("ddl_ctas")
     val name = FlinkDdl.execute(spark,
       s"""CREATE TABLE ddl_ctas_t
          |WITH ('connector' = 'filesystem', 'path' = '$dir/t', 'format' = 'parquet')
@@ -430,7 +430,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
 
   test("readStream re-derives a filesystem table as a stream with its declared watermark") {
     // fixture events.parquet has nanos ts; stage a micros copy in /tmp
-    val dir = java.nio.file.Files.createTempDirectory("ddl_stream").toString
+    val dir = tempDir("ddl_stream")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/events_ts.parquet")
@@ -450,7 +450,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("end-to-end Flink script shape: DDL source → watermarked stream → windowed agg") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_e2e").toString
+    val dir = tempDir("ddl_e2e")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/ev.parquet")
@@ -484,7 +484,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("csv and json filesystem formats read with the declared schema and options") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_fmt").toString
+    val dir = tempDir("ddl_fmt")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/t.csv"),
       java.util.Arrays.asList("1|a|1.5", "2|b|2.5"))
     FlinkDdl.execute(spark,
@@ -504,7 +504,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("CDC formats decode in connector DDL; PRIMARY KEY materializes current state") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_cdc").toString
+    val dir = tempDir("ddl_cdc")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/cdc.json"), java.util.Arrays.asList(
       """{"before": null, "after": {"id": 1, "v": 10.0}, "op": "c"}""",
       """{"before": null, "after": {"id": 2, "v": 20.0}, "op": "c"}""",
@@ -532,7 +532,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a CDC-format table streams as a row_kind changelog") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_cdc_stream").toString
+    val dir = tempDir("ddl_cdc_stream")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/c1.json"), java.util.Arrays.asList(
       """{"before": null, "after": {"id": 1, "v": 10.0}, "op": "c"}""",
       """{"before": {"id": 1, "v": 10.0}, "after": {"id": 1, "v": 11.0}, "op": "u"}""",
@@ -555,7 +555,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("TIME(p) and MULTISET<T> map to INT millis-of-day and MAP<T, INT>") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_types").toString
+    val dir = tempDir("ddl_types")
     // stage data in the MAPPED physical shape (what an engine writing
     // these Flink types to parquet produces)
     spark.sql(
@@ -889,7 +889,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
       "is unset — export host:port of a reachable broker to run the round-trip")
     import spark.implicits._
     val topic = s"graft_rt_${System.currentTimeMillis()}"
-    val dir = java.nio.file.Files.createTempDirectory("kafka_rt").toString
+    val dir = tempDir("kafka_rt")
     Seq((1L, "ax", 2), (2L, "bx", 3)).toDF("order_id", "item", "qty")
       .write.mode("append").parquet(s"$dir/rt_src")
     FlinkSql.run(spark,
@@ -993,7 +993,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   test("ALTER TABLE ADD/MODIFY/DROP/RENAME columns evolve the registered schema") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("ddl_evolve").toString
+    val dir = tempDir("ddl_evolve")
     Seq((1, "a", 1.5), (2, "b", 2.5))
       .toDF("id", "s", "v").write.mode("overwrite").parquet(s"$dir/t")
     FlinkDdl.execute(spark,
@@ -1218,7 +1218,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("METADATA survives INSERT/TRUNCATE rebinds; non-VIRTUAL sinks are rejected") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_meta_sink").toString
+    val dir = tempDir("ddl_meta_sink")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE meta_sink (
          |  id BIGINT, v DOUBLE,
@@ -1245,7 +1245,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("METADATA rides ALTER (ADD/DROP/rename-to) and LIKE merge modes") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_meta_alter").toString
+    val dir = tempDir("ddl_meta_alter")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE meta_alt (id BIGINT,
          |  fp STRING METADATA FROM 'file.path' VIRTUAL)
@@ -1286,7 +1286,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
     // view/registry consistency: a failed re-CREATE touches NEITHER (the
     // commit-last discipline), so the view still serves the old columns
     // and no phantom watermark leaks from the failed statement's parse
-    val dir = java.nio.file.Files.createTempDirectory("alt_atomic_fs").toString
+    val dir = tempDir("alt_atomic_fs")
     FlinkDdl.execute(spark,
       s"""CREATE TABLE alt_part (id BIGINT, p STRING, ts TIMESTAMP(3))
          |PARTITIONED BY (p)
@@ -1360,7 +1360,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("readStream serves computed columns and METADATA (a computed rowtime can carry the watermark)") {
-    val dir = java.nio.file.Files.createTempDirectory("ddl_stream_comp").toString
+    val dir = tempDir("ddl_stream_comp")
     spark.createDataFrame(java.util.List.of(
         org.apache.spark.sql.Row(1L, "2024-01-01 00:00:05", 2.0),
         org.apache.spark.sql.Row(2L, "2024-01-01 00:00:15", 3.0)),
@@ -1382,7 +1382,7 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
     assert(stream.isStreaming)
     assert(stream.schema.fieldNames.toSeq == Seq("id", "ts_raw", "v", "fname", "rt"))
     // drive it: the computed rowtime and file metadata land in the sink
-    val out = java.nio.file.Files.createTempDirectory("ddl_stream_comp_out").toString
+    val out = tempDir("ddl_stream_comp_out")
     val q = stream.select("id", "rt", "fname").writeStream
       .format("parquet").option("path", s"$out/data")
       .option("checkpointLocation", s"$out/ckpt")

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   * Flink-named functions) runs through `graft.FlinkSql.run` on a plain
   * session — no extensions, no per-feature API calls.
   */
-class FlinkScriptSpec extends AnyFunSuite {
+class FlinkScriptSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("a whole Flink SQL script runs via FlinkSql.run on a plain session") {
     // stage a micros-timestamp events copy (the raw fixture is nanos)
-    val dir = java.nio.file.Files.createTempDirectory("flink_script").toString
+    val dir = tempDir("flink_script")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "event_type", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -129,7 +129,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     FlinkSql.sql(spark, s"REMOVE JAR '$jarPath'")
 
     // a whole script: SET preamble, DDL, multi-sink statement set
-    val dir = java.nio.file.Files.createTempDirectory("flink_stmt_set").toString
+    val dir = tempDir("flink_stmt_set")
     Tables.orders(spark, TestSpark.sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -202,7 +202,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("catalog statements: SHOW TABLES / SHOW CREATE TABLE / DESCRIBE / SHOW FUNCTIONS") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_catalog").toString
+    val dir = tempDir("flink_catalog")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "event_type", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -246,7 +246,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("script shape: DDL source + MATCH_RECOGNIZE MEASURES end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_mr_script").toString
+    val dir = tempDir("flink_mr_script")
     Tables.events(spark, TestSpark.sfDir)
       .selectExpr("user_id", "event_id", "substring(event_type, 1, 1) AS sym", "value")
       .write.mode("overwrite").parquet(s"$dir/ev.parquet")
@@ -275,7 +275,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming CEP deployment: INSERT INTO sink SELECT ... MATCH_RECOGNIZE") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_cep_stream").toString
+    val dir = tempDir("flink_cep_stream")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     val wave1 = Seq(
       (1L, t(1), "v"), (1L, t(2), "v"), (1L, t(3), "c"),
@@ -325,7 +325,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming ALL ROWS PER MATCH deployment through INSERT INTO") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_cep_allrows").toString
+    val dir = tempDir("flink_cep_allrows")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, t(1), "v", 2.0), (1L, t(2), "v", 3.0), (1L, t(3), "c", 9.0),
         (2L, t(1), "e", 0.0), (2L, t(2), "v", 4.0), (2L, t(3), "c", 1.0))
@@ -374,7 +374,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming INSERT parses the full dialect; TVF window aggs keep their documented delta") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_dialect_stream").toString
+    val dir = tempDir("flink_dialect_stream")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, t(10), "alpha_beta"), (2L, t(20), "gamma_delta"))
       .toDF("user_id", "ts", "s").write.mode("append").parquet(s"$dir/src")
@@ -567,7 +567,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("DESCRIBE parity: key and extras columns carry PRIMARY KEY and computed columns") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_desc").toString
+    val dir = tempDir("flink_desc")
     Tables.orders(spark, TestSpark.sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -617,7 +617,7 @@ class FlinkScriptSpec extends AnyFunSuite {
         |GROUP BY window_start""".stripMargin).head().getString(1)
     assert(planned.contains("Physical Plan"))
     // an INSERT plans as a deferred command — and the write does NOT happen
-    val out = java.nio.file.Files.createTempDirectory("ex_sink").toString
+    val out = tempDir("ex_sink")
     FlinkSql.sql(spark,
       s"""CREATE TABLE ex_sink (k BIGINT, v DOUBLE)
          |WITH ('connector' = 'filesystem', 'path' = '$out/t', 'format' = 'parquet')""".stripMargin)
@@ -1532,7 +1532,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("ANALYZE / TRUNCATE TABLE and catalog-preamble statements") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_trunc").toString
+    val dir = tempDir("flink_trunc")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.mode("overwrite")
       .parquet(s"$dir/t")
@@ -1569,7 +1569,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("runStream: INSERT INTO runs as a streaming job (source → file sink)") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_stream_ins").toString
+    val dir = tempDir("flink_stream_ins")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "event_type", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/src.parquet")
@@ -1605,7 +1605,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("streaming INSERT maps column lists and static PARTITION pins; partitioned sink writes dirs") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_stream_collist").toString
+    val dir = tempDir("flink_stream_collist")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "value", "ts").limit(500)
       .write.mode("overwrite").parquet(s"$dir/src.parquet")
@@ -1665,7 +1665,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("runStreamSet: a statement set starts one streaming query per sink") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_stream_set").toString
+    val dir = tempDir("flink_stream_set")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/src.parquet")
@@ -1727,7 +1727,7 @@ class FlinkScriptSpec extends AnyFunSuite {
       "SELECT /*+ REPARTITION(2) */ 40 + 2 AS x").head().getInt(0) == 42)
     // a proctime attribute column in DDL resolves (processing time ≈
     // query time, the documented delta)
-    val dir = java.nio.file.Files.createTempDirectory("flink_proctime").toString
+    val dir = tempDir("flink_proctime")
     Tables.orders(spark, TestSpark.sfDir).select("o_orderkey")
       .limit(10).write.mode("overwrite").parquet(s"$dir/o.parquet")
     FlinkSql.sql(spark,
@@ -1741,7 +1741,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("acceptance: one realistic script composes the whole dialect surface") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_accept").toString
+    val dir = tempDir("flink_accept")
     Tables.events(spark, TestSpark.sfDir)
       .select("event_id", "user_id", "event_type", "value", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -1851,7 +1851,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming CUMULATE TVF INSERT: per-step emissions equal the batch rewrite") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_cum_stream").toString
+    val dir = tempDir("flink_cum_stream")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // span [0,240): rows across three steps; sentinel at 900 drives the
     // final watermark to 895 so every span-0 step closes
@@ -1897,7 +1897,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming CUMULATE INSERT resumes from its checkpoint without duplicate emissions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_cum_resume").toString
+    val dir = tempDir("flink_cum_resume")
     val ckpt = s"$dir/ckpt"
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     FlinkSql.run(spark,
@@ -1948,7 +1948,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("three-part names: USE CATALOG/DATABASE switch the prefix; qualified refs resolve e2e") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_ns").toString
+    val dir = tempDir("flink_ns")
     val last = FlinkSql.run(spark,
       s"""CREATE CATALOG prod WITH ('type' = 'generic_in_memory');
          |CREATE DATABASE prod.sales;
@@ -2016,7 +2016,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("namespace bookkeeping survives the review's failure scenarios") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_ns2").toString
+    val dir = tempDir("flink_ns2")
     // -- a failed USE cat.db must not half-switch the session
     FlinkSql.run(spark,
       "CREATE CATALOG nsr_cat; CREATE DATABASE nsr_cat.nsr_db")
@@ -2046,7 +2046,7 @@ class FlinkScriptSpec extends AnyFunSuite {
   }
 
   test("ALTER TABLE keeps the full option map (csv delimiter survives ADD COLUMN)") {
-    val dir = java.nio.file.Files.createTempDirectory("flink_altopt").toString
+    val dir = tempDir("flink_altopt")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/d.csv"), "1|a\n2|b\n")
     FlinkSql.run(spark,
       s"""CREATE TABLE altopt_t (id BIGINT, s STRING)
@@ -2141,7 +2141,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming row-time OVER INSERT lowers onto OverOps: stream equals batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_stream").toString
+    val dir = tempDir("flink_over_stream")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // two keys, out-of-order within the file; sentinel user 9 at 900
     // drives the final watermark to 895 so every real row's timer fires
@@ -2195,7 +2195,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming ROWS-bounded OVER INSERT resumes from its checkpoint without duplicates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_resume").toString
+    val dir = tempDir("flink_over_resume")
     val ckpt = s"$dir/ckpt"
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     FlinkSql.run(spark,
@@ -2246,7 +2246,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming unbounded-rows OVER INSERT: AVG + ROW_NUMBER running frame") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_run").toString
+    val dir = tempDir("flink_over_run")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((2L, 1L, t(30), 4.0), (1L, 1L, t(10), 2.0), (3L, 1L, t(60), 6.0),
       (9L, 9L, t(900), 0.0))
@@ -2280,7 +2280,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming OVER MIN/MAX/FIRST/LAST with a composite string+bigint partition key: stream equals batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_mm").toString
+    val dir = tempDir("flink_over_mm")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq(
       ("a", 1L, 1L, t(10), 5.0),
@@ -2327,7 +2327,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming OVER with per-aggregate value columns: stream equals batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_mv").toString
+    val dir = tempDir("flink_over_mv")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq(
       (1L, 1L, t(10), 2.0, 50.0),
@@ -2372,7 +2372,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming OVER: LAG + RANGE-UNBOUNDED peer frames with tied rowtimes, stream equals batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_lag").toString
+    val dir = tempDir("flink_over_lag")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // user 1 has TIED rowtimes at t=20 (events 2 and 3): under RANGE
     // UNBOUNDED both are peers and share one frame that includes both
@@ -2462,7 +2462,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming OVER: SUM/COUNT/AVG DISTINCT running aggregates over the unbounded frame") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_dist").toString
+    val dir = tempDir("flink_over_dist")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // user 1 sees v = 2, 2, 5, 2 — distinct state must count 2 once
     Seq((1L, 1L, t(10), 2.0), (2L, 1L, t(20), 2.0), (3L, 1L, t(30), 5.0),
@@ -2590,7 +2590,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // kernels implement exact SQL semantics: SUM/AVG/MIN/MAX/variance
     // skip them (NULL over an all-null frame), COUNT(col) counts
     // non-null, FIRST/LAST_VALUE and LAG are RESPECT NULLS
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_null").toString
+    val dir = tempDir("flink_over_null")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     // user 1: v = 2, NULL, 5, NULL, 2 — first row non-null, later nulls
     // interleave; user 2 starts WITH a null (first_value must be NULL)
@@ -2719,7 +2719,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // ride a separate native-null string vector next to the numeric
     // slots, so mixed statements (SUM over a double + LAG over a
     // status string) deploy in one window
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_str").toString
+    val dir = tempDir("flink_over_str")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, 1L, t(10), Some("new"), 1.0), (2L, 1L, t(20), None, 2.0),
       (3L, 1L, t(30), Some("paid"), 4.0), (4L, 1L, t(40), Some("shipped"), 8.0),
@@ -2784,7 +2784,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // COUNT(string_col) never decodes the value — the string rides the
     // numeric slot's NULL MASK with value 0.0; arithmetic aggregates
     // over strings and COUNT(DISTINCT string) stay typed rejections
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_cnts").toString
+    val dir = tempDir("flink_over_cnts")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, 1L, t(10), Some("new"), 1.0), (2L, 1L, t(20), None, 2.0),
       (3L, 1L, t(30), Some("paid"), 4.0), (4L, 1L, t(40), None, 8.0),
@@ -2887,7 +2887,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // encode as exact unix millis on the double vector and cast back at
     // the splice — MIN/MAX order chronologically, FIRST/LAG return
     // TIMESTAMP, SUM over a timestamp still fails typed
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_ts").toString
+    val dir = tempDir("flink_over_ts")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, 1L, t(10), Some(t(500))), (2L, 1L, t(20), None),
       (3L, 1L, t(30), Some(t(100))), (9L, 9L, t(900), Some(t(0))))
@@ -2981,7 +2981,7 @@ class FlinkScriptSpec extends AnyFunSuite {
     // a batch's rows emit once a later batch advances the 0-delay
     // frontier. The test drives TWO batches through a shared checkpoint
     // (phase B's sentinel advances processing time past phase A).
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_proc").toString
+    val dir = tempDir("flink_over_proc")
     FlinkSql.run(spark,
       s"""CREATE TABLE proc_src (
          |  event_id BIGINT, user_id BIGINT, v DOUBLE,
@@ -3066,7 +3066,7 @@ class FlinkScriptSpec extends AnyFunSuite {
 
   test("streaming OVER outside the declared subset fails typed at deploy") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flink_over_err").toString
+    val dir = tempDir("flink_over_err")
     def t(sec: Long) = new java.sql.Timestamp(sec * 1000)
     Seq((1L, 1L, t(10), 1.0)).toDF("event_id", "user_id", "ts", "v")
       .write.mode("append").parquet(s"$dir/oe_src")

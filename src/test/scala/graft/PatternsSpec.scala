@@ -9,7 +9,7 @@ import graft.operators.{AsyncIO, Changelog, Multimodal, SideOutput}
 /** The thin custom patterns: async I/O, CDC changelog decode, side
   * outputs, multimodal column convention.
   */
-class PatternsSpec extends AnyFunSuite {
+class PatternsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("async mapOrdered preserves order; capacity bounds in-flight work") {
@@ -311,7 +311,7 @@ class PatternsSpec extends AnyFunSuite {
     // SQL-callable and codegen-resident (parquet scan, so the projection
     // can't constant-fold into a LocalTableScan)
     graft.functions.GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("wav_t").toString
+    val dir = tempDir("wav_t")
     df.write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("wav_t")
     val plan = spark.sql(

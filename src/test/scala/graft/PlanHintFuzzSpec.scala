@@ -29,7 +29,7 @@ class PlanHintFuzzSpec extends AnyFunSuite {
         fail(s"unclean failure ${e.getClass.getName} on <$s>: ${e.getMessage}")
     }
 
-  private val dir = java.nio.file.Files.createTempDirectory("fz_plan").toString
+  private val dir = TestSpark.exitTempDir("fz_plan")
 
   private val planPath: Gen[String] = Gen.oneOf(
     Gen.const(s"$dir/p1.json"),

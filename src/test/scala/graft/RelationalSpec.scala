@@ -12,6 +12,15 @@ class RelationalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val d = TestSpark.sfDir
 
+  test("query-name filter: declared names pass, a typo or an empty list throws") {
+    assert(SparkEntry.selectQueries(" q01_pricing_summary,q05_semi_join,") ==
+      Set("q01_pricing_summary", "q05_semi_join"))
+    val typo = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries("q01_pricing_summary,q01_pricing_sumary"))
+    assert(typo.getMessage.contains("unknown query name(s): q01_pricing_sumary"))
+    intercept[IllegalArgumentException](SparkEntry.selectQueries(" , "))
+  }
+
   test("q01 pricing summary: six (returnflag, linestatus) groups, counts sum to filtered rows") {
     val out = SparkEntry.queries("q01_pricing_summary")(spark, d).collect()
     assert(out.length == 6)

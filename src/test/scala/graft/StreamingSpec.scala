@@ -347,7 +347,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   test("incremental near-dup dedup: stream batches dedupe against the persistent store") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("inc_dedup").toString
+    val tmp = tempDir("inc_dedup")
     val (store, out) = (s"$tmp/fps", s"$tmp/docs")
     val base = "the quick brown fox jumps over the lazy dog by the river bank in summer light"
     val other = "distributed analytics engines aggregate shuffle and join massive columnar tables"
@@ -389,7 +389,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   test("incremental dedup: kill-and-resume re-admits nothing and loses nothing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("inc_resume").toString
+    val tmp = tempDir("inc_resume")
     val (store, out, ckpt) = (s"$tmp/fps", s"$tmp/docs", s"$tmp/ckpt")
     val base = "the quick brown fox jumps over the lazy dog by the river bank in summer light"
     val other = "distributed analytics engines aggregate shuffle and join massive columnar tables"

@@ -9,7 +9,7 @@ import graft.streaming.{TemporalIn, TemporalJoin, TemporalMatch}
   * probe resolution, including out-of-order versions arriving after the
   * probe.
   */
-class TemporalJoinSpec extends AnyFunSuite {
+class TemporalJoinSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def in(key: Long, side: Int, id: Long, sec: Long, v: Double) =
@@ -48,7 +48,7 @@ class TemporalJoinSpec extends AnyFunSuite {
         |JOIN stj_rates2 FOR SYSTEM_TIME AS OF o.ots AS r ON r.ccy = o.ccy""".stripMargin) != null)
     // a DDL-declared watermark names the versioned side's rowtime, so
     // differently-named time columns need no rename
-    val dir = java.nio.file.Files.createTempDirectory("stj_ddl").toString
+    val dir = tempDir("stj_ddl")
     spark.table("stj_rates").write.mode("overwrite").parquet(s"$dir/rates.parquet")
     graft.plans.FlinkDdl.execute(spark,
       s"""CREATE TABLE stj_rates_ddl (
