@@ -138,11 +138,14 @@ object Similarity {
     * deliberately not examined — that recall trade IS the method's
     * scale lever (raise nCells / lower nProbe for speed, the reverse
     * for recall; above the 256-cell knee assignment is hierarchical —
-    * `hierCoarseProbes` coarse groups probed, more = closer to the
-    * flat-exact assignment at O(√cells) extra dots, and any further
-    * coarse group whose sim is within `hierTieEps` of the last fixed
-    * probe is ALSO probed — boundary rows, exactly the ones the fixed
-    * probe count loses, escalate automatically). Returns one row
+    * 8 coarse groups probed, more = closer to the flat-exact
+    * assignment at O(√cells) extra dots, and any further coarse group
+    * whose sim is within tieEps = 0.02 of the last fixed probe is ALSO
+    * probed — boundary rows, exactly the ones the fixed probe count
+    * loses, escalate automatically. The tieEps sweep in BASELINE.md
+    * (round 13, "q128 adaptive hierarchical assignment") measured sf10
+    * q128 twin recall 0.826 → 0.863 at ~1.29× the kernel (same-JVM
+    * ABAB), which fixed both values). Returns one row
     * per input vector:
     * (idCol, cell, cell2, keep) — the top-2 probe cells and the
     * survival flag.
@@ -157,8 +160,7 @@ object Similarity {
 
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       nCells: Int, threshold: Double, trainIters: Int = 2,
-      trainSampleCap: Int = 1 << 14, nProbe: Int = 2,
-      hierCoarseProbes: Int = 8, hierTieEps: Double = 0.02): DataFrame = {
+      trainSampleCap: Int = 1 << 14, nProbe: Int = 2): DataFrame = {
     // nCells = 0 → cells ∝ n (target cell ≈ 64, clamped): Σ|cell|² stays
     // LINEAR as the corpus grows — the same auto-scale rule as ivfTopK,
     // and SemDeDup's own posture (cluster count grows with the corpus).
@@ -192,7 +194,7 @@ object Similarity {
           graft.functions.MatrixKernels.clusterCentroids(cents.map(_._1), cents.map(_._2))
         graft.functions.HierTopKExpr(col("va"), coarse, cnorms,
           cents.map(_._1), cents.map(_._2), fineOf,
-          kCoarse = hierCoarseProbes, k = probes, tieEps = hierTieEps)
+          kCoarse = 8, k = probes, tieEps = 0.02)
       }
     val assigned = withNorm(emb, idCol, vecCol).withColumn("cells", assignExpr)
     val aExp = assigned.select(col("a_id"), col("va"), col("na"),

@@ -165,8 +165,8 @@ object Text {
     * SMALL hamming distance (mean ≤ 10, ≥ 98% within 20 bits — measured
     * mean 5.6) while unrelated documents sit FAR apart (mean ≥ 14 over
     * the deterministic adjacent-id pair sample — measured ≈ 18.6; 64
-    * independent bits center at 32). Both sides are linear id-rule
-    * joins; `n_adj_pairs` is a REAL cross-engine value (DuckDB counts
+    * independent bits center at 32). Both gaps come from one linear
+    * id-rule join; `n_adj_pairs` is a REAL cross-engine value (DuckDB counts
     * the adjacent-id pairs itself). AnnRecallSpec keeps the same gaps
     * against its randomly-sampled pair set.
     */
@@ -175,24 +175,26 @@ object Text {
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val nDocs = docs.count()
     val sims = Dedup.simHash(plantedDocs(s, d), "doc_id", "text")
-      .localCheckpoint(false) // the twinHam agg below materializes it
-    val base = sims.filter($"doc_id" < 1000000000000000L)
-    // twinHam runs first: its full scan of `sims` materializes the lazy
-    // signature checkpoint, which adjHam then reads (forking the two
-    // would race both jobs through the simhash pass)
-    val twinHam = base.as("x")
-      .join(sims.as("y"), col("x.doc_id") + lit(1000000000000000L) === col("y.doc_id"))
-      .select(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("ham"))
-      .agg(count(lit(1)).as("n"), avg($"ham").as("mean"),
-        avg(when($"ham" <= 20, 1.0).otherwise(0.0)).as("frac20")).head()
-    val adjHam = base.as("x")
-      .join(base.as("y"), col("x.doc_id") + lit(1L) === col("y.doc_id"))
-      .select(bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("ham"))
-      .agg(count(lit(1)).as("n"), avg($"ham").as("mean")).head()
-    Seq((nDocs, adjHam.getLong(0),
-      twinHam.getLong(0) == nDocs &&
-        twinHam.getDouble(1) <= 10.0 && twinHam.getDouble(2) >= 0.98,
-      adjHam.getLong(0) == 0L || adjHam.getDouble(1) >= 14.0))
+      .localCheckpoint(false) // the fused agg below materializes it
+    // both hamming gaps in one join + one aggregate, so the lazy
+    // signature checkpoint has a single full-scan consumer: each base
+    // doc looks up its twin (id + 1e15) and its adjacent base doc (id + 1)
+    val twin = lit(1000000000000000L)
+    val pairs = sims.filter($"doc_id" < twin).select($"simhash".as("xh"),
+        explode(array(
+          struct(($"doc_id" + twin).as("key"), lit(true).as("is_twin")),
+          struct(($"doc_id" + 1L).as("key"), lit(false).as("is_twin")))).as("p"))
+      .join(sims, $"p.key" === $"doc_id")
+      .filter($"p.is_twin" || $"doc_id" < twin)
+      .select($"p.is_twin".as("is_twin"), bit_count($"xh".bitwiseXOR($"simhash")).as("ham"))
+    val ham = pairs.agg(
+      count(when($"is_twin", 1)), avg(when($"is_twin", $"ham")),
+      avg(when($"is_twin", when($"ham" <= 20, 1.0).otherwise(0.0))),
+      count(when(!$"is_twin", 1)), avg(when(!$"is_twin", $"ham"))).head()
+    Seq((nDocs, ham.getLong(3),
+      ham.getLong(0) == nDocs &&
+        ham.getDouble(1) <= 10.0 && ham.getDouble(2) >= 0.98,
+      ham.getLong(3) == 0L || ham.getDouble(4) >= 14.0))
       .toDF("n_docs", "n_adj_pairs", "twin_gap_ok", "sep_ok")
   }
 

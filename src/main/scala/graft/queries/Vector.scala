@@ -551,11 +551,9 @@ object Vector {
     * sf0.001/0.01/0.1/10 as cells grew ∝ n, so the kernel probes top-2
     * cells (the IVF nProbe counter), lifting the measured rates to
     * 1.0/0.99/1.0/0.89; above the 256-cell hierarchy knee the
-    * assignment probes 8 coarse groups + tieEps=0.02 escalation —
-    * the tieEps sweep in BASELINE.md (round 13, "q128 adaptive
-    * hierarchical assignment") measured sf10 recall 0.826 → 0.863 at ~1.29×
-    * the kernel (same-JVM ABAB), so the floor tightened 0.75 → 0.80
-    * per the r12 verdict;
+    * assignment probes 8 coarse groups + tieEps=0.02 escalation
+    * (measured sf10 recall 0.826 → 0.863, see semanticDedup's doc), so
+    * the floor tightened 0.75 → 0.80 per the r12 verdict;
     * it holds at every scale with margin and catches real regressions
     * like degenerate centroids or broken assignment), and survivor
     * self-consistency: NO two kept vectors sharing a probe cell at
