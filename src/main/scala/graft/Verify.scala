@@ -8,13 +8,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query-name filter (local use)
     val only = args.lift(2).map(SparkEntry.selectQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the session users run with (RocksDB state, checkpoint manager,
+    // codegen cache), shuffle partitions sized to the lanes
+    val spark = GraftSession.configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
+      shufflePartitions = cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensureRuntimeConfs(spark)
     new java.io.File(outDir).mkdirs()

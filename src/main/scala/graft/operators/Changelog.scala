@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Changelog / CDC-format handling (SURVEY.md §2.1 "CDC formats" and
@@ -211,8 +211,4 @@ object Changelog {
       .filter(col("__rn") === 1 && !col("row_kind").isin("-D", "-U"))
       .drop("__rn")
   }
-
-  /** Convenience predicate columns. */
-  def isInsert(rowKind: Column): Column = rowKind.isin("+I", "+U")
-  def isRetract(rowKind: Column): Column = rowKind.isin("-D", "-U")
 }

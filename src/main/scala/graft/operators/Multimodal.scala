@@ -27,9 +27,6 @@ import graft.functions.{ByteHistogram, ImageHeader, ImageHeaderKernel}
   */
 object Multimodal {
 
-  val metaType: StructType = StructType.fromDDL(
-    "modality STRING, format STRING, width INT, height INT, n_bytes BIGINT, sha1 STRING")
-
   /** Wrap a binary column into the convention (metadata computed from the
     * payload itself; format/width/height filled by [[decodeImageMeta]]).
     */

@@ -242,10 +242,11 @@ object Similarity {
     * Σ_tables Σ_buckets |bucket|² candidate ids (narrow rows: two longs) +
     * one codegen'd dot per distinct pair — never all-pairs. Recall for
     * pairs at cosine θ is 1−(1−(1−θ/π)^nPlanes)^nTables: raise nTables
-    * (or lower nPlanes) for recall, raise nPlanes for speed. Defaults are
-    * tuned for recall=1 on the test fixtures (threshold 0.35 is a far
-    * looser angle than real near-dup thresholds ≥0.9, which need far
-    * fewer tables at scale).
+    * (or lower nPlanes) for recall, raise nPlanes for speed. The default
+    * 16 tables of 2 planes miss a pair at cosine 0.35 with probability
+    * about 5·10⁻⁴, so a caller that must find every pair sizes the
+    * tables with [[lshTables]] (real near-dup thresholds ≥0.9 need far
+    * fewer tables than the fixture's loose 0.35).
     */
   def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int = 2, nTables: Int = 16,
@@ -357,10 +358,16 @@ object Similarity {
     // shipping 5.5× the candidate volume into the exact-cosine verify.
 
     val b = math.max(1, math.ceil(math.log(n.toDouble / targetBucket) / math.log(2)).toInt)
-    val p = 1.0 - math.acos(threshold) / math.Pi
-    val perTable = math.pow(p, b)
-    val t = math.max(1, math.ceil(math.log1p(-targetRecall) / math.log1p(-perTable)).toInt)
-    (b, t)
+    (b, lshTables(b, threshold, targetRecall))
+  }
+
+  /** The smallest table count T of `nPlanes`-plane sign-LSH tables with
+    * 1 − (1 − p^nPlanes)^T ≥ `targetRecall` for pairs at cosine
+    * `threshold`, p = 1 − acos(θ)/π (the recall identity of [[lshParams]]).
+    */
+  def lshTables(nPlanes: Int, threshold: Double, targetRecall: Double): Int = {
+    val perTable = math.pow(1.0 - math.acos(threshold) / math.Pi, nPlanes)
+    math.max(1, math.ceil(math.log1p(-targetRecall) / math.log1p(-perTable)).toInt)
   }
 
   /** IVF(-flat) ANN top-k — the inverted-file alternative to sign-LSH

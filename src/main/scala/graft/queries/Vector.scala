@@ -161,14 +161,20 @@ object Vector {
     * pairwise cosine is ~0.51, so the threshold yields a stable non-empty
     * candidate set), DuckDB-oracled against the all-pairs SQL — but
     * computed with the bucketed multi-table LSH candidate path
-    * ([[graft.operators.Similarity.lshNearDupPairs]]): the hash match vs
-    * the exhaustive oracle doubles as a recall=1 check of the LSH
-    * parameters at fixture scale. The all-pairs kernel remains available
-    * as `embeddingNearDupPairs` (spec oracle).
+    * ([[graft.operators.Similarity.lshNearDupPairs]]), so the hash match
+    * against the exhaustive oracle checks the LSH parameters. Those are
+    * 2 planes and the tables for six-nines recall at the threshold (30):
+    * a pair at cosine 0.35 escapes all of them with probability below 10⁻⁶, so
+    * a fixture's ~290 qualifying pairs expect at most 3·10⁻⁴ misses
+    * (16 tables expect ~0.15, and seeded fixtures showed such a miss).
+    * The all-pairs kernel remains available as `embeddingNearDupPairs`
+    * (spec oracle).
     */
   val q45_embedding_neardup: Q = (s, d) => {
-    graft.operators.Similarity
-      .lshNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding", 0.35)
+    import graft.operators.Similarity
+    Similarity
+      .lshNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding", 0.35,
+        nPlanes = 2, nTables = Similarity.lshTables(2, 0.35, targetRecall = 0.999999))
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cosine"))
   }
 

@@ -223,23 +223,4 @@ object StreamingIndex {
             exclude = Some(batchId))
       }
       .start()
-
-  /** Deploy over a streaming CHANGELOG (`row_kind`, id, text — e.g. a
-    * decoded CDC topic): each micro-batch applies
-    * [[indexChangelog]]; otherwise identical to [[run]].
-    */
-  def runChangelog(changelog: DataFrame, idCol: String, textCol: String,
-      storePath: String, checkpointLocation: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Int = 0): StreamingQuery =
-    changelog.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        indexChangelog(batch, idCol, textCol, storePath, batchId)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIndex(batch.sparkSession, storePath, idCol,
-            exclude = Some(batchId))
-      }
-      .start()
 }
