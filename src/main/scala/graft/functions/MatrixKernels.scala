@@ -416,7 +416,10 @@ case class MaxCosineExpr(child: Expression, refs: Array[Array[Double]],
 }
 
 object MaxCosineExpr {
-  def apply(vec: Column, refs: Array[Array[Double]], rnorms: Array[Double]): Column =
-    GraftColumnBridge.column(
-      MaxCosineExpr(GraftColumnBridge.expression(vec), refs, rnorms))
+  /** Max cosine of `vec` against `refs`; each reference norm √Σx² is
+    * computed once here, on the driver.
+    */
+  def apply(vec: Column, refs: Array[Array[Double]]): Column =
+    GraftColumnBridge.column(MaxCosineExpr(GraftColumnBridge.expression(vec), refs,
+      refs.map(v => math.sqrt(v.map(x => x * x).sum))))
 }

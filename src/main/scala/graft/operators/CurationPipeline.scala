@@ -1,56 +1,72 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{MaxCosineExpr, TextFunctions}
 
 /** The north-star pipeline COMPOSED end-to-end — the job a pre-training
-  * data team actually runs, chaining the individually-proven stages
-  * over one shared corpus (SURVEY.md north_star; the per-stage kernels
-  * are q27 / q148 / q136+q142 / q134 / q95's):
+  * data team actually runs, five stages over one shared corpus (SURVEY.md
+  * north_star). Each stage's rule is one function, which the stage
+  * queries (q79, q95, q100, q127, q134) and the incremental pipeline
+  * ([[graft.streaming.StreamingCuration]], q150) call too:
   *
-  *   1. EXACT dedup       — md5(text) keyed, keep min id;
-  *   2. NEAR-DUP dedup    — the q148 production-recall chain on the
-  *                          survivors' embeddings (`lshParams` at its
-  *                          default 0.99 target → banded LSH candidates
-  *                          → exact-cosine verify → connected
-  *                          components → keep min id per component);
-  *   3. DECONTAMINATION   — the benchmark slice (ids < 200) leaves the
-  *                          corpus, plus every survivor too close to it:
-  *                          embedding max-cosine ≥ 0.9 against the
-  *                          broadcast eval matrix (vector side, q136's
-  *                          kernel) OR any shared 8-gram via a Bloom-
-  *                          prefiltered shingle join (text side, q142's
-  *                          kernel — catches near-copies with no vector);
-  *   4. QUALITY           — q134's Newton-trained hashed-BoW logistic
-  *                          classifier, drop score ≤ 0.5;
-  *   5. PACKING           — q95's per-source 2048-token window plan over
-  *                          the final survivors.
+  *   1. EXACT dedup      — [[Dedup.keepMinIdPerText]];
+  *   2. NEAR-DUP dedup   — the q148 production-recall chain on the
+  *                         survivors' embeddings (banded LSH at
+  *                         [[Similarity.lshParams]]' 0.99 recall target,
+  *                         exact verify at [[NearDupCosine]], connected
+  *                         components, keep min id per component);
+  *   3. DECONTAMINATION  — [[decontaminate]] against the [[EvalSet]];
+  *   4. QUALITY          — q134's Newton-trained classifier on
+  *                         [[QualityClassifier.weakLabels]], keep
+  *                         [[QualityClassifier.passes]];
+  *   5. PACKING          — [[packingPlan]] over the final survivors.
   *
   * Scale shape: every stage is linear scans + key-equi joins (the
   * near-dup stage is the measured-at-100× q148 chain; decontamination
-  * broadcasts a ≤200-row side; training is 5 Newton scans with one
+  * broadcasts the ≤200-doc eval set; training is 5 Newton scans with one
   * 65×65 driver solve) — no stage collects the corpus, and the
   * inter-stage hand-off is an ID SET (semi-joins), so document text
-  * re-shuffles in no stage after its own kernel. Returns one row per
-  * stage: (stage, rows_in, rows_out) with packing reporting windows.
+  * re-shuffles in no stage after its own kernel.
   *
   * The planted crawl ([[plantedCrawl]]) models what the stages exist
   * for: exact copies of every 7th page (same text, same vector),
-  * near-dup rewrites of every 4th (one appended word, perturbed
-  * vector) — so each dedup stage has real, separately-attributable
-  * work, and PipelineSpec pins the per-stage removals exactly.
+  * near-dup rewrites of every 4th ([[twinText]], [[twinVector]]) — so
+  * each dedup stage has real, separately-attributable work, and
+  * PipelineSpec pins the per-stage removals exactly.
   */
 object CurationPipeline {
 
   private val CopyOff = 1000000000000000L
   private val TwinOff = 2000000000000000L
 
+  /** Cosine at or above which two embeddings are near-duplicates. */
+  val NearDupCosine = 0.95
+
+  /** Documents with an id below this are the benchmark (eval) slice. */
+  val EvalIdMax = 200L
+
+  /** Tokens per training window of [[packingPlan]]. */
+  val WindowTokens = 2048
+
+  /** A planted near-dup of a document: its text plus ONE appended word
+    * (3-shingle Jaccard ≈ 0.89–0.97). DuckDB replays it as
+    * `text || ' zyxappend'`.
+    */
+  def twinText(text: Column): Column = concat(text, lit(" zyxappend"))
+
+  /** A planted near-dup of a vector, v + 0.25·rot(v) (cosine ≈ 0.97 to v,
+    * the twin is each planted vector's exact global top-1).
+    */
+  def twinVector(v: Column): Column =
+    transform(v, (x, i) => x + lit(0.25) * element_at(v, pmod(i + 1, size(v)) + 1))
+
   /** The crawl corpus: base docs (+vectors where the fixture has them),
     * exact copies of every 7th doc at id+1e15, near-dup twins of every
-    * 4th at id+2e15 (text + one word; vector perturbed by the
-    * plantedCorpus rule when the base has one).
+    * 4th at id+2e15 ([[twinText]]; [[twinVector]] when the base has a
+    * vector).
     */
   def plantedCrawl(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
@@ -59,35 +75,94 @@ object CurationPipeline {
       .select((col("doc_id") + CopyOff).as("doc_id"), col("text"), col("source"))
     val twins = docs.filter(col("doc_id") % 4 === 0)
       .select((col("doc_id") + TwinOff).as("doc_id"),
-        concat(col("text"), lit(" zyxappend")).as("text"), col("source"))
+        twinText(col("text")).as("text"), col("source"))
     val vecs = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
     val vecCopies = vecs.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + CopyOff).as("vec_id"), col("v"))
     val vecTwins = vecs.filter(col("vec_id") % 4 === 0)
-      .select((col("vec_id") + TwinOff).as("vec_id"),
-        expr("transform(v, (x, i) -> x + 0.25d * element_at(v, pmod(i + 1, size(v)) + 1))")
-          .as("v"))
+      .select((col("vec_id") + TwinOff).as("vec_id"), twinVector(col("v")).as("v"))
     (docs.unionByName(copies).unionByName(twins),
       vecs.unionByName(vecCopies).unionByName(vecTwins))
   }
 
-  /** The stage table plus each stage's surviving id set (ids only —
+  /** The benchmark slice decontamination tests against: the vectors and
+    * the distinct word 8-grams of the docs with id below [[EvalIdMax]].
+    * Both are small by nature, so they ride the plan as broadcast
+    * values and the corpus side needs no join.
+    */
+  final case class EvalSet(vecs: Array[Array[Double]], shingles: Set[String])
+
+  private val EvalShingleN = 8
+
+  /** The [[EvalSet]] of a crawl: `docs` (doc_id, text) and `vecs`
+    * (vec_id, v). Two small collects.
+    */
+  def evalSet(docs: DataFrame, vecs: DataFrame): EvalSet = EvalSet(
+    vecs.filter(col("vec_id") < EvalIdMax).select(col("v")).collect()
+      .map(_.getSeq[Double](0).toArray),
+    TextFunctions.explodedWordShingles(docs.filter(col("doc_id") < EvalIdMax),
+      Seq("doc_id"), "text", EvalShingleN)
+      .select(col("shingle")).distinct().collect().map(_.getString(0)).toSet)
+
+  /** Stage 3's rule: the ids of `keep` that survive decontamination. The
+    * benchmark slice (ids below [[EvalIdMax]]) leaves, and so does every
+    * other id whose vector sits at cosine ≥ 0.9 to an eval vector or
+    * whose text shares a word 8-gram with an eval doc. `texts`
+    * (doc_id, text) and `vecs` (doc_id, v) carry the content of `keep`'s
+    * ids; a doc with no vector (or a null one) is judged on its text.
+    * Both tests are exact, and neither depends on arrival order, so the
+    * batch and the incremental pipeline reach the same verdicts.
+    */
+  def decontaminate(keep: DataFrame, texts: DataFrame, vecs: DataFrame,
+      eval: EvalSet): DataFrame = {
+    val id = col("doc_id")
+    val vecContam = vecs.filter(id >= EvalIdMax && MaxCosineExpr(col("v"), eval.vecs) >= 0.9)
+      .select(id)
+    val shingles = keep.sparkSession.sparkContext.broadcast(eval.shingles)
+    val inEval = udf((sh: String) => sh != null && shingles.value.contains(sh))
+    val textContam = TextFunctions
+      .explodedWordShingles(texts.filter(id >= EvalIdMax), Seq("doc_id"), "text",
+        EvalShingleN)
+      .filter(inEval(col("shingle")))
+      .select(id).distinct()
+    // consumed once, by the anti-join below — no checkpoint
+    val drop = vecContam.unionByName(textContam).distinct()
+      .unionByName(keep.filter(id < EvalIdMax))
+    keep.join(drop, Seq("doc_id"), "left_anti")
+  }
+
+  /** The packing plan (q95): per source, documents laid out in doc_id
+    * order, each assigned to the [[WindowTokens]]-token window its first
+    * token lands in; one row per (source, bin) with its `n_docs` and
+    * `n_tokens`. The running sum is per source — packing at corpus scale
+    * is a per-shard operation, so the window never needs a global order.
+    */
+  def packingPlan(docs: DataFrame): DataFrame = {
+    val nTok = col("n_tok")
+    docs.select(col("doc_id"), col("source"),
+        TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
+      .withColumn("cum_before",
+        sum(nTok).over(Window.partitionBy(col("source")).orderBy(col("doc_id"))
+          .rowsBetween(Window.unboundedPreceding, 0)) - nTok)
+      .withColumn("bin", expr(s"cum_before div $WindowTokens"))
+      .groupBy(col("source"), col("bin"))
+      .agg(count(lit(1)).as("n_docs"), sum(nTok).as("n_tokens"))
+  }
+
+  /** Each stage's (rows_in, rows_out), packing reporting windows, plus
+    * each stage's surviving id set (ids only —
     * bounded hand-off state; PipelineSpec re-checks the decontamination
     * invariant against keepClean with the exact q136 kernel), plus the
     * run's REUSABLE inputs and side artifacts: the checkpointed crawl
-    * frames, the collected eval matrix, the distinct eval-shingle frame
-    * and the trained quality model. q150 drives the SAME crawl through
-    * the incremental kernel against this batch run — before round 16 it
-    * re-derived every one of these from scratch (a second plantedCrawl,
-    * a second eval collect + shingle distinct, and a second IDENTICAL
-    * 5-iteration Newton training = ~10 redundant jobs; §1.2 "don't
-    * compute things you throw away").
+    * frames, the eval set and the trained quality model. q150 drives the
+    * SAME crawl through the incremental kernel against this batch run
+    * with these side inputs, instead of re-deriving them.
     */
-  final case class Run(stages: DataFrame, keepExact: DataFrame,
+  final case class Run(stages: Map[String, (Long, Long)], keepExact: DataFrame,
       keepNear: DataFrame, keepClean: DataFrame, keepQual: DataFrame,
-      docs: DataFrame, vecs: DataFrame, evalVecs: Array[Array[Double]],
-      evalSh: DataFrame, model: QualityClassifier.Model)
+      docs: DataFrame, vecs: DataFrame, eval: EvalSet,
+      model: QualityClassifier.Model)
 
   def runDetailed(s: SparkSession, d: String): Run = {
     import s.implicits._
@@ -101,11 +176,8 @@ object CurationPipeline {
     val vecs = vecs0.localCheckpoint(true)
     val n0 = docs.count()
 
-    // ---- 1. exact dedup: keep the min doc_id of each identical text.
-    // The shuffle carries the 32-byte digest, never the text (q27).
-    val keepExact = docs.select($"doc_id", md5($"text").as("__h"))
-      .groupBy($"__h").agg(min($"doc_id").as("doc_id"))
-      .select($"doc_id").localCheckpoint(false)
+    // ---- 1. exact dedup
+    val keepExact = Dedup.keepMinIdPerText(docs).localCheckpoint(false)
     val n1 = keepExact.count()
 
     // ---- 2. embedding near-dup at the production recall target (q148):
@@ -113,9 +185,9 @@ object CurationPipeline {
     // CC, keep min id per component
     val v1 = vecs.join(keepExact.withColumnRenamed("doc_id", "vec_id"),
       Seq("vec_id"), "left_semi").localCheckpoint(false)
-    val (b, t) = Similarity.lshParams(v1.count(), 0.95)
+    val (b, t) = Similarity.lshParams(v1.count(), NearDupCosine)
     val pairs = Similarity
-      .lshNearDupPairs(v1, "vec_id", "v", 0.95, nPlanes = b, nTables = t)
+      .lshNearDupPairs(v1, "vec_id", "v", NearDupCosine, nPlanes = b, nTables = t)
       .select($"a_id", $"b_id")
     val cc = Dedup.connectedComponents(pairs, "a_id", "b_id")
     // dropNear is consumed exactly once (the anti-join below, computed
@@ -126,79 +198,36 @@ object CurationPipeline {
       .localCheckpoint(false)
     val n2 = keepNear.count()
 
-    // ---- 3. decontamination: the benchmark slice (ids < 200) leaves,
-    // and so does anything close to it — by embedding cosine (vector
-    // side, one broadcast codegen kernel) or by a shared 8-gram (text
-    // side, Bloom-prefiltered; catches near-copies with no vector)
-    val evalVecs = vecs.filter($"vec_id" < 200)
-      .select($"v").collect().map(_.getSeq[Double](0).toArray)
-    val evalNorms = evalVecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    val vecContam = v1.join(keepNear.withColumnRenamed("doc_id", "vec_id"),
-        Seq("vec_id"), "left_semi")
-      .filter($"vec_id" >= 200)
-      .select($"vec_id".as("doc_id"),
-        graft.functions.MaxCosineExpr($"v", evalVecs, evalNorms).as("mc"))
-      .filter($"mc" >= 0.9).select($"doc_id")
-    val survDocs = docs.join(keepNear, Seq("doc_id"), "left_semi")
-    val evalSh = TextFunctions
-      .explodedWordShingles(docs.filter($"doc_id" < 200), Seq("doc_id"), "text", 8)
-      .select($"shingle").distinct().localCheckpoint(false)
-    val bloom = evalSh.stat.bloomFilter("shingle", math.max(evalSh.count(), 1L), 0.01)
-    val bloomB = s.sparkContext.broadcast(bloom)
-    val mightHave = udf((sh: String) => sh != null && bloomB.value.mightContain(sh))
-    val textContam = TextFunctions
-      .explodedWordShingles(survDocs.filter($"doc_id" >= 200),
-        Seq("doc_id"), "text", 8)
-      .filter(mightHave($"shingle"))
-      .join(broadcast(evalSh), "shingle")
-      .select($"doc_id").distinct()
-    // dropContam: same once-used shape as dropNear — no eager checkpoint
-    val dropContam = vecContam.unionByName(textContam).distinct()
-      .unionByName(keepNear.filter($"doc_id" < 200))
-    val keepClean = keepNear.join(dropContam, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+    // ---- 3. decontamination
+    val eval = evalSet(docs, vecs)
+    val keepClean = decontaminate(keepNear,
+      docs.join(keepNear, Seq("doc_id"), "left_semi"),
+      v1.withColumnRenamed("vec_id", "doc_id").join(keepNear, Seq("doc_id"), "left_semi"),
+      eval).localCheckpoint(false)
     val n3 = keepClean.count()
 
-    // ---- 4. quality: q134's weak labels + 5 Newton scans, keep > 0.5
+    // ---- 4. quality: q134's weak labels + 5 Newton scans
     val dim = 64
-    val labeled = docs.join(keepClean, Seq("doc_id"), "left_semi")
-      .select($"doc_id", $"source", $"text",
-        TextFunctions.tokenCount($"text").cast("long").as("n_tok"),
-        TextFunctions.langScore($"text", TextFunctions.enMarkers).as("n_stop"),
-        TextFunctions.punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .withColumn("y",
-        ($"n_tok" >= 5 && $"n_punct" / $"len" <= 0.1 && $"n_stop" > 0).cast("double"))
-    val feats = QualityClassifier.featurize(labeled, "text", dim).localCheckpoint(true)
+    val feats = QualityClassifier.featurize(
+      QualityClassifier.weakLabels(docs.join(keepClean, Seq("doc_id"), "left_semi")),
+      "text", dim).localCheckpoint(true)
     val model = QualityClassifier.trainNewton(feats, "f", "y", dim, iters = 5)
     val keepQual = feats
-      .withColumn("score", QualityClassifier.score($"f", model))
-      .filter($"score" > 0.5)
+      .filter(QualityClassifier.passes(QualityClassifier.score($"f", model)))
       .select($"doc_id", $"source", $"text").localCheckpoint(false)
     val n4 = keepQual.count()
 
-    // ---- 5. packing: q95's per-source 2048-token window plan
-    import org.apache.spark.sql.expressions.Window
-    val packed = keepQual
-      .select($"doc_id", $"source",
-        expr("CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)").as("n_tok"))
-      .withColumn("cum_before",
-        sum($"n_tok").over(Window.partitionBy($"source").orderBy($"doc_id")
-          .rowsBetween(Window.unboundedPreceding, 0)) - $"n_tok")
-      .withColumn("bin", expr("cum_before div 2048"))
-      .groupBy($"source", $"bin")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"))
-    val n5 = packed.count()
+    // ---- 5. packing
+    val n5 = packingPlan(keepQual).count()
 
     Run(
-      Seq(
-        ("1_exact_dedup", n0, n1),
-        ("2_neardup_dedup", n1, n2),
-        ("3_decontamination", n2, n3),
-        ("4_quality_filter", n3, n4),
-        ("5_packing_windows", n4, n5))
-        .toDF("stage", "rows_in", "rows_out"),
+      Map(
+        "1_exact_dedup" -> (n0, n1),
+        "2_neardup_dedup" -> (n1, n2),
+        "3_decontamination" -> (n2, n3),
+        "4_quality_filter" -> (n3, n4),
+        "5_packing_windows" -> (n4, n5)),
       keepExact, keepNear, keepClean, keepQual.select($"doc_id"),
-      docs, vecs, evalVecs, evalSh, model)
+      docs, vecs, eval, model)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
@@ -22,6 +22,18 @@ object Dedup {
   def exact(df: DataFrame, cols: Seq[String], idCol: String): DataFrame =
     df.groupBy(cols.map(col): _*)
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
+
+  /** The exact-dedup key of a document: md5(text), so a shuffle or a
+    * store carries a 32-byte digest, never the document (q27).
+    */
+  def textKey(text: Column): Column = md5(text)
+
+  /** The curation exact-dedup rule: the surviving `doc_id`s, the min one
+    * per identical `text` ([[textKey]]).
+    */
+  def keepMinIdPerText(docs: DataFrame): DataFrame =
+    docs.groupBy(textKey(col("text")).as("__h")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
 
   /** Per-document MinHash signature: array of `numHashes` min-hashes over
     * distinct word `shingleLen`-shingles. Seeded re-hashing via

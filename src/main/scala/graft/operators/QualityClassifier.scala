@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, HashedBow, VecSumAgg}
+import graft.functions.{DotProduct, HashedBow, TextFunctions, VecSumAgg}
 
 /** Distributed quality-classifier training (north_star text analysis —
   * the fasttext-style linear model pre-training pipelines train on weak
@@ -26,6 +26,31 @@ import graft.functions.{DotProduct, HashedBow, VecSumAgg}
   * raw bits.
   */
 object QualityClassifier {
+
+  /** The heuristic quality signals of `text`, the columns the rule below
+    * reads: token count, English stopword hits, punctuation count, length.
+    */
+  def heuristicSignals(text: Column): Seq[Column] = Seq(
+    TextFunctions.tokenCount(text).cast("long").as("n_tok"),
+    TextFunctions.langScore(text, TextFunctions.enMarkers).as("n_stop"),
+    TextFunctions.punctCount(text).as("n_punct"),
+    length(text).as("len"))
+
+  /** The heuristic quality rule (the Gopher-style corpus filters): at
+    * least 5 tokens, at most one punctuation character in 10, at least
+    * one stopword; [[heuristicKeep]] when all three hold.
+    */
+  val minTokens: Column = col("n_tok") >= 5
+  val punctOk: Column = col("n_punct") / col("len") <= 0.1
+  val hasStopword: Column = col("n_stop") > 0
+  val heuristicKeep: Column = minTokens && punctOk && hasStopword
+
+  /** `docs` plus the [[heuristicSignals]] of its `text` and the weak
+    * label `y` (1.0 where [[heuristicKeep]] holds) the model trains on.
+    */
+  def weakLabels(docs: DataFrame): DataFrame =
+    docs.select(col("*") +: heuristicSignals(col("text")): _*)
+      .withColumn("y", heuristicKeep.cast("double"))
 
   /** Lowercased word tokens — the shared tokenizer of the feature side. */
   def tokens(text: Column): Column =
@@ -184,6 +209,9 @@ object QualityClassifier {
       .head()
     Grad(row.getSeq[Double](0).toArray, row.getDouble(1), row.getDouble(2), row.getLong(3))
   }
+
+  /** The quality stage's keep rule over a [[score]] column. */
+  def passes(score: Column): Column = score > 0.5
 
   /** σ(w·x + b) as a column over the feature column. */
   def score(fCol: Column, m: Model): Column = {

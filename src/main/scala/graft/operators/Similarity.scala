@@ -21,6 +21,9 @@ import graft.functions.{DotProduct, VectorFunctions}
   */
 object Similarity {
 
+  /** Width of the fixture embeddings; the sign-LSH paths' default. */
+  val EmbeddingDim = 64
+
   /** Narrow (id, vec, norm) projection — norms once per row, codegen'd
     * dot per pair downstream; no interpreted HOFs in any n² path.
     */
@@ -250,7 +253,7 @@ object Similarity {
     */
   def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int = 2, nTables: Int = 16,
-      dim: Int = 64): DataFrame = {
+      dim: Int = EmbeddingDim): DataFrame = {
     val n = withNorm(emb, idCol, vecCol)
     // TWO candidate-generation regimes, split by geometry (key space =
     // nTables·2^nPlanes vs the core count):
@@ -535,7 +538,7 @@ object Similarity {
     * by lowering nPlanes or multi-probing).
     */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      nPlanes: Int = 16, dim: Int = 64): DataFrame = {
+      nPlanes: Int = 16, dim: Int = EmbeddingDim): DataFrame = {
     // buckets on RAW vectors (sign-LSH is scale-invariant) with the
     // codegen'd per-plane dot — no normalization pass, no plan barrier
     val n = withNorm(emb, idCol, vecCol)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.Dedup
+import graft.operators.{CurationPipeline, Dedup, QualityClassifier}
 import QueryDefs._
 
 /** LLM-pipeline text surface over `documents` (north_star): dedup (exact /
@@ -111,15 +111,14 @@ object Text {
         round($"common".cast("double") / ($"sza" + $"szb" - $"common"), 6).as("jaccard"))
   }
 
-  /** q31/q32's planted document twins (AnnRecallSpec's rule): every doc
-    * plus a copy with ONE appended word — 3-shingle Jaccard ≈ 0.89–0.97,
-    * the near-dup a crawl-dedup must catch. DuckDB replays the
-    * construction (`text || ' zyxappend'`) exactly.
+  /** q31/q32's planted document twins: every doc plus its
+    * [[CurationPipeline.twinText]] at id + 1e15 — the near-dup a
+    * crawl-dedup must catch.
     */
-  private def plantedDocs(s: SparkSession, d: String): DataFrame = {
+  private[graft] def plantedDocs(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     docs.unionByName(docs.select((col("doc_id") + lit(1000000000000000L)).as("doc_id"),
-      concat(col("text"), lit(" zyxappend")).as("text")))
+      CurationPipeline.twinText(col("text")).as("text")))
   }
 
   /** MinHash+LSH banding (64 hashes, 16 bands), oracled on its recall
@@ -250,33 +249,23 @@ object Text {
     */
   val q149_curation_composed: Q = (s, d) => {
     import s.implicits._
-    val r = graft.operators.CurationPipeline.runDetailed(s, d)
-    val st = r.stages.collect().map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
-    val removed2 = st("2_neardup_dedup")._1 - st("2_neardup_dedup")._2
-    // decontamination re-checked with the EXACT kernel over survivors —
-    // over the run's already-checkpointed crawl vectors and its collected
-    // eval matrix (same deterministic values; re-deriving both was a
-    // second plantedCrawl + a second collect, r16 §1.2)
-    val eval = r.evalVecs
-    val norms = eval.map(v => math.sqrt(v.map(x => x * x).sum))
-    // the three certificate counts are independent — overlap them (§2.6:
-    // actions are only sequential because the driver calls them so)
-    import scala.concurrent.{Await, Future}
+    val r = CurationPipeline.runDetailed(s, d)
+    val (n0, n1) = r.stages("1_exact_dedup")
+    val (in2, out2) = r.stages("2_neardup_dedup")
+    val (in4, out4) = r.stages("4_quality_filter")
+    val (in5, out5) = r.stages("5_packing_windows")
+    // decontamination re-checked with the EXACT kernel over the
+    // survivors' vectors and the run's eval matrix. The three
+    // certificate counts are independent, so they run side by side
     import scala.concurrent.ExecutionContext.Implicits.global
-    val nTwinVecsF = Future(
-      Tables.embeddings(s, d).filter($"vec_id" % 4 === 0).count())
-    val contaminatedF = Future(r.vecs
-      .join(r.keepClean.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left_semi")
-      .filter(graft.functions.MaxCosineExpr($"v", eval, norms) >= 0.9).count())
-    val benchLeftF = Future(r.keepClean.filter($"doc_id" < 200).count())
-    import scala.concurrent.duration.Duration
-    val nTwinVecs = Await.result(nTwinVecsF, Duration.Inf)
-    val contaminated = Await.result(contaminatedF, Duration.Inf)
-    val benchLeft = Await.result(benchLeftF, Duration.Inf)
-    val (in4, out4) = st("4_quality_filter")
-    val (in5, out5) = st("5_packing_windows")
-    Seq((st("1_exact_dedup")._1, st("1_exact_dedup")._2, nTwinVecs,
-      removed2 <= nTwinVecs && removed2 >= math.floor(0.99 * nTwinVecs).toLong,
+    val Seq(nTwinVecs, contaminated, benchLeft) = graft.Parallel.all(
+      () => Tables.embeddings(s, d).filter($"vec_id" % 4 === 0).count(),
+      () => r.vecs
+        .join(r.keepClean.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left_semi")
+        .filter(graft.functions.MaxCosineExpr($"v", r.eval.vecs) >= 0.9).count(),
+      () => r.keepClean.filter($"doc_id" < CurationPipeline.EvalIdMax).count())
+    Seq((n0, n1, nTwinVecs,
+      in2 - out2 <= nTwinVecs && in2 - out2 >= math.floor(0.99 * nTwinVecs).toLong,
       contaminated == 0L && benchLeft == 0L,
       out4 > 0L && out4 <= in4,
       out5 > 0L && out5 <= in5))
@@ -304,39 +293,23 @@ object Text {
     */
   val q150_curation_incremental: Q = (s, d) => {
     import s.implicits._
-    import graft.operators.{CurationPipeline, QualityClassifier, Similarity}
-    // the batch run: the equality target AND the side-input model's
-    // training basis (the production convention — a periodic batch
-    // refresh applied in-stream; per-batch retraining would make
-    // published verdicts depend on arrival order)
+    import graft.operators.Similarity
+    // the batch run: the equality target, and the source of every side
+    // input (crawl frames, eval set, quality model — a periodic batch
+    // refresh applied in-stream, the production convention; per-batch
+    // retraining would make published verdicts depend on arrival order)
     val r = CurationPipeline.runDetailed(s, d)
-    // the stage table already carries the two cross-engine counts this
-    // query publishes — n_crawl = stage-1 rows_in (the planted-crawl doc
-    // count; the vec left-join below is 1:1 on unique vec_ids, so crawl
-    // has exactly that many rows) and n_after_exact = stage-1 rows_out
-    // (keep-min-id survivors ≡ count(DISTINCT md5(text)) — recomputing
-    // the digest-distinct over the whole crawl was a full redundant pass
-    // (§1.2 "don't compute things you throw away"); same long either way,
-    // the DuckDB oracle pins it
-    val st = r.stages.collect()
-      .map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
-    // the batch run already computed (and checkpointed / collected) every
-    // side input this kernel needs — the crawl frames, the eval matrix,
-    // the distinct eval shingles and the side-input quality model (the
-    // SAME labeled frame, featurization and 5 Newton iterations, so
-    // retraining here was ~10 redundant jobs; §1.2 "don't compute things
-    // you throw away"). r16: reuse them all.
+    // n_crawl = stage-1 rows_in (the vec left-join below is 1:1 on unique
+    // vec_ids, so crawl has exactly that many rows); n_after_exact =
+    // stage-1 rows_out (keep-min-id survivors ≡ count(DISTINCT md5(text)))
+    val (nCrawl, nAfterExact) = r.stages("1_exact_dedup")
     val docs = r.docs
     val crawl = docs
       .join(r.vecs.select($"vec_id".as("doc_id"), $"v"), Seq("doc_id"), "left")
       .select($"doc_id", $"text", $"source", $"v").localCheckpoint(false)
-    val nCrawl = st("1_exact_dedup")._1
-    val nAfterExact = st("1_exact_dedup")._2
-    val (b, t) = Similarity.lshParams(nAfterExact, 0.95)
-    val evalShingles = r.evalSh.as[String].collect().toSet
+    val (b, t) = Similarity.lshParams(nAfterExact, CurationPipeline.NearDupCosine)
     val cfg = graft.streaming.StreamingCuration.Config(
-      nPlanes = b, nTables = t, threshold = 0.95,
-      evalVecs = r.evalVecs, evalShingles = evalShingles, model = r.model)
+      nPlanes = b, nTables = t, eval = r.eval, model = r.model)
     // four id-range batches (base lower/upper, exact copies, twins) —
     // the id-ordered-arrival regime where keep-first ≡ keep-min-id
     val baseMax = 1000000000000000L
@@ -356,30 +329,17 @@ object Text {
         .select($"doc_id")
     }.reduce(_ unionByName _).localCheckpoint(false)
     val nStream = streamKept.count()
-    // stage-4 rows_out IS keepQual's count — no extra count job; the
-    // equality anti-join and the packing count are independent — overlap
-    // them (§2.6)
-    import scala.concurrent.{Await, Future}
+    // stage-4 rows_out IS keepQual's count — no extra count job. The
+    // stream-only survivors and the snapshot packing over the INCREMENTAL
+    // survivors (which must reproduce the batch run's stage-5 window
+    // count) are independent counts, so they run side by side
     import scala.concurrent.ExecutionContext.Implicits.global
-    val equalOkF = Future(nStream == st("4_quality_filter")._2 &&
-      streamKept.join(r.keepQual, Seq("doc_id"), "left_anti").isEmpty)
-    // snapshot packing over the INCREMENTAL survivors reproduces the
-    // batch run's stage-5 window count
-    val st5 = st("5_packing_windows")._2
-    val packedNF = Future(docs.join(streamKept, Seq("doc_id"), "left_semi")
-      .select($"doc_id", $"source",
-        tokenCount($"text").cast("long").as("n_tok"))
-      .withColumn("cum_before",
-        sum($"n_tok").over(org.apache.spark.sql.expressions.Window
-          .partitionBy($"source").orderBy($"doc_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
-          - $"n_tok")
-      .withColumn("bin", expr("cum_before div 2048"))
-      .groupBy($"source", $"bin").count().count())
-    import scala.concurrent.duration.Duration
-    val equalOk = Await.result(equalOkF, Duration.Inf)
-    val packedN = Await.result(packedNF, Duration.Inf)
-    Seq((nCrawl, nAfterExact, equalOk, packedN == st5))
+    val Seq(streamOnly, packedN) = graft.Parallel.all(
+      () => streamKept.join(r.keepQual, Seq("doc_id"), "left_anti").count(),
+      () => CurationPipeline.packingPlan(docs.join(streamKept, Seq("doc_id"), "left_semi"))
+        .count())
+    val equalOk = nStream == r.stages("4_quality_filter")._2 && streamOnly == 0L
+    Seq((nCrawl, nAfterExact, equalOk, packedN == r.stages("5_packing_windows")._2))
       .toDF("n_crawl", "n_after_exact", "stream_equals_batch_ok", "packing_ok")
     } finally {
       // every count above is materialized eagerly, so the store is dead
@@ -419,20 +379,15 @@ object Text {
   val q79_quality_score: Q = (s, d) => {
     import s.implicits._
     Tables.documents(s, d)
-      .select(
-        $"doc_id",
-        length($"text").as("len"),
-        tokenCount($"text").as("n_tok"),
-        langScore($"text", enMarkers).as("n_stop"),
-        punctCount($"text").as("n_punct"))
+      .select($"doc_id" +: QualityClassifier.heuristicSignals($"text"): _*)
       .select(
         $"doc_id",
         rate($"n_stop" / $"n_tok").as("stopword_ratio"),
         rate($"n_punct" / $"len").as("punct_ratio"),
         rate($"len" / $"n_tok").as("chars_per_tok"),
-        when($"n_tok" < 5, "too_short")
-          .when($"n_punct" / $"len" > 0.1, "punct_heavy")
-          .when($"n_stop" === 0, "no_stopwords")
+        when(!QualityClassifier.minTokens, "too_short")
+          .when(!QualityClassifier.punctOk, "punct_heavy")
+          .when(!QualityClassifier.hasStopword, "no_stopwords")
           .otherwise("keep").as("quality"))
   }
 
@@ -603,20 +558,10 @@ object Text {
     * ratio. The running sum is PER SOURCE — packing at corpus scale is a
     * per-shard operation, so the window never needs a global ordering.
     */
-  val q95_packing_plan: Q = (s, d) => {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    Tables.documents(s, d)
-      .select($"doc_id", $"source",
-        expr("CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)").as("n_tok"))
-      .withColumn("cum_before",
-        sum($"n_tok").over(Window.partitionBy($"source").orderBy($"doc_id")
-          .rowsBetween(Window.unboundedPreceding, 0)) - $"n_tok")
-      .withColumn("bin", expr("cum_before div 2048"))
-      .groupBy($"source", $"bin")
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"),
-        rate(sum($"n_tok").cast("double") / 2048).as("fill"))
-  }
+  val q95_packing_plan: Q = (s, d) =>
+    CurationPipeline.packingPlan(Tables.documents(s, d))
+      .withColumn("fill",
+        rate(col("n_tokens").cast("double") / CurationPipeline.WindowTokens))
 
   /** Boilerplate shingle detection (north_star curation: repeated
     * headers/footers poison training corpora): the 3 most document-
@@ -678,17 +623,12 @@ object Text {
   val q100_curation_pipeline: Q = (s, d) => {
     import s.implicits._
     val scored = Tables.documents(s, d)
-      .select($"doc_id", $"lang", $"source", $"text",
-        tokenCount($"text").as("n_tok"),
-        langScore($"text", enMarkers).as("n_stop"),
-        punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .filter($"n_tok" >= 5 && $"n_punct" / $"len" <= 0.1 && $"n_stop" > 0)
-    // dedup keys on the digest, not the body (see q27) — the join back
-    // to `scored` is on doc_id only, so document text never shuffles
-    val keep = scored.groupBy(md5($"text").as("__h")).agg(min($"doc_id").as("doc_id"))
-      .select($"doc_id")
-    scored.join(keep, "doc_id")
+      .select(Seq($"doc_id", $"lang", $"source", $"text") ++
+        QualityClassifier.heuristicSignals($"text"): _*)
+      .filter(QualityClassifier.heuristicKeep)
+    // the join back to `scored` is on doc_id only, so document text
+    // never shuffles
+    scored.join(Dedup.keepMinIdPerText(scored), "doc_id")
       .groupBy($"lang", $"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_tok").cast("long").as("n_tokens"),
@@ -786,16 +726,11 @@ object Text {
   val q127_filter_attrition: Q = (s, d) => {
     import s.implicits._
     val flagged = Tables.documents(s, d)
-      .select($"doc_id", $"text",
-        tokenCount($"text").cast("long").as("n_tok"),
-        langScore($"text", enMarkers).as("n_stop"),
-        punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .withColumn("f1", $"n_tok" >= 5)
-      .withColumn("f2", $"n_punct" / $"len" <= 0.1)
-      .withColumn("f3", $"n_stop" > 0)
-    val keep = flagged.filter($"f1" && $"f2" && $"f3")
-      .groupBy(md5($"text").as("__h")).agg(min($"doc_id").as("doc_id"))
+      .select(Seq($"doc_id", $"text") ++ QualityClassifier.heuristicSignals($"text"): _*)
+      .withColumn("f1", QualityClassifier.minTokens)
+      .withColumn("f2", QualityClassifier.punctOk)
+      .withColumn("f3", QualityClassifier.hasStopword)
+    val keep = Dedup.keepMinIdPerText(flagged.filter($"f1" && $"f2" && $"f3"))
       .select($"doc_id", lit(true).as("is_first"))
     flagged.join(keep, Seq("doc_id"), "left")
       .select($"n_tok",
@@ -893,16 +828,9 @@ object Text {
     */
   private[graft] val q134_kernel: Q = (s, d) => {
     import s.implicits._
-    import graft.operators.QualityClassifier
     val dim = 64
-    val labeled = Tables.documents(s, d)
-      .select($"doc_id", $"source", $"text",
-        tokenCount($"text").cast("long").as("n_tok"),
-        langScore($"text", enMarkers).as("n_stop"),
-        punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .withColumn("y",
-        ($"n_tok" >= 5 && $"n_punct" / $"len" <= 0.1 && $"n_stop" > 0).cast("double"))
+    val labeled = QualityClassifier.weakLabels(
+      Tables.documents(s, d).select($"doc_id", $"source", $"text"))
     // feats feeds the trainer AND the final scoring aggregate —
     // uncheckpointed, the tokenize+featurize pass ran twice; the lazy
     // checkpoint materializes inside the trainer's first scan (r16)
@@ -913,7 +841,7 @@ object Text {
     val model = QualityClassifier.trainNewton(feats, "f", "y", dim, iters = 5)
     feats
       .withColumn("score", QualityClassifier.score($"f", model))
-      .withColumn("pred", ($"score" > 0.5).cast("double"))
+      .withColumn("pred", QualityClassifier.passes($"score").cast("double"))
       .groupBy($"source")
       .agg(
         count(lit(1)).as("n_docs"),

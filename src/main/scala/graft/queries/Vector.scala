@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.operators.CurationPipeline
 import graft.functions.VectorFunctions._
 import QueryDefs._
 
@@ -54,8 +55,8 @@ object Vector {
   }
 
   /** q34/q42/q56/q102's contract corpus: the fixture vectors plus a
-    * deterministic near-twin (same perturbation rule as
-    * [[plantedCorpus]]) of every FOURTH vector — a known-ground-truth
+    * deterministic near-twin ([[CurationPipeline.twinVector]]) of every
+    * FOURTH vector — a known-ground-truth
     * planted-NN subset (the twin is each planted vector's exact global
     * top-1: twin cosine ≈ 0.89–0.98 vs a ≤ ~0.6 background) at a 1.25×
     * corpus, so the contract queries keep their kernels' scale posture
@@ -67,8 +68,7 @@ object Vector {
       .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
     base.unionByName(base.filter(col("vec_id") % 4 === 0)
       .select((col("vec_id") + lit(1000000000000000L)).as("vec_id"),
-        expr("transform(v, (x, i) -> x + 0.25d * element_at(v, pmod(i + 1, size(v)) + 1))")
-          .as("v")))
+        CurationPipeline.twinVector(col("v")).as("v")))
   }
 
   /** Sign-LSH bucketing (16 hyperplanes), oracled on its CONTRACT (the
@@ -676,15 +676,15 @@ object Vector {
 
   /** q119/q120/q128's shared planted-near-dup corpus: the fixture's raw
     * embeddings have no pairs above cosine 0.7 (they model DISTINCT
-    * documents), so the dedup queries union a deterministic perturbed
-    * copy (cos(v, twin) ≈ 0.97) — the corpus a crawl-dedup actually sees.
+    * documents), so the dedup queries union each vector's
+    * [[CurationPipeline.twinVector]] (cos(v, twin) ≈ 0.97) — the corpus a
+    * crawl-dedup actually sees.
     */
   private[graft] def plantedCorpus(s: SparkSession, d: String): DataFrame = {
     val base = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
     base.unionByName(base.select((col("vec_id") + lit(1000000000000000L)).as("vec_id"),
-      expr("transform(v, (x, i) -> x + 0.25d * element_at(v, pmod(i + 1, size(v)) + 1))")
-        .as("v")))
+      CurationPipeline.twinVector(col("v")).as("v")))
   }
 
   /** Eval-set decontamination by embedding similarity (north_star — the
@@ -704,10 +704,8 @@ object Vector {
     val corpus = plantedCorpus(s, d)
     val eval = corpus.filter($"vec_id" < 200)
       .select($"v").collect().map(_.getSeq[Double](0).toArray)
-    val norms = eval.map(v => math.sqrt(v.map(x => x * x).sum))
     corpus.filter($"vec_id" >= 200)
-      .select($"vec_id",
-        graft.functions.MaxCosineExpr($"v", eval, norms).as("mc"))
+      .select($"vec_id", graft.functions.MaxCosineExpr($"v", eval).as("mc"))
       .select($"vec_id", round($"mc", 6).as("max_cos"),
         ($"mc" >= 0.9).as("contaminated"))
   }

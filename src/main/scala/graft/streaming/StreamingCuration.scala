@@ -3,16 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.{Dedup, QualityClassifier, Similarity}
-import graft.functions.TextFunctions
+import graft.operators.{CurationPipeline, Dedup, QualityClassifier, Similarity}
 
 /** The north-star pipeline run INCREMENTALLY — continuous curation, the
   * production shape of [[graft.operators.CurationPipeline]] at 100 TB:
-  * crawl batches arrive as a stream and each micro-batch flows
+  * crawl batches arrive as a stream and each micro-batch flows through
+  * the batch pipeline's own rule functions:
   *
   *   1. EXACT dedup    — md5(text) vs the persistent digest STORE
-  *                       (new-vs-old) plus the same-batch min-id rule
-  *                       (new-vs-new);
+  *                       (new-vs-old), then the batch keep-min-id rule
+  *                       [[Dedup.keepMinIdPerText]] (new-vs-new);
   *   2. NEAR-DUP dedup — the q148 banded-LSH chain with PERSISTENT
   *                       signature/bucket + vector stores: candidates
   *                       are new-vs-new AND new-vs-old bucket
@@ -20,8 +20,8 @@ import graft.functions.TextFunctions
   *                       components over the union — a new document
   *                       drops iff its component touches anything
   *                       already seen, or a smaller-id same-batch doc;
-  *   3. DECONTAMINATION— the static eval refs (broadcast vector matrix
-  *                       + 8-gram set) applied per batch — stateless
+  *   3. DECONTAMINATION— [[CurationPipeline.decontaminate]] against
+  *                       the batch run's static eval set — stateless
   *                       side inputs, identical verdicts at any arrival
   *                       order;
   *   4. QUALITY        — a SIDE-INPUT classifier model (the production
@@ -30,7 +30,8 @@ import graft.functions.TextFunctions
   *                       micro-batch — online retraining would make
   *                       published verdicts depend on arrival order);
   *   5. survivors land partitioned by batch id; PACKING stays a
-  *                       snapshot-time batch pass over the accumulated
+  *                       snapshot-time batch pass
+  *                       ([[CurationPipeline.packingPlan]]) over the accumulated
   *                       survivors (bins depend on cumulative token
   *                       counts, so packing is defined per training
   *                       snapshot, not per micro-batch).
@@ -69,16 +70,16 @@ import graft.functions.TextFunctions
   */
 object StreamingCuration {
 
-  /** Side inputs + near-dup geometry. `nPlanes`/`nTables` tune
-    * candidate RECALL only (pairs are verified exact-cosine), so
-    * production recomputes them periodically from store size
-    * ([[Similarity.lshParams]]) without affecting precision.
+  /** Side inputs + near-dup geometry: the batch run's eval set and
+    * quality model (the featurizer's width is the model's), and the LSH
+    * planes/tables. `nPlanes`/`nTables` tune candidate RECALL only
+    * (pairs are verified exact-cosine at
+    * [[CurationPipeline.NearDupCosine]]), so production recomputes them
+    * periodically from store size ([[Similarity.lshParams]]) without
+    * affecting precision.
     */
-  final case class Config(
-      nPlanes: Int, nTables: Int, threshold: Double,
-      evalVecs: Array[Array[Double]], evalShingles: Set[String],
-      model: QualityClassifier.Model, dim: Int = 64, shingleN: Int = 8,
-      evalIdMax: Long = 200L)
+  final case class Config(nPlanes: Int, nTables: Int,
+      eval: CurationPipeline.EvalSet, model: QualityClassifier.Model)
 
   /** Small daemon pool that overlaps the batch's independent store
     * writes with its compute jobs (guide §2.6 — Spark happily runs
@@ -105,34 +106,27 @@ object StreamingCuration {
       batchId: Long = -1L): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     implicit val ec: scala.concurrent.ExecutionContext = storeWriteEc
     val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
     def writeAsync(df: DataFrame, store: String): Unit =
       writes += Future(writeStore(df, s"$storeDir/$store", batchId))
-    // a failed attempt propagates only once its started writes are done:
-    // none of them may land after (and so overwrite) the replay's writes
-    try {
+    val out = try {
       val docs = batch.select($"doc_id", $"text", $"source", $"v")
         .localCheckpoint(true)
 
-      // ---- 1. exact dedup: persistent digest store + same-batch min-id
-      val hashes = docs.select($"doc_id", md5($"text").as("__h"))
+      // ---- 1. exact dedup: the batch keep-min-id rule over the texts
+      // whose digest the persistent store has not seen
       val md5Store = readStore(spark, s"$storeDir/md5", batchId,
         "h STRING, batch_id BIGINT")
       // store writes are kicked off async once their read frame is frozen
       // (readStore listed the files above; a replayed batch's own rows are
       // excluded by batch_id either way) and awaited before return — the
       // write job backfills executors while the stage's compute jobs run
-      writeAsync(hashes.select($"__h".as("h")).distinct(), "md5")
-      val keepExact = hashes
-        .join(md5Store.select($"h".as("__h")).distinct()
-          .withColumn("__seen", lit(true)), Seq("__h"), "left")
-        .withColumn("__min_id", min($"doc_id").over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"__h")))
-        .filter(!coalesce($"__seen", lit(false)) && $"doc_id" === $"__min_id")
-        .select($"doc_id").localCheckpoint(true)
+      writeAsync(docs.select(Dedup.textKey($"text").as("h")).distinct(), "md5")
+      val keepExact = Dedup.keepMinIdPerText(
+          docs.join(md5Store, Dedup.textKey($"text") === $"h", "left_anti"))
+        .localCheckpoint(true)
 
       // ---- 2. near-dup vs the persistent bucket + vector stores. A doc
       // with NO vector (the crawl's left join) skips this stage entirely,
@@ -144,7 +138,8 @@ object StreamingCuration {
       val newVB = docs.join(keepExact, Seq("doc_id"), "left_semi")
         .filter($"v".isNotNull)
         .select($"doc_id".as("vec_id"), $"v",
-          graft.functions.LshBucketsExpr($"v", cfg.nPlanes, cfg.dim, cfg.nTables).as("bs"))
+          graft.functions.LshBucketsExpr($"v", cfg.nPlanes, Similarity.EmbeddingDim,
+            cfg.nTables).as("bs"))
         .localCheckpoint(true)
       val newVecs = newVB.select($"vec_id", $"v")
       val oldVecs = readStore(spark, s"$storeDir/vec", batchId,
@@ -173,7 +168,7 @@ object StreamingCuration {
       val candidates = candNN.unionByName(candNO).distinct()
       val embAll = newVecs.unionByName(oldVecs)
       val edges = Similarity
-        .verifyPairs(embAll, "vec_id", "v", cfg.threshold, candidates)
+        .verifyPairs(embAll, "vec_id", "v", CurationPipeline.NearDupCosine, candidates)
         .select($"a_id", $"b_id")
       val comp = Dedup.connectedComponents(edges, "a_id", "b_id")
         .localCheckpoint(true) // (id, component = min reachable id)
@@ -191,39 +186,30 @@ object StreamingCuration {
       val keepNear = keepExact.join(dropNear, Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
 
-      // ---- 3. decontamination: static eval side inputs (order-free)
-      val evalNorms = cfg.evalVecs.map(v => math.sqrt(v.map(x => x * x).sum))
-      // NOT checkpointed (r16): its three consumers all evaluate lazily in
-      // the caller's one output action, and both inputs are already
-      // checkpointed — the semi-join is a cheap in-job recompute, while the
-      // eager materialization sat on the batch's sequential critical path
+      // ---- 3. decontamination against the static eval set (order-free).
+      // survDocs is NOT checkpointed (r16): its consumers all evaluate
+      // lazily in the caller's one output action, and both inputs are
+      // already checkpointed — the semi-join is a cheap in-job recompute,
+      // while the eager materialization sat on the batch's sequential
+      // critical path
       val survDocs = docs.join(keepNear, Seq("doc_id"), "left_semi")
-      val vecContam = survDocs.filter($"doc_id" >= cfg.evalIdMax && $"v".isNotNull)
-        .select($"doc_id",
-          graft.functions.MaxCosineExpr($"v", cfg.evalVecs, evalNorms).as("mc"))
-        .filter($"mc" >= 0.9).select($"doc_id")
-      val shinglesB = spark.sparkContext.broadcast(cfg.evalShingles)
-      val inEval = udf((sh: String) => sh != null && shinglesB.value.contains(sh))
-      val textContam = TextFunctions
-        .explodedWordShingles(survDocs.filter($"doc_id" >= cfg.evalIdMax),
-          Seq("doc_id"), "text", cfg.shingleN)
-        .filter(inEval($"shingle"))
-        .select($"doc_id").distinct()
-      val dropContam = vecContam.unionByName(textContam).distinct()
-        .unionByName(keepNear.filter($"doc_id" < cfg.evalIdMax))
-      val keepClean = keepNear.join(dropContam, Seq("doc_id"), "left_anti")
+      val keepClean = CurationPipeline.decontaminate(keepNear, survDocs, survDocs, cfg.eval)
 
-      // ---- 4. quality: apply the side-input model, keep score > 0.5
-      val feats = QualityClassifier.featurize(
-        survDocs.join(keepClean, Seq("doc_id"), "left_semi"), "text", cfg.dim)
-      val out = feats.withColumn("score", QualityClassifier.score($"f", cfg.model))
-        .filter($"score" > 0.5)
+      // ---- 4. quality: apply the side-input model
+      QualityClassifier.featurize(survDocs.join(keepClean, Seq("doc_id"), "left_semi"),
+          "text", cfg.model.weights.size)
+        .filter(QualityClassifier.passes(QualityClassifier.score($"f", cfg.model)))
         .select($"doc_id", $"source", $"text")
-      // every store write committed before the batch hands off — the next
-      // batch's reads (and in-stream compaction) see complete stores
-      writes.foreach(Await.result(_, Duration.Inf))
-      out
-    } finally writes.foreach(Await.ready(_, Duration.Inf))
+    } catch { case e: Throwable =>
+      // a failed attempt propagates only once its started writes are done:
+      // none of them may land after (and so overwrite) the replay's writes
+      scala.util.Try(graft.Parallel.awaitAll(writes.toSeq)).failed.foreach(e.addSuppressed)
+      throw e
+    }
+    // every store write committed before the batch hands off — the next
+    // batch's reads (and in-stream compaction) see complete stores
+    graft.Parallel.awaitAll(writes.toSeq)
+    out
   }
 
   /** Deploy over a streaming crawl (doc_id, text, source, v): each

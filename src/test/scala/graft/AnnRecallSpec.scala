@@ -96,11 +96,7 @@ class AnnRecallSpec extends AnyFunSuite {
 
   // ---- planted document twins + exact shingle-Jaccard oracle ----
   private lazy val plantedDocs = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, TestSpark.sfDir).select($"doc_id", $"text")
-    val twins = docs.select(($"doc_id" + twinOff).as("doc_id"),
-      concat($"text", lit(" zyxappend")).as("text"))
-    val p = docs.unionByName(twins).cache()
+    val p = graft.queries.Text.plantedDocs(spark, TestSpark.sfDir).cache()
     p.count()
     p
   }

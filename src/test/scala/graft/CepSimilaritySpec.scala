@@ -390,12 +390,7 @@ class CepSimilaritySpec extends AnyFunSuite {
   test("semantic dedup: drop rule re-derived from the exact pair kernel across probe cells") {
     import org.apache.spark.sql.functions._
     // the q119/q128 planted corpus: base ∪ perturbed twins (cos ≈ 0.97)
-    val base = Tables.embeddings(spark, TestSpark.sfDir)
-      .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
-    val emb = base.unionByName(
-      base.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        expr("transform(v, (x, i) -> x + 0.25d * element_at(v, pmod(i + 1, size(v)) + 1))")
-          .as("v")))
+    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir)
     def probesOf(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Int]] =
       rows.map(r => r.getAs[Long]("vec_id") ->
         Set(r.getAs[Int]("cell"), r.getAs[Int]("cell2"))).toMap
@@ -555,12 +550,7 @@ class CepSimilaritySpec extends AnyFunSuite {
     // must still re-derive from the output's probe cells + the exact
     // pair kernel (assignment approximation moves WHICH cells, never
     // whether the rule was applied)
-    val base = Tables.embeddings(spark, TestSpark.sfDir)
-      .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
-    val emb = base.unionByName(
-      base.select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        expr("transform(v, (x, i) -> x + 0.25d * element_at(v, pmod(i + 1, size(v)) + 1))")
-          .as("v")))
+    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir)
     val out = Similarity.semanticDedup(emb, "vec_id", "v",
       nCells = 300, threshold = 0.9).collect()
     assert(out.length == emb.count(), "one row per input vector")

@@ -15,9 +15,7 @@ class PipelineSpec extends AnyFunSuite {
 
   private lazy val run =
     graft.operators.CurationPipeline.runDetailed(spark, TestSpark.sfDir)
-  private lazy val stages: Map[String, (Long, Long)] =
-    run.stages.collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+  private lazy val stages = run.stages
 
   private lazy val counts = {
     import spark.implicits._
@@ -77,10 +75,9 @@ class PipelineSpec extends AnyFunSuite {
     val (_, vecs) = graft.operators.CurationPipeline.plantedCrawl(spark, TestSpark.sfDir)
     val eval = vecs.filter($"vec_id" < 200)
       .select($"v").collect().map(_.getSeq[Double](0).toArray)
-    val norms = eval.map(v => math.sqrt(v.map(x => x * x).sum))
     val contaminated = vecs
       .join(run.keepClean.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left_semi")
-      .select($"vec_id", graft.functions.MaxCosineExpr($"v", eval, norms).as("mc"))
+      .select($"vec_id", graft.functions.MaxCosineExpr($"v", eval).as("mc"))
       .filter($"mc" >= 0.9).count()
     assert(contaminated == 0,
       s"$contaminated surviving vectors sit at cosine >= 0.9 to the eval set")
@@ -99,7 +96,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("streaming continuous curation over 4 batches equals the q149 batch result") {
     import spark.implicits._
-    import graft.functions.TextFunctions
     import graft.operators.{CurationPipeline, QualityClassifier, Similarity}
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("stream_curation").toString
@@ -111,27 +107,15 @@ class PipelineSpec extends AnyFunSuite {
 
     // side inputs — the production convention: near-dup geometry and the
     // quality model are periodic batch refreshes, applied in-stream. The
-    // model retrains on the batch run's keepClean corpus with the exact
-    // stage-4 recipe (deterministic Newton → the same weights q149 used).
-    val (b, t) = Similarity.lshParams(run.keepExact.count(), 0.95)
-    val evalVecs = vecs.filter($"vec_id" < 200)
-      .select($"v").collect().map(_.getSeq[Double](0).toArray)
-    val evalShingles = TextFunctions
-      .explodedWordShingles(docs.filter($"doc_id" < 200), Seq("doc_id"), "text", 8)
-      .select($"shingle").distinct().as[String].collect().toSet
-    val labeled = docs.join(run.keepClean, Seq("doc_id"), "left_semi")
-      .select($"doc_id", $"source", $"text",
-        TextFunctions.tokenCount($"text").cast("long").as("n_tok"),
-        TextFunctions.langScore($"text", TextFunctions.enMarkers).as("n_stop"),
-        TextFunctions.punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .withColumn("y",
-        ($"n_tok" >= 5 && $"n_punct" / $"len" <= 0.1 && $"n_stop" > 0).cast("double"))
+    // eval set is rebuilt from this crawl, and the model retrains on the
+    // batch run's keepClean corpus with the stage-4 recipe (deterministic
+    // Newton → the same weights q149 used).
+    val (b, t) = Similarity.lshParams(run.keepExact.count(), CurationPipeline.NearDupCosine)
+    val labeled = QualityClassifier.weakLabels(docs.join(run.keepClean, Seq("doc_id"), "left_semi"))
     val model = QualityClassifier.trainNewton(
       QualityClassifier.featurize(labeled, "text", 64), "f", "y", 64, iters = 5)
-    val cfg = graft.streaming.StreamingCuration.Config(
-      nPlanes = b, nTables = t, threshold = 0.95,
-      evalVecs = evalVecs, evalShingles = evalShingles, model = model)
+    val cfg = graft.streaming.StreamingCuration.Config(nPlanes = b, nTables = t,
+      eval = CurationPipeline.evalSet(docs, vecs), model = model)
 
     // id-range batch splits — base lower half, base upper half, exact
     // copies (+1e15), near-dup twins (+2e15): every duplicate group's
@@ -171,16 +155,7 @@ class PipelineSpec extends AnyFunSuite {
         s"batch-only=${(batchKept -- streamed).take(5)}")
     // packing the accumulated streamed survivors (the snapshot-time
     // pass) yields the batch run's stage-5 window count
-    val packedN = spark.read.parquet(s"$tmp/out")
-      .select($"doc_id", $"source",
-        expr("CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)").as("n_tok"))
-      .withColumn("cum_before",
-        sum($"n_tok").over(org.apache.spark.sql.expressions.Window
-          .partitionBy($"source").orderBy($"doc_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
-          - $"n_tok")
-      .withColumn("bin", expr("cum_before div 2048"))
-      .groupBy($"source", $"bin").count().count()
+    val packedN = CurationPipeline.packingPlan(spark.read.parquet(s"$tmp/out")).count()
     assert(packedN == stages("5_packing_windows")._2,
       s"snapshot packing over streamed survivors: $packedN windows vs batch")
 
@@ -273,12 +248,13 @@ class PipelineSpec extends AnyFunSuite {
         "doc_id BIGINT, text STRING, source STRING, v ARRAY<DOUBLE>"))
   private lazy val cfg = {
     val evalV = { val r = new scala.util.Random(-1L); Array.fill(dim)(r.nextGaussian()) }
-    graft.streaming.StreamingCuration.Config(
-      nPlanes = 8, nTables = 2, threshold = 0.95,
-      evalVecs = Array(evalV), evalShingles = Set.empty,
-      model = graft.operators.QualityClassifier.Model(Seq.fill(dim)(0.0), 10.0, Nil),
-      dim = dim, evalIdMax = 0L)
+    graft.streaming.StreamingCuration.Config(nPlanes = 8, nTables = 2,
+      eval = graft.operators.CurationPipeline.EvalSet(Array(evalV), Set.empty),
+      model = graft.operators.QualityClassifier.Model(Seq.fill(dim)(0.0), 10.0, Nil))
   }
+  // the synthetic ids start above the benchmark slice, which
+  // decontamination always drops
+  private val id0 = graft.operators.CurationPipeline.EvalIdMax
 
   test("compaction swap is crash-ordered: a kill between the renames loses no store row") {
     import spark.implicits._
@@ -286,7 +262,7 @@ class PipelineSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("crash_compaction").toString
     val store = s"$tmp/store"
 
-    val batch0 = (1L to 20L).map(i => (i, s"document number $i with its own words", i))
+    val batch0 = (1L to 20L).map(i => (id0 + i, s"document number $i with its own words", i))
     StreamingCuration.processBatch(mk(batch0), cfg, store, batchId = 0L).count()
 
     val fs = new org.apache.hadoop.fs.Path(store)
@@ -308,16 +284,17 @@ class PipelineSpec extends AnyFunSuite {
     // batch 0 (md5 store) and one identical-vector twin of doc 1
     // (vec + bucket stores). A lost store re-admits them silently.
     val batch1 =
-      (21L to 40L).map(i => (i, s"document number $i with its own words", i)) ++
+      (21L to 40L).map(i => (id0 + i, s"document number $i with its own words", i)) ++
       batch0.map { case (id, tx, vs) => (id + 40L, tx, vs + 100L) } :+
-      ((61L, "fresh words but a copied vector", 1L))
+      ((id0 + 61L, "fresh words but a copied vector", 1L))
     val survivors = StreamingCuration
       .processBatch(mk(batch1), cfg, store, batchId = 1L)
       .select($"doc_id").as[Long].collect().toSet
-    assert(survivors == (21L to 40L).toSet,
+    val fresh = (21L to 40L).map(id0 + _).toSet
+    assert(survivors == fresh,
       s"post-crash batch must still see every store row: " +
-        s"readmitted=${(survivors -- (21L to 40L)).toSeq.sorted.take(5)} " +
-        s"lost=${((21L to 40L).toSet -- survivors).toSeq.sorted.take(5)}")
+        s"readmitted=${(survivors -- fresh).toSeq.sorted.take(5)} " +
+        s"lost=${(fresh -- survivors).toSeq.sorted.take(5)}")
 
     // crash AFTER the commit rename: the new tree is live, only a stale
     // __old aside remains — reads prefer the live tree, and the next
@@ -375,5 +352,16 @@ class PipelineSpec extends AnyFunSuite {
     val expected = mk(replay).select(md5($"text")).as[String].collect().sorted.toSeq
     assert(stored == expected)
     StreamingCuration.deleteStore(tmp)
+  }
+
+  test("Parallel.all returns or throws only after every started action has finished") {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Parallel.all(() => throw new IllegalStateException("first"),
+        () => { Thread.sleep(500); done.set(true); 0 })
+    }
+    assert(e.getMessage == "first" && done.get,
+      "the failure propagated while its sibling was still running")
   }
 }

@@ -87,14 +87,8 @@ class QualityClassifierSpec extends AnyFunSuite {
     // hash split) and evaluated on the UNSEEN 20% — independent evidence
     // beyond the golden pin that the trained weights carry signal
     val dim = 64
-    val labeled = Tables.documents(spark, TestSpark.sfDir)
-      .select($"doc_id", $"text",
-        graft.functions.TextFunctions.tokenCount($"text").cast("long").as("n_tok"),
-        graft.functions.TextFunctions.langScore($"text", graft.functions.TextFunctions.enMarkers).as("n_stop"),
-        graft.functions.TextFunctions.punctCount($"text").as("n_punct"),
-        length($"text").as("len"))
-      .withColumn("y",
-        ($"n_tok" >= 5 && $"n_punct" / $"len" <= 0.1 && $"n_stop" > 0).cast("double"))
+    val labeled = QualityClassifier.weakLabels(
+      Tables.documents(spark, TestSpark.sfDir).select($"doc_id", $"text"))
     val feats = QualityClassifier.featurize(labeled, "text", dim)
     val train = feats.where(pmod($"doc_id", lit(5)) =!= 0)
     val heldOut = feats.where(pmod($"doc_id", lit(5)) === 0)
