@@ -111,31 +111,6 @@ object BpeTrain {
   def train(spark: SparkSession, words: DataFrame, nMerges: Int,
       maxDriverPairs: Long = 1L << 20): Seq[Merge] = {
     import spark.implicits._
-    // lazy checkpoint: the first merge iteration's pair-count pass fully
-    // scans the frame, materializing the checkpoint in that same job
-    var base = words.select($"word", $"c")
-      .as[(String, Long)]
-      .map { case (w, c) => (symbols(w), c) }
-      .toDF("syms", "c")
-      .localCheckpoint(false)
-    // pending merges since the last checkpoint: applied in-closure by the
-    // count pass, folded into the frame every few merges so the closure
-    // stays small and lineage flat
-    var pending = List.empty[(String, String)]
-    def fold(): Unit = if (pending.nonEmpty) {
-      val ms = pending.reverse
-      val next = base.as[(Seq[String], Long)]
-        .map { case (syms, c) =>
-          var s = syms.toIndexedSeq
-          ms.foreach { case (l, r) => s = applyMerge(s, l, r) }
-          (s, c)
-        }
-        .toDF("syms", "c")
-        .localCheckpoint(true)
-      base.unpersist()
-      base = next
-      pending = Nil
-    }
     // Large-alphabet guard for the merged map (size-capped merge, no
     // extra sizing job): intermediate merge sizes are unions of subsets
     // of the total distinct-pair set, so an intermediate can exceed
@@ -143,16 +118,14 @@ object BpeTrain {
     // deterministically, independent of treeReduce's merge order. Once
     // fired, this and every later iteration use the distributed argmax.
     var driverArgmax = maxDriverPairs > 0
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var k = 1
-    var done = false
-    while (k <= nMerges && !done) {
-      val ms = pending.reverse
+    // the most frequent adjacent pair of `frame` with `ms` applied; its
+    // first job reads every partition of the frame
+    def topPair(frame: DataFrame, ms: List[(String, String)]): Option[((String, String), Long)] = {
       // large-alphabet path: pair counts reduce DISTRIBUTED (reduceByKey)
       // and only one argmax candidate per partition reaches the driver —
       // the driver never holds the pair map (r16, ADVICE)
       def distributedTop(): Option[((String, String), Long)] = {
-        val tops = base.as[(Seq[String], Long)].rdd
+        val tops = frame.as[(Seq[String], Long)].rdd
           .flatMap { case (syms0, c) =>
             var syms = syms0.toIndexedSeq
             ms.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
@@ -167,8 +140,8 @@ object BpeTrain {
       }
       // argmax with the deterministic tie-break: count desc, then (l, r)
       // byte-lexicographic — identical to the old orderBy(cnt desc, l, r)
-      val top: Option[((String, String), Long)] = if (driverArgmax) {
-        val partials = base.as[(Seq[String], Long)].rdd.mapPartitions { it =>
+      if (driverArgmax) {
+        val partials = frame.as[(Seq[String], Long)].rdd.mapPartitions { it =>
           val m = scala.collection.mutable.HashMap.empty[(String, String), Long]
           it.foreach { case (syms0, c) =>
             var syms = syms0.toIndexedSeq
@@ -201,18 +174,44 @@ object BpeTrain {
             distributedTop()
         }
       } else distributedTop()
-      top match {
-        case None => done = true
-        case Some(((_, _), cnt)) if cnt < 2 => done = true
-        case Some(((l, r), cnt)) =>
-          merges += Merge(k, l, r, cnt)
-          pending = (l, r) :: pending
-          // fold every 8 merges: the closure applies pending merges
-          // either way, folding only bounds per-row closure work — the
-          // cadence cannot affect the counts
-          if (k % 8 == 0) fold()
-          k += 1
-      }
+    }
+    if (nMerges < 1) return Seq.empty
+    var (base, top) = graft.Materialize.scanned(words.select($"word", $"c")
+      .as[(String, Long)]
+      .map { case (w, c) => (symbols(w), c) }
+      .toDF("syms", "c"))(topPair(_, Nil))
+    // pending merges since the last checkpoint: applied in-closure by the
+    // count pass, folded into the frame every few merges so the closure
+    // stays small and lineage flat
+    var pending = List.empty[(String, String)]
+    def fold(): Unit = if (pending.nonEmpty) {
+      val ms = pending.reverse
+      val next = base.as[(Seq[String], Long)]
+        .map { case (syms, c) =>
+          var s = syms.toIndexedSeq
+          ms.foreach { case (l, r) => s = applyMerge(s, l, r) }
+          (s, c)
+        }
+        .toDF("syms", "c")
+        .localCheckpoint(true)
+      base.unpersist()
+      base = next
+      pending = Nil
+    }
+    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+    var k = 1
+    var done = false
+    while (!done) top match {
+      case Some(((l, r), cnt)) if cnt >= 2 =>
+        merges += Merge(k, l, r, cnt)
+        pending = (l, r) :: pending
+        // fold every 8 merges: the closure applies pending merges
+        // either way, folding only bounds per-row closure work — the
+        // cadence cannot affect the counts
+        if (k % 8 == 0) fold()
+        k += 1
+        if (k <= nMerges) top = topPair(base, pending.reverse) else done = true
+      case _ => done = true
     }
     base.unpersist()
     merges.toSeq
@@ -226,17 +225,20 @@ object BpeTrain {
     syms.length
   }
 
+  /** The word histogram (`word`, `c`) of a corpus text column: its
+    * lowercase `[a-z]+` runs.
+    */
+  def wordCounts(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(explode(expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("c"))
+
   /** Train on a corpus text column: ONE corpus scan builds the word
     * histogram; the loop runs on the histogram only.
     */
   def trainOnCorpus(spark: SparkSession, docs: DataFrame, textCol: String,
                     nMerges: Int): DataFrame = {
     import spark.implicits._
-    val words = docs
-      .select(explode(expr(s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("c"))
-    val merges = train(spark, words, nMerges)
-    merges.toDF()
+    train(spark, wordCounts(docs, textCol), nMerges).toDF()
       .select($"rank", $"left", $"right",
         concat($"left", $"right").as("merged"), $"pairCount".as("pair_count"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize.scanned
 import graft.functions.{MaxCosineExpr, TextFunctions}
 
 /** The north-star pipeline COMPOSED end-to-end — the job a pre-training
@@ -19,9 +20,8 @@ import graft.functions.{MaxCosineExpr, TextFunctions}
   *                         exact verify at [[NearDupCosine]], connected
   *                         components, keep min id per component);
   *   3. DECONTAMINATION  — [[decontaminate]] against the [[EvalSet]];
-  *   4. QUALITY          — q134's Newton-trained classifier on
-  *                         [[QualityClassifier.weakLabels]], keep
-  *                         [[QualityClassifier.passes]];
+  *   4. QUALITY          — [[QualityClassifier.trainWeak]] (q134's
+  *                         model), keep [[QualityClassifier.passes]];
   *   5. PACKING          — [[packingPlan]] over the final survivors.
   *
   * Scale shape: every stage is linear scans + key-equi joins (the
@@ -39,8 +39,13 @@ import graft.functions.{MaxCosineExpr, TextFunctions}
   */
 object CurationPipeline {
 
-  private val CopyOff = 1000000000000000L
-  private val TwinOff = 2000000000000000L
+  /** The planted-row id layout: a planted row takes its base row's id
+    * plus a multiple of this offset, far above any fixture id. The query
+    * corpora (`Text.plantedDocs`, `Vector.plantedCorpus`) put each twin
+    * at +1×; the crawl ([[plantedCrawl]]) puts exact copies at +1× and
+    * twins at +2×.
+    */
+  val PlantedIdOffset = 1000000000000000L
 
   /** Cosine at or above which two embeddings are near-duplicates. */
   val NearDupCosine = 0.95
@@ -64,24 +69,25 @@ object CurationPipeline {
     transform(v, (x, i) => x + lit(0.25) * element_at(v, pmod(i + 1, size(v)) + 1))
 
   /** The crawl corpus: base docs (+vectors where the fixture has them),
-    * exact copies of every 7th doc at id+1e15, near-dup twins of every
-    * 4th at id+2e15 ([[twinText]]; [[twinVector]] when the base has a
-    * vector).
+    * exact copies of every 7th doc at id + [[PlantedIdOffset]], near-dup
+    * twins of every 4th at id + 2·[[PlantedIdOffset]] ([[twinText]];
+    * [[twinVector]] when the base has a vector).
     */
   def plantedCrawl(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"),
       col("source"))
     val copies = docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + CopyOff).as("doc_id"), col("text"), col("source"))
+      .select((col("doc_id") + PlantedIdOffset).as("doc_id"), col("text"), col("source"))
     val twins = docs.filter(col("doc_id") % 4 === 0)
-      .select((col("doc_id") + TwinOff).as("doc_id"),
+      .select((col("doc_id") + 2 * PlantedIdOffset).as("doc_id"),
         twinText(col("text")).as("text"), col("source"))
     val vecs = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
     val vecCopies = vecs.filter(col("vec_id") % 7 === 0)
-      .select((col("vec_id") + CopyOff).as("vec_id"), col("v"))
+      .select((col("vec_id") + PlantedIdOffset).as("vec_id"), col("v"))
     val vecTwins = vecs.filter(col("vec_id") % 4 === 0)
-      .select((col("vec_id") + TwinOff).as("vec_id"), twinVector(col("v")).as("v"))
+      .select((col("vec_id") + 2 * PlantedIdOffset).as("vec_id"),
+        twinVector(col("v")).as("v"))
     (docs.unionByName(copies).unionByName(twins),
       vecs.unionByName(vecCopies).unionByName(vecTwins))
   }
@@ -126,7 +132,6 @@ object CurationPipeline {
         EvalShingleN)
       .filter(inEval(col("shingle")))
       .select(id).distinct()
-    // consumed once, by the anti-join below — no checkpoint
     val drop = vecContam.unionByName(textContam).distinct()
       .unionByName(keep.filter(id < EvalIdMax))
     keep.join(drop, Seq("doc_id"), "left_anti")
@@ -167,55 +172,39 @@ object CurationPipeline {
   def runDetailed(s: SparkSession, d: String): Run = {
     import s.implicits._
     val (docs0, vecs0) = plantedCrawl(s, d)
-    // LAZY checkpoint + immediate count: the count's full scan
-    // materializes the checkpoint blocks, so checkpoint-then-count is ONE
-    // job instead of two (§1.2 fewer passes; the same fusion the CC loop
-    // uses for its convergence probe). Applied to every checkpoint whose
-    // next operation is its own full-scan count.
-    val docs = docs0.localCheckpoint(false)
     val vecs = vecs0.localCheckpoint(true)
-    val n0 = docs.count()
+    val (docs, n0) = scanned(docs0)(_.count())
 
     // ---- 1. exact dedup
-    val keepExact = Dedup.keepMinIdPerText(docs).localCheckpoint(false)
-    val n1 = keepExact.count()
+    val (keepExact, n1) = scanned(Dedup.keepMinIdPerText(docs))(_.count())
 
     // ---- 2. embedding near-dup at the production recall target (q148):
     // survivors' vectors only — banded LSH candidates, exact verify,
     // CC, keep min id per component
-    val v1 = vecs.join(keepExact.withColumnRenamed("doc_id", "vec_id"),
-      Seq("vec_id"), "left_semi").localCheckpoint(false)
-    val (b, t) = Similarity.lshParams(v1.count(), NearDupCosine)
+    val (v1, nVecs) = scanned(vecs.join(keepExact.withColumnRenamed("doc_id", "vec_id"),
+      Seq("vec_id"), "left_semi"))(_.count())
+    val (b, t) = Similarity.lshParams(nVecs, NearDupCosine)
     val pairs = Similarity
       .lshNearDupPairs(v1, "vec_id", "v", NearDupCosine, nPlanes = b, nTables = t)
       .select($"a_id", $"b_id")
     val cc = Dedup.connectedComponents(pairs, "a_id", "b_id")
-    // dropNear is consumed exactly once (the anti-join below, computed
-    // during keepNear's checkpoint) — an eager checkpoint of it was one
-    // pure-overhead materialization job (§1.2: fewer passes)
     val dropNear = cc.filter($"id" =!= $"component").select($"id".as("doc_id"))
-    val keepNear = keepExact.join(dropNear, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
-    val n2 = keepNear.count()
+    val (keepNear, n2) =
+      scanned(keepExact.join(dropNear, Seq("doc_id"), "left_anti"))(_.count())
 
     // ---- 3. decontamination
     val eval = evalSet(docs, vecs)
-    val keepClean = decontaminate(keepNear,
+    val (keepClean, n3) = scanned(decontaminate(keepNear,
       docs.join(keepNear, Seq("doc_id"), "left_semi"),
       v1.withColumnRenamed("vec_id", "doc_id").join(keepNear, Seq("doc_id"), "left_semi"),
-      eval).localCheckpoint(false)
-    val n3 = keepClean.count()
+      eval))(_.count())
 
-    // ---- 4. quality: q134's weak labels + 5 Newton scans
-    val dim = 64
-    val feats = QualityClassifier.featurize(
-      QualityClassifier.weakLabels(docs.join(keepClean, Seq("doc_id"), "left_semi")),
-      "text", dim).localCheckpoint(true)
-    val model = QualityClassifier.trainNewton(feats, "f", "y", dim, iters = 5)
-    val keepQual = feats
+    // ---- 4. quality: q134's model
+    val (feats, model) =
+      QualityClassifier.trainWeak(docs.join(keepClean, Seq("doc_id"), "left_semi"))
+    val (keepQual, n4) = scanned(feats
       .filter(QualityClassifier.passes(QualityClassifier.score($"f", model)))
-      .select($"doc_id", $"source", $"text").localCheckpoint(false)
-    val n4 = keepQual.count()
+      .select($"doc_id", $"source", $"text"))(_.count())
 
     // ---- 5. packing
     val n5 = packingPlan(keepQual).count()

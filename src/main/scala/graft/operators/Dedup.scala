@@ -269,32 +269,27 @@ object Dedup {
     * driver-side graph, no all-pairs; per-round lineage is truncated with
     * localCheckpoint so plans stay flat (on a real cluster prefer a
     * reliable `checkpoint` dir for fault tolerance across rounds). Each
-    * round is ONE job: the lazy checkpoint materializes inside the
-    * convergence probe, which is a 1-row aggregate — labels only ever
-    * decrease, so an unchanged label sum means a fixed point, no
-    * changed-row join and never a data collect. Small graphs (sized
-    * partition count 1, i.e. ≲1M edges, integral ids) skip the loop
-    * entirely: one executor-side mapPartitions union-find pass — the
+    * round is ONE job, the checkpoint and its convergence probe, a 1-row
+    * aggregate — labels only ever decrease, so an unchanged label sum
+    * means a fixed point, no changed-row join and never a data collect.
+    * Small graphs (sized partition count 1, i.e. ≲1M edges, integral
+    * ids) skip the loop entirely: one executor-side mapPartitions
+    * union-find pass — the
     * "contract locally, iterate globally" degenerate case where local
     * IS everything.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50, localThresholdEdges: Long = 500000L): DataFrame = {
     val spark = edges.sparkSession
-    // compute the candidate graph once, not per round; LAZY checkpoint —
-    // the sizing count below fully materializes it, so checkpoint + count
-    // is ONE job instead of two (r16 §1.2; same fusion as the loop's
-    // convergence probe)
-    val sym = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .union(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .localCheckpoint(false)
-    // Size the per-round shuffles from the materialized edge count: the
-    // label table is ≤ |V| ≤ 2|E| rows per round, so tiny graphs run on a
-    // few partitions (micro-job latency, not 32-way shuffles) while big
-    // graphs keep full parallelism. AQE is off inside the loop — its
-    // per-stage re-planning barriers cost more than they save on
-    // fixed-size rounds.
-    val nEdges = sym.count()
+    // compute the candidate graph once, not per round, and size the
+    // per-round shuffles from its edge count: the label table is
+    // ≤ |V| ≤ 2|E| rows per round, so tiny graphs run on a few partitions
+    // (micro-job latency, not 32-way shuffles) while big graphs keep full
+    // parallelism. AQE is off inside the loop — its per-stage re-planning
+    // barriers cost more than they save on fixed-size rounds.
+    val (sym, nEdges) = graft.Materialize.scanned(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+        .union(edges.select(col(dstCol).as("u"), col(srcCol).as("v"))))(_.count())
     val p = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (nEdges / math.max(localThresholdEdges, 500000L)).toInt + 1))
     val integralIds = sym.schema.fields.forall(f =>
@@ -375,10 +370,8 @@ object Dedup {
           .select(df("id").as("id"),
             coalesce(col("__pc"), df("component")).as("component"))
       }
-      val next = jump(half).localCheckpoint(eager = false)
-      // one job: materializes the checkpoint AND probes convergence —
       // labels are monotone non-increasing, so sum unchanged ⇔ fixed point
-      val s = labelSum(next)
+      val (next, s) = graft.Materialize.scanned(jump(half))(labelSum)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       // the superseded round's checkpointed blocks are dead the moment

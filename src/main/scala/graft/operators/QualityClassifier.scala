@@ -65,6 +65,18 @@ object QualityClassifier {
 
   case class Model(weights: Seq[Double], bias: Double, losses: Seq[Double])
 
+  /** The quality model of q134 and the pipelines: [[weakLabels]] of
+    * `docs`' `text`, 64-wide hashed bag-of-words features, 5 Newton
+    * scans ([[trainNewton]] — at 100 TB the iteration count IS the
+    * corpus-scan count). Returns the labeled feature frame (column `f`),
+    * materialized by the trainer's first scan, and the model.
+    */
+  def trainWeak(docs: DataFrame): (DataFrame, Model) = {
+    val dim = 64
+    graft.Materialize.scanned(featurize(weakLabels(docs), "text", dim))(
+      trainNewton(_, "f", "y", dim, iters = 5))
+  }
+
   /** Train on a DataFrame carrying features `fCol` (array<double> of
     * length `dim`) and label `yCol` (0.0/1.0). Each iteration computes
     * margin m = w·x + b, p = σ(m), and reduces the full-batch gradient

@@ -67,16 +67,12 @@ object Search {
     // query's terms BEFORE the aggregate (r15: the full-vocabulary
     // aggregate shuffled every corpus term to score a handful — §2.3;
     // tf/df for the scored terms are identical)
-    // lazy checkpoint: the df-rollup broadcast build is its first
-    // consumer and scans it fully, materializing the blocks inside the
-    // scoring query's own job instead of a separate eager pass (r16)
-    val tf = termFrequencies(docs, idCol, textCol, Some(qTerms))
-      .localCheckpoint(false)
     val stats = docs
       .selectExpr(s"regexp_count($textCol, '\\\\S+') AS __n")
       .agg(count(lit(1)).cast("double").as("n_docs"),
         avg(col("__n").cast("double")).as("avgdl"))
-    bm25FromTf(tf, stats, qTerms, idCol, k1, b)
+    graft.Materialize.shared(termFrequencies(docs, idCol, textCol, Some(qTerms)))(
+      bm25FromTf(_, stats, qTerms, idCol, k1, b))
   }
 
   /** The BM25 scoring pipeline over an ALREADY-MATERIALIZED

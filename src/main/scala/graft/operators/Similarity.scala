@@ -73,13 +73,10 @@ object Similarity {
     */
   def trainCentroids(emb: DataFrame, idCol: String, vecCol: String,
       nCells: Int, iters: Int, sampleCap: Int = 1 << 14): Array[(Array[Double], Double)] = {
-    // lazy checkpoint + sizing count in ONE job (r16 §1.2); the sample,
-    // when thinning applies, gets its own small eager checkpoint so the
-    // per-iteration scans stay sample-sized
-    val all = withNorm(emb, idCol, vecCol).filter(col("na") > 0.0)
-      .select(col("a_id"), col("va"), col("na"))
-      .localCheckpoint(false)
-    val total = all.count()
+    // the sample, when thinning applies, gets its own small eager
+    // checkpoint so the per-iteration scans stay sample-sized
+    val (all, total) = graft.Materialize.scanned(withNorm(emb, idCol, vecCol)
+      .filter(col("na") > 0.0).select(col("a_id"), col("va"), col("na")))(_.count())
     val n =
       if (total <= sampleCap) all // scanned once per iteration, not recomputed
       else {

@@ -3,8 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Materialize.{scanned, shared}
 import graft.functions.TextFunctions._
 import graft.operators.{CurationPipeline, Dedup, QualityClassifier}
+import graft.operators.CurationPipeline.PlantedIdOffset
 import QueryDefs._
 
 /** LLM-pipeline text surface over `documents` (north_star): dedup (exact /
@@ -86,29 +88,29 @@ object Text {
     import s.implicits._
     // the index is read by the size rollup, the optional DF filter and
     // BOTH self-join sides: tokenize the corpus once, not four times
-    val shingles = explodedWordShingles(
-      Tables.documents(s, d), Seq("doc_id", "source"), "text", 3)
-      .localCheckpoint(false) // materializes inside the first consumer's stage
-    val sz = shingles.groupBy($"doc_id", $"source").agg(count(lit(1)).as("sz"))
-    val ex = shingles.join(sz, Seq("doc_id", "source"))
-    val indexed = maxDocFreq match {
-      case None => ex
-      case Some(tau) =>
-        // DF per (source, shingle); drop index entries above the cap
-        val dfreq = shingles.groupBy($"source", $"shingle")
-          .agg(count(lit(1)).as("__df"))
-          .filter($"__df" <= tau)
-          .select($"source", $"shingle")
-        ex.join(dfreq, Seq("source", "shingle"))
+    shared(explodedWordShingles(
+        Tables.documents(s, d), Seq("doc_id", "source"), "text", 3)) { shingles =>
+      val sz = shingles.groupBy($"doc_id", $"source").agg(count(lit(1)).as("sz"))
+      val ex = shingles.join(sz, Seq("doc_id", "source"))
+      val indexed = maxDocFreq match {
+        case None => ex
+        case Some(tau) =>
+          // DF per (source, shingle); drop index entries above the cap
+          val dfreq = shingles.groupBy($"source", $"shingle")
+            .agg(count(lit(1)).as("__df"))
+            .filter($"__df" <= tau)
+            .select($"source", $"shingle")
+          ex.join(dfreq, Seq("source", "shingle"))
+      }
+      val a = indexed.select($"source", $"doc_id".as("a_id"), $"sz".as("sza"), $"shingle")
+      val b = indexed.select($"source".as("src_b"), $"doc_id".as("b_id"), $"sz".as("szb"),
+        $"shingle".as("sh_b"))
+      a.join(b, $"source" === $"src_b" && $"shingle" === $"sh_b" && $"a_id" < $"b_id")
+        .groupBy($"source", $"a_id", $"b_id", $"sza", $"szb")
+        .agg(count(lit(1)).as("common"))
+        .select($"source", $"a_id", $"b_id",
+          round($"common".cast("double") / ($"sza" + $"szb" - $"common"), 6).as("jaccard"))
     }
-    val a = indexed.select($"source", $"doc_id".as("a_id"), $"sz".as("sza"), $"shingle")
-    val b = indexed.select($"source".as("src_b"), $"doc_id".as("b_id"), $"sz".as("szb"),
-      $"shingle".as("sh_b"))
-    a.join(b, $"source" === $"src_b" && $"shingle" === $"sh_b" && $"a_id" < $"b_id")
-      .groupBy($"source", $"a_id", $"b_id", $"sza", $"szb")
-      .agg(count(lit(1)).as("common"))
-      .select($"source", $"a_id", $"b_id",
-        round($"common".cast("double") / ($"sza" + $"szb" - $"common"), 6).as("jaccard"))
   }
 
   /** q31/q32's planted document twins: every doc plus its
@@ -117,7 +119,7 @@ object Text {
     */
   private[graft] def plantedDocs(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    docs.unionByName(docs.select((col("doc_id") + lit(1000000000000000L)).as("doc_id"),
+    docs.unionByName(docs.select((col("doc_id") + lit(PlantedIdOffset)).as("doc_id"),
       CurationPipeline.twinText(col("text")).as("text")))
   }
 
@@ -136,24 +138,22 @@ object Text {
   val q31_minhash_bands: Q = (s, d) => {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
-    // lazy checkpoint: the exact-Jaccard aggregate below is its first
-    // consumer and scans it fully (r16 §1.2 — one job, not two)
-    val planted = plantedDocs(s, d).localCheckpoint(false)
     val nDocs = docs.count()
     // exact 3-shingle Jaccard of each (doc, twin) pair by the id rule
-    val sh = graft.functions.TextFunctions
-      .explodedWordShingles(planted, Seq("doc_id"), "text", 3)
-      .groupBy($"doc_id").agg(collect_set($"shingle").as("s"))
-    val a = sh.filter($"doc_id" < 1000000000000000L).select($"doc_id".as("id_a"), $"s".as("sa"))
-    val b = sh.filter($"doc_id" >= 1000000000000000L)
-      .select(($"doc_id" - 1000000000000000L).as("id_a"), $"s".as("sb"))
-    val nearTwins = a.join(b, "id_a")
-      .filter(size(array_intersect($"sa", $"sb")).cast("double")
-        / size(array_union($"sa", $"sb")) >= 0.8)
-      .select($"id_a").localCheckpoint(false)
-    val nNear = nearTwins.count()
+    val (planted, (nearTwins, nNear)) = scanned(plantedDocs(s, d)) { planted =>
+      val sh = graft.functions.TextFunctions
+        .explodedWordShingles(planted, Seq("doc_id"), "text", 3)
+        .groupBy($"doc_id").agg(collect_set($"shingle").as("s"))
+      val a = sh.filter($"doc_id" < PlantedIdOffset).select($"doc_id".as("id_a"), $"s".as("sa"))
+      val b = sh.filter($"doc_id" >= PlantedIdOffset)
+        .select(($"doc_id" - PlantedIdOffset).as("id_a"), $"s".as("sb"))
+      scanned(a.join(b, "id_a")
+        .filter(size(array_intersect($"sa", $"sb")).cast("double")
+          / size(array_union($"sa", $"sb")) >= 0.8)
+        .select($"id_a"))(_.count())
+    }
     val hits = Dedup.minHashCandidates(planted, "doc_id", "text")
-      .filter($"id_b" === $"id_a" + 1000000000000000L)
+      .filter($"id_b" === $"id_a" + PlantedIdOffset)
       .join(nearTwins, Seq("id_a"), "left_semi").count()
     Seq((nDocs, nNear, nNear == 0L || hits.toDouble / nNear >= 0.95))
       .toDF("n_docs", "n_near_twins", "recall_ok")
@@ -173,23 +173,23 @@ object Text {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val nDocs = docs.count()
-    val sims = Dedup.simHash(plantedDocs(s, d), "doc_id", "text")
-      .localCheckpoint(false) // the fused agg below materializes it
-    // both hamming gaps in one join + one aggregate, so the lazy
-    // signature checkpoint has a single full-scan consumer: each base
-    // doc looks up its twin (id + 1e15) and its adjacent base doc (id + 1)
-    val twin = lit(1000000000000000L)
-    val pairs = sims.filter($"doc_id" < twin).select($"simhash".as("xh"),
-        explode(array(
-          struct(($"doc_id" + twin).as("key"), lit(true).as("is_twin")),
-          struct(($"doc_id" + 1L).as("key"), lit(false).as("is_twin")))).as("p"))
-      .join(sims, $"p.key" === $"doc_id")
-      .filter($"p.is_twin" || $"doc_id" < twin)
-      .select($"p.is_twin".as("is_twin"), bit_count($"xh".bitwiseXOR($"simhash")).as("ham"))
-    val ham = pairs.agg(
-      count(when($"is_twin", 1)), avg(when($"is_twin", $"ham")),
-      avg(when($"is_twin", when($"ham" <= 20, 1.0).otherwise(0.0))),
-      count(when(!$"is_twin", 1)), avg(when(!$"is_twin", $"ham"))).head()
+    // both hamming gaps in one join + one aggregate over the signatures:
+    // each base doc looks up its twin (id + PlantedIdOffset) and its
+    // adjacent base doc (id + 1)
+    val (_, ham) = scanned(Dedup.simHash(plantedDocs(s, d), "doc_id", "text")) { sims =>
+      val twin = lit(PlantedIdOffset)
+      sims.filter($"doc_id" < twin).select($"simhash".as("xh"),
+          explode(array(
+            struct(($"doc_id" + twin).as("key"), lit(true).as("is_twin")),
+            struct(($"doc_id" + 1L).as("key"), lit(false).as("is_twin")))).as("p"))
+        .join(sims, $"p.key" === $"doc_id")
+        .filter($"p.is_twin" || $"doc_id" < twin)
+        .select($"p.is_twin".as("is_twin"), bit_count($"xh".bitwiseXOR($"simhash")).as("ham"))
+        .agg(
+          count(when($"is_twin", 1)), avg(when($"is_twin", $"ham")),
+          avg(when($"is_twin", when($"ham" <= 20, 1.0).otherwise(0.0))),
+          count(when(!$"is_twin", 1)), avg(when(!$"is_twin", $"ham"))).head()
+    }
     Seq((nDocs, ham.getLong(3),
       ham.getLong(0) == nDocs &&
         ham.getDouble(1) <= 10.0 && ham.getDouble(2) >= 0.98,
@@ -213,19 +213,19 @@ object Text {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val nDocs = docs.count()
-    val fp = plantedDocs(s, d)
-      .select($"doc_id", graft.functions.WinnowFingerprints($"text").as("fp"))
-      .localCheckpoint(false) // the pairs count below materializes it
-    val base = fp.filter($"doc_id" < 1000000000000000L)
-    val twin = fp.filter($"doc_id" >= 1000000000000000L)
-      .select(($"doc_id" - 1000000000000000L).as("doc_id"), $"fp".as("fp_t"))
     val elig = docs.filter(length($"text") >= 11).select($"doc_id")
     // eligible-pair and shared-fingerprint counts in ONE aggregate pass
     // (r16 — was a checkpoint plus two sequential count jobs; same longs)
-    val pc = base.join(twin, "doc_id")
-      .join(elig, Seq("doc_id"), "left_semi")
-      .agg(count(lit(1)),
-        sum(when(arrays_overlap($"fp", $"fp_t"), 1L).otherwise(0L))).head()
+    val (_, pc) = scanned(plantedDocs(s, d)
+        .select($"doc_id", graft.functions.WinnowFingerprints($"text").as("fp"))) { fp =>
+      val base = fp.filter($"doc_id" < PlantedIdOffset)
+      val twin = fp.filter($"doc_id" >= PlantedIdOffset)
+        .select(($"doc_id" - PlantedIdOffset).as("doc_id"), $"fp".as("fp_t"))
+      base.join(twin, "doc_id")
+        .join(elig, Seq("doc_id"), "left_semi")
+        .agg(count(lit(1)),
+          sum(when(arrays_overlap($"fp", $"fp_t"), 1L).otherwise(0L))).head()
+    }
     val nElig = pc.getLong(0)
     val nShared = if (pc.isNullAt(1)) 0L else pc.getLong(1)
     Seq((nDocs, nElig, nElig == nShared))
@@ -257,7 +257,6 @@ object Text {
     // decontamination re-checked with the EXACT kernel over the
     // survivors' vectors and the run's eval matrix. The three
     // certificate counts are independent, so they run side by side
-    import scala.concurrent.ExecutionContext.Implicits.global
     val Seq(nTwinVecs, contaminated, benchLeft) = graft.Parallel.all(
       () => Tables.embeddings(s, d).filter($"vec_id" % 4 === 0).count(),
       () => r.vecs
@@ -303,40 +302,36 @@ object Text {
     // vec_ids, so crawl has exactly that many rows); n_after_exact =
     // stage-1 rows_out (keep-min-id survivors ≡ count(DISTINCT md5(text)))
     val (nCrawl, nAfterExact) = r.stages("1_exact_dedup")
-    val docs = r.docs
-    val crawl = docs
-      .join(r.vecs.select($"vec_id".as("doc_id"), $"v"), Seq("doc_id"), "left")
-      .select($"doc_id", $"text", $"source", $"v").localCheckpoint(false)
     val (b, t) = Similarity.lshParams(nAfterExact, CurationPipeline.NearDupCosine)
     val cfg = graft.streaming.StreamingCuration.Config(
       nPlanes = b, nTables = t, eval = r.eval, model = r.model)
     // four id-range batches (base lower/upper, exact copies, twins) —
     // the id-ordered-arrival regime where keep-first ≡ keep-min-id
-    val baseMax = 1000000000000000L
-    val mid = crawl.filter($"doc_id" < baseMax)
-      .agg(max($"doc_id")).head().getLong(0) / 2
+    val (crawl, mid) = scanned(r.docs
+        .join(r.vecs.select($"vec_id".as("doc_id"), $"v"), Seq("doc_id"), "left")
+        .select($"doc_id", $"text", $"source", $"v")) {
+      _.filter($"doc_id" < PlantedIdOffset).agg(max($"doc_id")).head().getLong(0) / 2
+    }
     val storeDir = java.nio.file.Files
       .createTempDirectory("graft_q150_store").toString
     try {
     val splits = Seq(
       $"doc_id" < mid,
-      $"doc_id" >= mid && $"doc_id" < baseMax,
-      $"doc_id" >= baseMax && $"doc_id" < 2 * baseMax,
-      $"doc_id" >= 2 * baseMax)
-    val streamKept = splits.zipWithIndex.map { case (p, i) =>
+      $"doc_id" >= mid && $"doc_id" < PlantedIdOffset,
+      $"doc_id" >= PlantedIdOffset && $"doc_id" < 2 * PlantedIdOffset,
+      $"doc_id" >= 2 * PlantedIdOffset)
+    val (streamKept, nStream) = scanned(splits.zipWithIndex.map { case (p, i) =>
       graft.streaming.StreamingCuration
         .processBatch(crawl.filter(p), cfg, storeDir, batchId = i.toLong)
         .select($"doc_id")
-    }.reduce(_ unionByName _).localCheckpoint(false)
-    val nStream = streamKept.count()
+    }.reduce(_ unionByName _))(_.count())
     // stage-4 rows_out IS keepQual's count — no extra count job. The
     // stream-only survivors and the snapshot packing over the INCREMENTAL
     // survivors (which must reproduce the batch run's stage-5 window
     // count) are independent counts, so they run side by side
-    import scala.concurrent.ExecutionContext.Implicits.global
     val Seq(streamOnly, packedN) = graft.Parallel.all(
       () => streamKept.join(r.keepQual, Seq("doc_id"), "left_anti").count(),
-      () => CurationPipeline.packingPlan(docs.join(streamKept, Seq("doc_id"), "left_semi"))
+      () => CurationPipeline.packingPlan(r.docs.join(streamKept, Seq("doc_id"), "left_semi"))
         .count())
     val equalOk = nStream == r.stages("4_quality_filter")._2 && streamOnly == 0L
     Seq((nCrawl, nAfterExact, equalOk, packedN == r.stages("5_packing_windows")._2))
@@ -455,17 +450,17 @@ object Text {
     // the (doc, term) aggregate feeds BOTH the document-frequency rollup
     // and the final join: materialize it once — recomputing it would
     // repeat the tokenize AND its shuffle
-    val tf = toks.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // materializes inside the df rollup's stage
-    val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("__n"))
-    tf.join(dfreq, "term")
-      .crossJoin(broadcast(n))
-      .withColumn("__tfidf", $"tf" * log($"__n".cast("double") / $"df"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"doc_id").orderBy($"__tfidf".desc, $"term")))
-      .filter($"rn" <= 3)
-      .select($"doc_id", $"term", $"tf", $"df", rate($"__tfidf").as("tfidf"), $"rn")
+    shared(toks.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))) { tf =>
+      val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
+      tf.join(dfreq, "term")
+        .crossJoin(broadcast(n))
+        .withColumn("__tfidf", $"tf" * log($"__n".cast("double") / $"df"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"doc_id").orderBy($"__tfidf".desc, $"term")))
+        .filter($"rn" <= 3)
+        .select($"doc_id", $"term", $"tf", $"df", rate($"__tfidf").as("tfidf"), $"rn")
+    }
   }
 
   /** Train/eval contamination detection (north_star curation: the
@@ -480,15 +475,15 @@ object Text {
     import s.implicits._
     // the self-join reads the shingle table twice: materialize the
     // explode once instead of tokenizing the corpus on both sides
-    val sh = explodedWordShingles(
-      Tables.documents(s, d), Seq("doc_id", "source"), "text", 5)
-      .localCheckpoint(false) // materializes inside the self-join's first side
-    val a = sh.select($"source".as("src_a"), $"doc_id".as("a_id"), $"shingle")
-    val b = sh.select($"source".as("src_b"), $"doc_id".as("b_id"),
-      $"shingle".as("sh_b"))
-    a.join(b, $"shingle" === $"sh_b" && $"src_a" < $"src_b")
-      .groupBy($"src_a", $"a_id", $"src_b", $"b_id")
-      .agg(count(lit(1)).as("n_shared"))
+    shared(explodedWordShingles(
+        Tables.documents(s, d), Seq("doc_id", "source"), "text", 5)) { sh =>
+      val a = sh.select($"source".as("src_a"), $"doc_id".as("a_id"), $"shingle")
+      val b = sh.select($"source".as("src_b"), $"doc_id".as("b_id"),
+        $"shingle".as("sh_b"))
+      a.join(b, $"shingle" === $"sh_b" && $"src_a" < $"src_b")
+        .groupBy($"src_a", $"a_id", $"src_b", $"b_id")
+        .agg(count(lit(1)).as("n_shared"))
+    }
   }
 
   /** Bloom-prefiltered benchmark decontamination (north_star curation —
@@ -512,12 +507,12 @@ object Text {
     // parameter — 3 gives the fixture corpus enough genuine collisions
     // to hash-check the whole pipeline)
     val isEval = pmod($"doc_id", lit(13)) === 0
-    val evalSh = explodedWordShingles(docs.filter(isEval), Seq("doc_id"), "text", 3)
-      .select($"shingle").distinct().localCheckpoint(false) // sized below — count materializes it
     // size the filter from the measured eval shingle count (a cheap job
-    // over the checkpointed SMALL side); 1% fpp keeps the confirming
-    // join's probe waste negligible
-    val nEval = math.max(evalSh.count(), 1L)
+    // over the SMALL side); 1% fpp keeps the confirming join's probe
+    // waste negligible
+    val (evalSh, nEval) = scanned(
+      explodedWordShingles(docs.filter(isEval), Seq("doc_id"), "text", 3)
+        .select($"shingle").distinct())(sh => math.max(sh.count(), 1L))
     val bloom = evalSh.stat.bloomFilter("shingle", nEval, 0.01)
     val bloomB = s.sparkContext.broadcast(bloom)
     val mightHave = udf((sh: String) => sh != null && bloomB.value.mightContain(sh))
@@ -592,25 +587,25 @@ object Text {
     */
   val q98_bigram_surprisal: Q = (s, d) => {
     import s.implicits._
-    val bg = Tables.documents(s, d)
+    val bigrams = Tables.documents(s, d)
       .selectExpr("doc_id", "regexp_extract_all(lower(text), '[a-z]+', 0) AS w")
       .filter("size(w) >= 2")
       .selectExpr("doc_id",
         """explode(transform(sequence(1, size(w) - 1),
           |  i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))) AS b""".stripMargin)
       .select($"doc_id", $"b.w1", $"b.w2")
-      // three consumers (unigram counts, bigram counts, the scoring
-      // join): materialize the tokenize+explode once, not three times —
-      // lazily, inside the first consumer's stage (all three fully scan)
-      .localCheckpoint(false)
-    val uni = bg.groupBy($"w1").agg(count(lit(1)).as("c1"))
-    val bi = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
-    bg.join(bi, Seq("w1", "w2")).join(uni, Seq("w1"))
-      .withColumn("s", -log($"c2".cast("double") / $"c1"))
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        rate(avg($"s")).as("avg_surprisal"),
-        rate(max($"s")).as("max_surprisal"))
+    // three consumers (unigram counts, bigram counts, the scoring join):
+    // materialize the tokenize+explode once, not three times
+    shared(bigrams) { bg =>
+      val uni = bg.groupBy($"w1").agg(count(lit(1)).as("c1"))
+      val bi = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
+      bg.join(bi, Seq("w1", "w2")).join(uni, Seq("w1"))
+        .withColumn("s", -log($"c2".cast("double") / $"c1"))
+        .groupBy($"doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          rate(avg($"s")).as("avg_surprisal"),
+          rate(max($"s")).as("max_surprisal"))
+    }
   }
 
   /** End-to-end curation pipeline (north_star capstone): the composition
@@ -783,21 +778,21 @@ object Text {
     // (source, term) counts feed FOUR consumers (global dist, both
     // totals, the final join): materialize the vocabulary-sized frame
     // once so the corpus tokenize pass runs once, not four times
-    val st = Tables.documents(s, d)
-      .select($"source",
-        explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
-      .groupBy($"source", $"term").agg(count(lit(1)).as("cs"))
-      .localCheckpoint(false) // materializes inside the first consumer's stage
-    val gl = st.groupBy($"term").agg(sum($"cs").as("cg"))
-    val gtot = st.agg(sum($"cs").as("gt"))
-    val stot = st.groupBy($"source").agg(sum($"cs").as("ts"))
-    st.join(gl, "term")
-      .join(broadcast(stot), "source")
-      .crossJoin(broadcast(gtot))
-      .withColumn("kl_term",
-        ($"cs" / $"ts") * log(($"cs".cast("double") / $"ts") / ($"cg".cast("double") / $"gt")))
-      .groupBy($"source")
-      .agg(max($"ts").as("n_tokens"), rate(sum($"kl_term")).as("kl"))
+    shared(Tables.documents(s, d)
+        .select($"source",
+          explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
+        .groupBy($"source", $"term").agg(count(lit(1)).as("cs"))) { st =>
+      val gl = st.groupBy($"term").agg(sum($"cs").as("cg"))
+      val gtot = st.agg(sum($"cs").as("gt"))
+      val stot = st.groupBy($"source").agg(sum($"cs").as("ts"))
+      st.join(gl, "term")
+        .join(broadcast(stot), "source")
+        .crossJoin(broadcast(gtot))
+        .withColumn("kl_term",
+          ($"cs" / $"ts") * log(($"cs".cast("double") / $"ts") / ($"cg".cast("double") / $"gt")))
+        .groupBy($"source")
+        .agg(max($"ts").as("n_tokens"), rate(sum($"kl_term")).as("kl"))
+    }
   }
 
   /** Quality-classifier training + scoring (north_star text analysis —
@@ -828,17 +823,10 @@ object Text {
     */
   private[graft] val q134_kernel: Q = (s, d) => {
     import s.implicits._
-    val dim = 64
-    val labeled = QualityClassifier.weakLabels(
+    // the features feed the trainer AND the final scoring aggregate, so
+    // the tokenize+featurize pass runs once
+    val (feats, model) = QualityClassifier.trainWeak(
       Tables.documents(s, d).select($"doc_id", $"source", $"text"))
-    // feats feeds the trainer AND the final scoring aggregate —
-    // uncheckpointed, the tokenize+featurize pass ran twice; the lazy
-    // checkpoint materializes inside the trainer's first scan (r16)
-    val feats = QualityClassifier.featurize(labeled, "text", dim)
-      .localCheckpoint(false)
-    // Newton/IRLS: 5 corpus scans land past where 30 fixed-rate GD scans
-    // approached (iteration count IS the scan count at 100 TB)
-    val model = QualityClassifier.trainNewton(feats, "f", "y", dim, iters = 5)
     feats
       .withColumn("score", QualityClassifier.score($"f", model))
       .withColumn("pred", QualityClassifier.passes($"score").cast("double"))
@@ -881,25 +869,25 @@ object Text {
       .select($"doc_id", $"lang", $"source",
         explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("term"))
       .withColumn("b", substring(md5($"term"), 1, 2))
-    val db = toks.groupBy($"doc_id", $"lang", $"source", $"b")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // materializes inside the first consumer's stage
-    // BOTH distributions roll up from the per-doc bucket aggregate (sum
-    // of per-doc counts ≡ token counts — exact longs): raw = every
-    // token, target = the en slice
-    val stats = db.groupBy($"b")
-      .agg(sum($"n").as("cr"),
-        sum(when($"lang" === "en", $"n").otherwise(0L)).as("ct"))
-    val tot = stats.agg(sum($"cr").as("rt"), sum($"ct").as("tt"))
-    val ratio = stats
-      .crossJoin(broadcast(tot))
-      .select($"b", log((($"ct" + 1.0) / ($"tt" + 256.0)) /
-        (($"cr" + 1.0) / ($"rt" + 256.0))).as("lr"))
-    db.join(broadcast(ratio), "b")
-      .groupBy($"doc_id", $"lang", $"source")
-      .agg(sum($"n").cast("long").as("n_tok"),
-        // + 0.0 normalizes IEEE negative zero after rounding (DuckDB parity)
-        (rate(sum($"n" * $"lr") / sum($"n")) + lit(0.0)).as("w"))
+    shared(toks.groupBy($"doc_id", $"lang", $"source", $"b")
+        .agg(count(lit(1)).as("n"))) { db =>
+      // BOTH distributions roll up from the per-doc bucket aggregate (sum
+      // of per-doc counts ≡ token counts — exact longs): raw = every
+      // token, target = the en slice
+      val stats = db.groupBy($"b")
+        .agg(sum($"n").as("cr"),
+          sum(when($"lang" === "en", $"n").otherwise(0L)).as("ct"))
+      val tot = stats.agg(sum($"cr").as("rt"), sum($"ct").as("tt"))
+      val ratio = stats
+        .crossJoin(broadcast(tot))
+        .select($"b", log((($"ct" + 1.0) / ($"tt" + 256.0)) /
+          (($"cr" + 1.0) / ($"rt" + 256.0))).as("lr"))
+      db.join(broadcast(ratio), "b")
+        .groupBy($"doc_id", $"lang", $"source")
+        .agg(sum($"n").cast("long").as("n_tok"),
+          // + 0.0 normalizes IEEE negative zero after rounding (DuckDB parity)
+          (rate(sum($"n" * $"lr") / sum($"n")) + lit(0.0)).as("w"))
+    }
   }
 
   /** Tokenizer vocabulary induction (north_star tokenizer work): the top
@@ -925,11 +913,8 @@ object Text {
   val q140_bpe_train: Q = (s, d) => {
     import s.implicits._
     import graft.operators.BpeTrain
-    val words = Tables.documents(s, d)
-      .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // train's first full-scan pass materializes it
-    val merges = BpeTrain.train(s, words, 20)
+    val (words, merges) =
+      scanned(BpeTrain.wordCounts(Tables.documents(s, d), "text"))(BpeTrain.train(s, _, 20))
     val monotonicOk = merges.size < 2 ||
       merges.sliding(2).forall(p => p(0).pairCount >= p(1).pairCount)
     val ms = merges.map(m => (m.left, m.right))
@@ -969,15 +954,14 @@ object Text {
     import graft.operators.BpeTrain
     // dw feeds BOTH the training histogram and the final per-doc join —
     // uncheckpointed it tokenized + aggregated the corpus twice (once
-    // inside the merge loop's materialization, once in the final query);
-    // the lazy checkpoint materializes inside training's first pass (r16)
-    val dw = Tables.documents(s, d)
+    // inside the merge loop's materialization, once in the final query)
+    val (dw, (hist, merges)) = scanned(Tables.documents(s, d)
       .select($"doc_id", $"lang",
         explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-      .groupBy($"doc_id", $"lang", $"word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
-    val hist = dw.groupBy($"word").agg(sum($"cnt").as("c"))
-    val merges = BpeTrain.train(s, hist, 20).map(m => (m.left, m.right))
+      .groupBy($"doc_id", $"lang", $"word").agg(count(lit(1)).as("cnt"))) { dw =>
+      val hist = dw.groupBy($"word").agg(sum($"cnt").as("c"))
+      (hist, BpeTrain.train(s, hist, 20).map(m => (m.left, m.right)))
+    }
     val enc = hist.select($"word").as[String]
       .map(w => (w, BpeTrain.encodeCount(w, merges), w.length))
       .toDF("word", "ntok", "nchr")
@@ -1122,16 +1106,14 @@ object Text {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, d)
       .select(explode(expr("regexp_extract_all(text, '\\\\S+', 0)")).as("term"))
-    val exact = toks.groupBy($"term").agg(count(lit(1)).as("cnt"))
-      // feeds total, top-10, AND the bound check — materialized lazily
-      // inside the first consumer's full scan
-      .localCheckpoint(false)
+    // the exact counts feed the total, the top-10 and the bound check
+    val (exact, total) = scanned(toks.groupBy($"term").agg(count(lit(1)).as("cnt")))(
+      _.agg(sum($"cnt")).head().getLong(0))
     val skBytes = toks
       .agg(expr("count_min_sketch(term, 0.001d, 0.99d, 42)").as("sk"))
       .head().getAs[Array[Byte]](0)
     val cms = org.apache.spark.util.sketch.CountMinSketch
       .readFrom(new java.io.ByteArrayInputStream(skBytes))
-    val total = exact.agg(sum($"cnt")).head().getLong(0)
     val slack = math.ceil(0.001 * total).toLong
     val est = udf((t: String) => cms.estimateCount(t))
     exact

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.operators.CurationPipeline
+import graft.Materialize.scanned
+import graft.operators.{CurationPipeline, Similarity}
+import graft.operators.CurationPipeline.PlantedIdOffset
 import graft.functions.VectorFunctions._
 import QueryDefs._
 
@@ -54,21 +56,45 @@ object Vector {
       .select($"a_id", $"b_id".as("neighbor_id"), round($"cos", 6).as("cosine"), $"rn")
   }
 
-  /** q34/q42/q56/q102's contract corpus: the fixture vectors plus a
-    * deterministic near-twin ([[CurationPipeline.twinVector]]) of every
-    * FOURTH vector — a known-ground-truth
-    * planted-NN subset (the twin is each planted vector's exact global
-    * top-1: twin cosine ≈ 0.89–0.98 vs a ≤ ~0.6 background) at a 1.25×
-    * corpus, so the contract queries keep their kernels' scale posture
-    * instead of doubling the input. DuckDB replays the construction
-    * exactly (`WHERE vec_id % 4 = 0` in the dup CTE).
+  /** The planted-near-dup corpus: the fixture vectors (as
+    * array<double>) plus, at id + [[CurationPipeline.PlantedIdOffset]],
+    * the [[CurationPipeline.twinVector]] of every `twinEvery`-th one
+    * (cos(v, twin) ≈ 0.89–0.98, each planted vector's exact global
+    * top-1, against a ≤ ~0.6 background: the fixture's raw embeddings
+    * model DISTINCT documents). The dedup queries (q119, q120, q128,
+    * q136, q148) twin every vector — the corpus a crawl-dedup actually
+    * sees; the ANN contract queries (q34, q42, q56, q102) twin every
+    * FOURTH, a known-ground-truth planted-NN subset at a 1.25× corpus,
+    * so they keep their kernels' scale posture instead of doubling the
+    * input. DuckDB replays both constructions exactly.
     */
-  private[graft] def contractCorpus(s: SparkSession, d: String): DataFrame = {
+  private[graft] def plantedCorpus(s: SparkSession, d: String, twinEvery: Int): DataFrame = {
     val base = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
-    base.unionByName(base.filter(col("vec_id") % 4 === 0)
-      .select((col("vec_id") + lit(1000000000000000L)).as("vec_id"),
-        CurationPipeline.twinVector(col("v")).as("v")))
+    val twinned = if (twinEvery == 1) base else base.filter(col("vec_id") % twinEvery === 0)
+    base.unionByName(twinned.select((col("vec_id") + PlantedIdOffset).as("vec_id"),
+      CurationPipeline.twinVector(col("v")).as("v")))
+  }
+
+  /** A planted corpus' row count and how many of its rows are twins, in
+    * one pass (r15 — was two count jobs).
+    */
+  private def corpusAndTwinCounts(corpus: DataFrame): (Long, Long) = {
+    val nc = corpus.agg(count(lit(1)),
+      sum(when(col("vec_id") >= PlantedIdOffset, 1L).otherwise(0L))).head()
+    (nc.getLong(0), if (nc.isNullAt(1)) 0L else nc.getLong(1))
+  }
+
+  /** The twin pairs (i, i + [[CurationPipeline.PlantedIdOffset]]) of a
+    * planted `corpus` at exact cosine ≥ `threshold`, and their count:
+    * the linear twin subset of the exact pair graph
+    * ([[Similarity.verifyPairs]] on the id rule, never all-pairs).
+    */
+  private def verifiedTwins(corpus: DataFrame, threshold: Double): (DataFrame, Long) = {
+    val cand = corpus.filter(col("vec_id") < PlantedIdOffset)
+      .select(col("vec_id").as("a_id"), (col("vec_id") + PlantedIdOffset).as("b_id"))
+    scanned(Similarity.verifyPairs(corpus, "vec_id", "v", threshold, cand)
+      .select(col("a_id"), col("b_id")))(_.count())
   }
 
   /** Sign-LSH bucketing (16 hyperplanes), oracled on its CONTRACT (the
@@ -84,21 +110,15 @@ object Vector {
     */
   val q34_ann_lsh_buckets: Q = (s, d) => {
     import s.implicits._
-    val b = contractCorpus(s, d)
-      .select($"vec_id", lshBucket($"v", 16, 64).as("bucket"))
-      .localCheckpoint(false) // the nc agg below materializes it (r16)
-    // corpus + twin counts in one pass (r15 — was two count jobs)
-    val nc = b.agg(count(lit(1)),
-      sum(when($"vec_id" >= 1000000000000000L, 1L).otherwise(0L))).head()
-    val n = nc.getLong(0)
-    val nTwins = if (nc.isNullAt(1)) 0L else nc.getLong(1)
+    val (b, (n, nTwins)) = scanned(plantedCorpus(s, d, 4)
+      .select($"vec_id", lshBucket($"v", 16, 64).as("bucket")))(corpusAndTwinCounts)
     // s(s−1) stays integral (÷2 after the sum — Spark's `/` is a
     // double division, and the contract needs exact longs)
     val hist = b.groupBy($"bucket").agg(count(lit(1)).as("sz"))
       .agg(sum($"sz").as("total"),
         (sum($"sz" * ($"sz" - lit(1L))) / lit(2L)).cast("long").as("same_pairs")).head()
     val twinColl = b.as("x").join(b.as("y"),
-      col("x.vec_id") + lit(1000000000000000L) === col("y.vec_id") &&
+      col("x.vec_id") + PlantedIdOffset === col("y.vec_id") &&
         col("x.bucket") === col("y.bucket")).count()
     val nonTwinColl = hist.getLong(1) - twinColl
     val nonTwinPairs = n * (n - 1) / 2 - nTwins
@@ -123,29 +143,21 @@ object Vector {
     */
   val q42_ann_topk: Q = (s, d) => {
     import s.implicits._
-    val corpus = contractCorpus(s, d).localCheckpoint(false) // the nc agg below materializes it
-    // corpus + twin counts in one pass (r16 — was two count jobs; same
-    // longs, and the agg's full scan materializes the lazy checkpoint)
-    val nc = corpus.agg(count(lit(1)),
-      sum(when($"vec_id" >= 1000000000000000L, 1L).otherwise(0L))).head()
-    val n = nc.getLong(0)
-    val nTwins = if (nc.isNullAt(1)) 0L else nc.getLong(1)
-    val ann = graft.operators.Similarity
-      .annTopK(corpus, "vec_id", "v", k = 3, nPlanes = 8)
-      .select($"a_id", $"neighbor_id", $"rn").localCheckpoint(false)
+    val (corpus, (n, nTwins)) = scanned(plantedCorpus(s, d, 4))(corpusAndTwinCounts)
     // the three certificate counts fold into ONE pass over the
-    // checkpointed candidates (r15: they were three sequential count
-    // jobs — §1.2 fewer passes; conditional integer sums, same values)
-    val planted = ($"a_id" >= 1000000000000000L) ||
-      ($"a_id" % 4 === 0 && $"a_id" < 1000000000000000L)
-    val certs = ann.agg(
-      sum(when($"neighbor_id" === $"a_id" + 1000000000000000L, 1L)
-        .otherwise(0L)).as("hits3"),
-      sum(when($"rn" === 1 && planted, 1L).otherwise(0L)).as("answered1"),
-      sum(when($"rn" === 1 &&
-        ($"neighbor_id" === $"a_id" + 1000000000000000L ||
-          $"neighbor_id" === $"a_id" - 1000000000000000L), 1L)
-        .otherwise(0L)).as("hits1")).head()
+    // candidates (r15: they were three sequential count jobs — §1.2
+    // fewer passes; conditional integer sums, same values)
+    val planted = ($"a_id" >= PlantedIdOffset) ||
+      ($"a_id" % 4 === 0 && $"a_id" < PlantedIdOffset)
+    val (_, certs) = scanned(Similarity.annTopK(corpus, "vec_id", "v", k = 3, nPlanes = 8)
+      .select($"a_id", $"neighbor_id", $"rn"))(_.agg(
+        sum(when($"neighbor_id" === $"a_id" + PlantedIdOffset, 1L)
+          .otherwise(0L)).as("hits3"),
+        sum(when($"rn" === 1 && planted, 1L).otherwise(0L)).as("answered1"),
+        sum(when($"rn" === 1 &&
+          ($"neighbor_id" === $"a_id" + PlantedIdOffset ||
+            $"neighbor_id" === $"a_id" - PlantedIdOffset), 1L)
+          .otherwise(0L)).as("hits1")).head())
     // recall@3 over planted true-NN pairs: (i, i+1e15) by id rule;
     // precision@1 over answered PLANTED queries (partner = exact top-1)
     val hits3 = Option(certs.get(0)).map(_ => certs.getLong(0)).getOrElse(0L)
@@ -193,12 +205,11 @@ object Vector {
     * committed result is verified green at sf0.001/0.01/0.1.
     */
   val q119_neardup_production: Q = (s, d) => {
-    // lazy checkpoint + sizing count in one job (r16): the LSH chain then
-    // reads the planted union from cache instead of rebuilding it
-    val corpus = plantedCorpus(s, d).localCheckpoint(false)
-    val (b, t) = graft.operators.Similarity.lshParams(
-      corpus.count(), 0.95, targetRecall = 0.999999)
-    graft.operators.Similarity
+    // the LSH chain reads the planted union from cache instead of
+    // rebuilding it
+    val (corpus, n) = scanned(plantedCorpus(s, d, 1))(_.count())
+    val (b, t) = Similarity.lshParams(n, 0.95, targetRecall = 0.999999)
+    Similarity
       .lshNearDupPairs(corpus, "vec_id", "v", 0.95, nPlanes = b, nTables = t)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cosine"))
   }
@@ -211,19 +222,15 @@ object Vector {
     * construction and runs min-label propagation as a recursive CTE
     * (components here are tiny, so the fixpoint is cheap).
     */
-  val q120_neardup_cc_production: Q = (s, d) => {
-    import s.implicits._
-    // same lazy-checkpoint + sizing-count fusion as q119 (r16)
-    val corpus = plantedCorpus(s, d).localCheckpoint(false)
-    val (b, t) = graft.operators.Similarity.lshParams(
-      corpus.count(), 0.95, targetRecall = 0.999999)
-    val pairs = graft.operators.Similarity
-      .lshNearDupPairs(corpus, "vec_id", "v", 0.95, nPlanes = b, nTables = t)
-      .select($"a_id", $"b_id")
+  val q120_neardup_cc_production: Q = (s, d) => clusters(q119_neardup_production(s, d))
+
+  /** Near-dup clusters of a pair graph (a_id, b_id): each vector's
+    * component (its min reachable id) and the component's size.
+    */
+  private def clusters(pairs: DataFrame): DataFrame =
     graft.operators.Dedup.connectedComponents(pairs, "a_id", "b_id")
-      .withColumn("csize", count(lit(1)).over(Window.partitionBy($"component")))
-      .select($"id".as("vec_id"), $"component", $"csize")
-  }
+      .withColumn("csize", count(lit(1)).over(Window.partitionBy(col("component"))))
+      .select(col("id").as("vec_id"), col("component"), col("csize"))
 
   /** Trained two-level IVF under the EXACTNESS gate: with exhaustive
     * probes every index vector is scanned, so the k-means-trained
@@ -256,20 +263,21 @@ object Vector {
     * 0.99+, floor 0.90). DuckDB replays the corpus counts and pins the
     * boolean; AnnRecallSpec holds the floor against the exact kernel.
     */
-  val q56_ivf_topk: Q = (s, d) => {
+  val q56_ivf_topk: Q = (s, d) => twinRecall3(s, d, 0.90)((corpus, n) =>
+    Similarity.ivfTopK(corpus, "vec_id", "v", k = 3,
+      nCells = Similarity.ivfAutoCells(n, 4), nProbe = 4))
+
+  /** The twin recall@3 contract of an ANN top-3 `kernel` over the
+    * every-4th planted corpus: corpus and twin counts, k, and whether
+    * the kernel finds at least `floor` of the planted twins. The kernel
+    * gets the corpus' known count, so its auto geometry needn't recount.
+    */
+  private def twinRecall3(s: SparkSession, d: String, floor: Double)(
+      kernel: (DataFrame, Long) => DataFrame): DataFrame = {
     import s.implicits._
-    val corpus = contractCorpus(s, d).localCheckpoint(false) // the nc agg below materializes it
-    // corpus + twin counts in one pass (r15 — was two count jobs); the
-    // kernel's auto-cell rule gets the known count so it needn't recount
-    val nc = corpus.agg(count(lit(1)),
-      sum(when($"vec_id" >= 1000000000000000L, 1L).otherwise(0L))).head()
-    val n = nc.getLong(0)
-    val nTwins = if (nc.isNullAt(1)) 0L else nc.getLong(1)
-    val ivf = graft.operators.Similarity
-      .ivfTopK(corpus, "vec_id", "v", k = 3,
-        nCells = graft.operators.Similarity.ivfAutoCells(n, 4), nProbe = 4)
-    val hits3 = ivf.filter($"neighbor_id" === $"a_id" + 1000000000000000L).count()
-    Seq((n, nTwins, 3L, nTwins == 0L || hits3.toDouble / nTwins >= 0.90))
+    val (corpus, (n, nTwins)) = scanned(plantedCorpus(s, d, 4))(corpusAndTwinCounts)
+    val hits3 = kernel(corpus, n).filter($"neighbor_id" === $"a_id" + PlantedIdOffset).count()
+    Seq((n, nTwins, 3L, nTwins == 0L || hits3.toDouble / nTwins >= floor))
       .toDF("n_corpus", "n_twins", "k", "recall_ok")
   }
 
@@ -281,15 +289,8 @@ object Vector {
     * and aggregates only, rounds = cluster diameter. DuckDB-oracled via a
     * recursive min-reachable-id CTE over the all-pairs cosine graph.
     */
-  val q90_neardup_components: Q = (s, d) => {
-    import s.implicits._
-    val pairs = graft.operators.Similarity
-      .lshNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding", 0.40)
-      .select($"a_id", $"b_id")
-    graft.operators.Dedup.connectedComponents(pairs, "a_id", "b_id")
-      .withColumn("csize", count(lit(1)).over(Window.partitionBy($"component")))
-      .select($"id".as("vec_id"), $"component", $"csize")
-  }
+  val q90_neardup_components: Q = (s, d) =>
+    clusters(Similarity.lshNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding", 0.40))
 
   /** Symmetric int8 quantization of the embedding column — the standard
     * storage/serving compression for vector corpora (scale = amax/127 per
@@ -352,22 +353,10 @@ object Vector {
     * pins the boolean; exhaustive-probe ≡ brute-force equivalence stays
     * spec-locked in CepSimilaritySpec.
     */
-  val q102_ivf2_topk: Q = (s, d) => {
-    import s.implicits._
-    val corpus = contractCorpus(s, d).localCheckpoint(false) // the nc agg below materializes it
-    // corpus + twin counts in one pass (r15 — was two count jobs); the
-    // auto geometry gets the known count so the kernel needn't recount
-    val nc = corpus.agg(count(lit(1)),
-      sum(when($"vec_id" >= 1000000000000000L, 1L).otherwise(0L))).head()
-    val n = nc.getLong(0)
-    val nTwins = if (nc.isNullAt(1)) 0L else nc.getLong(1)
-    val (autoC, autoF) = graft.operators.Similarity.ivf2AutoCells(n)
-    val ivf2 = graft.operators.Similarity.ivfTopK2(
-      corpus, "vec_id", "v", k = 3,
+  val q102_ivf2_topk: Q = (s, d) => twinRecall3(s, d, 0.85) { (corpus, n) =>
+    val (autoC, autoF) = Similarity.ivf2AutoCells(n)
+    Similarity.ivfTopK2(corpus, "vec_id", "v", k = 3,
       nCoarse = autoC, nFinePerCell = autoF, nProbeCoarse = 4, nProbeFine = 8)
-    val hits3 = ivf2.filter($"neighbor_id" === $"a_id" + 1000000000000000L).count()
-    Seq((n, nTwins, 3L, nTwins == 0L || hits3.toDouble / nTwins >= 0.85))
-      .toDF("n_corpus", "n_twins", "k", "recall_ok")
   }
 
   /** Embedding dimensionality of the fixture corpus. */
@@ -568,28 +557,16 @@ object Vector {
     */
   val q128_semantic_dedup: Q = (s, d) => {
     import s.implicits._
-    // lazy checkpoint + count fusions throughout (r16 §1.2): each
-    // checkpoint's next operation is its own full-scan aggregate, which
-    // materializes the blocks in the same job
-    val corpus = plantedCorpus(s, d).localCheckpoint(false)
-    val n = corpus.count()
+    val (corpus, n) = scanned(plantedCorpus(s, d, 1))(_.count())
     // same kernel call as q128_kernel, fed the checkpointed corpus so
-    // the planted union isn't rebuilt for the certificate joins
-    val res = graft.operators.Similarity.semanticDedup(
-      corpus, "vec_id", "v",
-      nCells = graft.operators.Similarity.semanticAutoCells(n),
-      threshold = 0.9).localCheckpoint(false)
-    // row + distinct-id counts in one pass (r15 — was two count jobs)
-    val resAgg = res.agg(count(lit(1)), countDistinct($"vec_id")).head()
+    // the planted union isn't rebuilt for the certificate joins; row +
+    // distinct-id counts in one pass (r15 — was two count jobs)
+    val (res, resAgg) = scanned(Similarity.semanticDedup(corpus, "vec_id", "v",
+      nCells = Similarity.semanticAutoCells(n), threshold = 0.9))(
+      _.agg(count(lit(1)), countDistinct($"vec_id")).head())
     val partitionOk = resAgg.getLong(0) == n && resAgg.getLong(1) == n
-    val twinCand = corpus.filter($"vec_id" < 1000000000000000L)
-      .select($"vec_id".as("a_id"), ($"vec_id" + 1000000000000000L).as("b_id"))
-    val twins = graft.operators.Similarity
-      .verifyPairs(corpus, "vec_id", "v", 0.9, twinCand)
-      .select($"a_id", $"b_id").localCheckpoint(false)
-    val nTwins = twins.count()
+    val (twins, nTwins) = verifiedTwins(corpus, 0.9)
     val cells = res.select($"vec_id", array($"cell", $"cell2").as("pcs"), $"keep")
-    // consumed exactly once (the overlap count) — no checkpoint needed
     val twinCells = twins
       .join(cells.select($"vec_id".as("a_id"), $"pcs".as("pa"), $"keep".as("ka")), "a_id")
       .join(cells.select($"vec_id".as("b_id"), $"pcs".as("pb"), $"keep".as("kb")), "b_id")
@@ -618,8 +595,7 @@ object Vector {
   private[graft] val q128_kernel: Q = (s, d) => {
     // nCells = 0 → cells ∝ n (SemDeDup's own scale posture): the sf10
     // probe measured the old fixed-8-cell form at 360× cost on 100× data
-    graft.operators.Similarity.semanticDedup(
-      plantedCorpus(s, d), "vec_id", "v",
+    Similarity.semanticDedup(plantedCorpus(s, d, 1), "vec_id", "v",
       nCells = 0, threshold = 0.9)
   }
 
@@ -643,22 +619,14 @@ object Vector {
     */
   val q148_neardup_recall99: Q = (s, d) => {
     import s.implicits._
-    val corpus = plantedCorpus(s, d).localCheckpoint(false)
-    val n = corpus.count() // full scan — materializes the lazy checkpoint
-    val (b, t) = graft.operators.Similarity.lshParams(n, 0.95)
-    val found = graft.operators.Similarity
+    val (corpus, n) = scanned(plantedCorpus(s, d, 1))(_.count())
+    val (b, t) = Similarity.lshParams(n, 0.95)
+    val found = Similarity
       .lshNearDupPairs(corpus, "vec_id", "v", 0.95, nPlanes = b, nTables = t)
       .select($"a_id", $"b_id").localCheckpoint(true)
-    // the known dup structure: candidate (i, i + 1e15) for every base id,
-    // verified by exact cosine — the linear twin subset of the exact
-    // pair graph (fixture corpora have no non-twin pairs at 0.95, but
-    // nothing below depends on that)
-    val twinCand = corpus.filter($"vec_id" < 1000000000000000L)
-      .select($"vec_id".as("a_id"), ($"vec_id" + 1000000000000000L).as("b_id"))
-    val twins = graft.operators.Similarity
-      .verifyPairs(corpus, "vec_id", "v", 0.95, twinCand)
-      .select($"a_id", $"b_id").localCheckpoint(false)
-    val nTwins = twins.count()
+    // the known dup structure (fixture corpora have no non-twin pairs at
+    // 0.95, but nothing below depends on that)
+    val (twins, nTwins) = verifiedTwins(corpus, 0.95)
     val nHits = twins.join(found, Seq("a_id", "b_id"), "left_semi").count()
     // dedup the found graph: one survivor per component (min id), plus
     // every never-paired vector; m missed twin pairs keep m extra rows.
@@ -672,19 +640,6 @@ object Vector {
       nTwins == 0L || nHits.toDouble / nTwins >= 0.99,
       nKept <= budget))
       .toDF("n_corpus", "n_twin_pairs", "recall_ok", "kept_ok")
-  }
-
-  /** q119/q120/q128's shared planted-near-dup corpus: the fixture's raw
-    * embeddings have no pairs above cosine 0.7 (they model DISTINCT
-    * documents), so the dedup queries union each vector's
-    * [[CurationPipeline.twinVector]] (cos(v, twin) ≈ 0.97) — the corpus a
-    * crawl-dedup actually sees.
-    */
-  private[graft] def plantedCorpus(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d)
-      .select(col("vec_id"), expr("cast(embedding as array<double>)").as("v"))
-    base.unionByName(base.select((col("vec_id") + lit(1000000000000000L)).as("vec_id"),
-      CurationPipeline.twinVector(col("v")).as("v")))
   }
 
   /** Eval-set decontamination by embedding similarity (north_star — the
@@ -701,7 +656,7 @@ object Vector {
     */
   val q136_eval_decontam: Q = (s, d) => {
     import s.implicits._
-    val corpus = plantedCorpus(s, d)
+    val corpus = plantedCorpus(s, d, 1)
     val eval = corpus.filter($"vec_id" < 200)
       .select($"v").collect().map(_.getSeq[Double](0).toArray)
     corpus.filter($"vec_id" >= 200)

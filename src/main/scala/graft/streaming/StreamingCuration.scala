@@ -81,21 +81,6 @@ object StreamingCuration {
   final case class Config(nPlanes: Int, nTables: Int,
       eval: CurationPipeline.EvalSet, model: QualityClassifier.Model)
 
-  /** Small daemon pool that overlaps the batch's independent store
-    * writes with its compute jobs (guide §2.6 — Spark happily runs
-    * several jobs at once; actions are only sequential because the
-    * driver calls them sequentially). Every write is awaited before
-    * [[processBatch]] returns or throws, so the next batch's store reads
-    * — and any in-stream compaction or replay — see fully committed
-    * stores and no write still in flight.
-    */
-  private lazy val storeWriteEc: scala.concurrent.ExecutionContextExecutorService =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-store-write"); t.setDaemon(true); t
-        }))
-
   /** One micro-batch through all stages against the stores under
     * `storeDir`; returns the batch's surviving documents
     * (doc_id, source, text). `batchId` ≥ 0 keys every store write for
@@ -106,11 +91,9 @@ object StreamingCuration {
       batchId: Long = -1L): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    import scala.concurrent.Future
-    implicit val ec: scala.concurrent.ExecutionContext = storeWriteEc
-    val writes = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    val writes = scala.collection.mutable.ArrayBuffer.empty[scala.concurrent.Future[Unit]]
     def writeAsync(df: DataFrame, store: String): Unit =
-      writes += Future(writeStore(df, s"$storeDir/$store", batchId))
+      writes += graft.Parallel.start(writeStore(df, s"$storeDir/$store", batchId))
     val out = try {
       val docs = batch.select($"doc_id", $"text", $"source", $"v")
         .localCheckpoint(true)
@@ -151,7 +134,7 @@ object StreamingCuration {
         "table INT, bucket INT, vec_id BIGINT, batch_id BIGINT")
         .select($"table", $"bucket", $"vec_id")
       // both stage-2 stores read above — their writes overlap the
-      // candidate/CC work below ([[storeWriteEc]]). ALL post-exact vectors
+      // candidate/CC work below. ALL post-exact vectors
       // enter the stores, kept or near-dup-dropped — a rejected near-dup
       // still blocks its own future copies
       writeAsync(newVecs, "vec")

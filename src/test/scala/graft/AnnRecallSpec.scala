@@ -24,11 +24,11 @@ import graft.operators.{Dedup, Similarity}
 class AnnRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private val twinOff = 1000000000000000L
+  private val twinOff = graft.operators.CurationPipeline.PlantedIdOffset
 
   // ---- planted vector corpus + exact oracle ----
   private lazy val corpus = {
-    val c = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir).cache()
+    val c = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir, 1).cache()
     c.count()
     c
   }

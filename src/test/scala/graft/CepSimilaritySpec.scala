@@ -390,7 +390,7 @@ class CepSimilaritySpec extends AnyFunSuite {
   test("semantic dedup: drop rule re-derived from the exact pair kernel across probe cells") {
     import org.apache.spark.sql.functions._
     // the q119/q128 planted corpus: base ∪ perturbed twins (cos ≈ 0.97)
-    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir)
+    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir, 1)
     def probesOf(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Int]] =
       rows.map(r => r.getAs[Long]("vec_id") ->
         Set(r.getAs[Int]("cell"), r.getAs[Int]("cell2"))).toMap
@@ -550,7 +550,7 @@ class CepSimilaritySpec extends AnyFunSuite {
     // must still re-derive from the output's probe cells + the exact
     // pair kernel (assignment approximation moves WHICH cells, never
     // whether the rule was applied)
-    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir)
+    val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir, 1)
     val out = Similarity.semanticDedup(emb, "vec_id", "v",
       nCells = 300, threshold = 0.9).collect()
     assert(out.length == emb.count(), "one row per input vector")

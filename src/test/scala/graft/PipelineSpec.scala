@@ -111,9 +111,8 @@ class PipelineSpec extends AnyFunSuite {
     // batch run's keepClean corpus with the stage-4 recipe (deterministic
     // Newton → the same weights q149 used).
     val (b, t) = Similarity.lshParams(run.keepExact.count(), CurationPipeline.NearDupCosine)
-    val labeled = QualityClassifier.weakLabels(docs.join(run.keepClean, Seq("doc_id"), "left_semi"))
-    val model = QualityClassifier.trainNewton(
-      QualityClassifier.featurize(labeled, "text", 64), "f", "y", 64, iters = 5)
+    val (_, model) =
+      QualityClassifier.trainWeak(docs.join(run.keepClean, Seq("doc_id"), "left_semi"))
     val cfg = graft.streaming.StreamingCuration.Config(nPlanes = b, nTables = t,
       eval = CurationPipeline.evalSet(docs, vecs), model = model)
 
@@ -123,13 +122,14 @@ class PipelineSpec extends AnyFunSuite {
     // incremental keep-first coincides with the batch keep-min-id
     val rows = crawl.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getString(2), r.getSeq[Double](3)))
-    val baseIds = rows.map(_._1).filter(_ < 1000000000000000L).sorted
+    val off = CurationPipeline.PlantedIdOffset
+    val baseIds = rows.map(_._1).filter(_ < off).sorted
     val mid = baseIds(baseIds.length / 2)
     val splits = Seq(
       rows.filter(_._1 < mid),
-      rows.filter(r => r._1 >= mid && r._1 < 1000000000000000L),
-      rows.filter(r => r._1 >= 1000000000000000L && r._1 < 2000000000000000L),
-      rows.filter(_._1 >= 2000000000000000L))
+      rows.filter(r => r._1 >= mid && r._1 < off),
+      rows.filter(r => r._1 >= off && r._1 < 2 * off),
+      rows.filter(_._1 >= 2 * off))
     assert(splits.forall(_.nonEmpty), "all four batches must carry rows")
 
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -355,7 +355,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("Parallel.all returns or throws only after every started action has finished") {
-    import scala.concurrent.ExecutionContext.Implicits.global
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val e = intercept[IllegalStateException] {
       Parallel.all(() => throw new IllegalStateException("first"),

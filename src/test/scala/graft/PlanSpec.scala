@@ -82,7 +82,7 @@ class PlanSpec extends AnyFunSuite {
     // must stay equi-joins on bucket/cell keys. q42/q56's declared
     // queries now END in a one-row contract (LocalRelation), so the lock
     // targets the operator DFs the contracts execute.
-    val corpus = graft.queries.Vector.contractCorpus(spark, d)
+    val corpus = graft.queries.Vector.plantedCorpus(spark, d, 4)
     val opPlans = Seq(
       "annTopK" -> graft.operators.Similarity
         .annTopK(corpus, "vec_id", "v", k = 3, nPlanes = 8),

@@ -86,14 +86,12 @@ class QualityClassifierSpec extends AnyFunSuite {
     // the q134 weak-label recipe, but trained on 80% of docs (doc_id
     // hash split) and evaluated on the UNSEEN 20% — independent evidence
     // beyond the golden pin that the trained weights carry signal
-    val dim = 64
-    val labeled = QualityClassifier.weakLabels(
-      Tables.documents(spark, TestSpark.sfDir).select($"doc_id", $"text"))
-    val feats = QualityClassifier.featurize(labeled, "text", dim)
-    val train = feats.where(pmod($"doc_id", lit(5)) =!= 0)
-    val heldOut = feats.where(pmod($"doc_id", lit(5)) === 0)
-    // the q134 production trainer (Newton/IRLS) is what the gate guards
-    val model = QualityClassifier.trainNewton(train, "f", "y", dim, iters = 5)
+    val docs = Tables.documents(spark, TestSpark.sfDir).select($"doc_id", $"text")
+    // the q134 production recipe (Newton/IRLS) is what the gate guards
+    val (_, model) = QualityClassifier.trainWeak(docs.where(pmod($"doc_id", lit(5)) =!= 0))
+    val heldOut = QualityClassifier.featurize(
+      QualityClassifier.weakLabels(docs.where(pmod($"doc_id", lit(5)) === 0)), "text",
+      model.weights.size)
     // rank-based AUC (Mann-Whitney) over the held-out scores
     val scored = heldOut.withColumn("score", QualityClassifier.score($"f", model))
       .select($"y", $"score")

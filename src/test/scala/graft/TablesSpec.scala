@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -19,42 +17,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
-  /** Spark jobs that `f` starts on this thread. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID}"
-    val started = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "load")
-    try {
-      val out = f
-      // the listener bus delivers in order: once the marker job's start
-      // has arrived, so has the start of every job `f` ran
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!started.contains("marker") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(started.contains("marker"), "the marker job's start never arrived")
-      (out, started.size - 1)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   test("a second load of the same fixture file starts no job and reads the same table") {
     val dir = tempDir("graft_tables")
     Files.copy(Paths.get(TestSpark.sfDir, "nation.parquet"), Paths.get(dir, "nation.parquet"))
-    val (first, inferJobs) = jobsDuring(Tables.nation(spark, dir))
+    val (first, inferJobs) = TestSpark.jobsDuring(Tables.nation(spark, dir))
     assert(inferJobs >= 1, "the first load infers the schema")
-    val (second, jobs) = jobsDuring(Tables.nation(spark, dir))
+    val (second, jobs) = TestSpark.jobsDuring(Tables.nation(spark, dir))
     assert(jobs == 0, "the second load reuses the inferred schema")
     assert(second.schema == first.schema)
     assert(rows(second) == rows(first))
@@ -77,11 +47,11 @@ class TablesSpec extends AnyFunSuite with TempDirs {
       Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
     }
     place(base.withColumn("ts", unix_micros($"ts") * 1000L), "nanos")
-    val (nanos, _) = jobsDuring(Tables.events(spark, dir))
+    val (nanos, _) = TestSpark.jobsDuring(Tables.events(spark, dir))
     assert(nanos.schema("ts").dataType == TimestampType)
     assert(rows(nanos) == want)
     place(base.withColumn("ts", $"ts".cast("timestamp_ntz")), "ntz")
-    val (ntz, jobs) = jobsDuring(Tables.events(spark, dir))
+    val (ntz, jobs) = TestSpark.jobsDuring(Tables.events(spark, dir))
     assert(jobs >= 1, "the replaced file is inferred again")
     assert(ntz.schema("ts").dataType == TimestampType)
     assert(rows(ntz) == want)
@@ -104,12 +74,12 @@ class TablesSpec extends AnyFunSuite with TempDirs {
     assert(ev.schema("ts").dataType == TimestampType)
     assert(ev.collect().map(_.getAs[java.sql.Timestamp]("ts").toInstant.toString).toSeq ==
       Seq("2024-03-01T10:00:00.123456Z"))
-    assert(jobsDuring(Tables.events(asLong, dir))._2 == 0)
+    assert(TestSpark.jobsDuring(Tables.events(asLong, dir))._2 == 0)
     val strict = spark.newSession()
     strict.conf.set(key, "false")
     // without the setting Spark rejects nanos; a schema reused from the
     // other session would have read them as longs instead
-    val (res, jobs) = jobsDuring(
+    val (res, jobs) = TestSpark.jobsDuring(
       try Right(Tables.events(strict, dir)) catch { case e: Exception => Left(e) })
     assert(jobs >= 1, "the load under the other setting infers again")
     assert(res.isLeft, s"nanos read without $key: ${res.map(_.schema)}")

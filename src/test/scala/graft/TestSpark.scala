@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{Outcome, TestSuite}
 import scala.collection.mutable.ArrayBuffer
@@ -19,6 +22,34 @@ object TestSpark {
     org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
       .deleteOnExit(new org.apache.hadoop.fs.Path(dir))
     dir
+  }
+
+  /** Spark jobs that `f` starts on this thread. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID}"
+    val started = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "load")
+    try {
+      val out = f
+      // the listener bus delivers in order: once the marker job's start
+      // has arrived, so has the start of every job `f` ran
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!started.contains("marker") && System.nanoTime < deadline) Thread.sleep(10)
+      org.scalatest.Assertions.assert(started.contains("marker"), "the marker job's start never arrived")
+      (out, started.size - 1)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
 
