@@ -10,15 +10,15 @@ import org.apache.spark.sql.DataFrame
   * every partition of the frame, and at our scale the job count sets the
   * cost: round 16 fused the checkpoints of 22 queries into their first
   * full scan, about −21% on them (OPTIMIZATION_r16.md §3). The saving
-  * holds only when that first job scans the whole frame. A first consumer that reads part of
-  * it (`isEmpty`, a limit, a broadcast build of another frame, an
-  * adaptive stage materialized on its own, a later multi-batch plan)
-  * leaves partitions unmaterialized, and every later consumer recomputes
-  * the lineage: round 15 took q150 from 14.3 to 26.9 s that way
-  * (OPTIMIZATION_r15.md), a round-16 attempt from 12.0 to 17.2 s. So a
-  * lazy checkpoint is made only together with the scan that materializes
-  * it. Eager checkpoints stay at their call sites: they materialize at
-  * once and cannot fall into the trap.
+  * holds only when that first job scans the whole frame. A first
+  * consumer that reads part of it (`isEmpty`, a limit, a broadcast build
+  * of another frame, an adaptive stage materialized on its own, a later
+  * multi-batch plan) leaves partitions unmaterialized, and every later
+  * consumer recomputes the lineage: round 15 took q150 from 14.3 to
+  * 26.9 s that way (OPTIMIZATION_r15.md), a round-16 attempt from 12.0
+  * to 17.2 s. So a lazy checkpoint is made only together with the scan
+  * that materializes it. Eager checkpoints stay at their call sites: they
+  * materialize at once and cannot fall into the trap.
   */
 object Materialize {
 

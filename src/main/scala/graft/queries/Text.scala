@@ -119,7 +119,7 @@ object Text {
     */
   private[graft] def plantedDocs(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    docs.unionByName(docs.select((col("doc_id") + lit(PlantedIdOffset)).as("doc_id"),
+    docs.unionByName(docs.select((col("doc_id") + PlantedIdOffset).as("doc_id"),
       CurationPipeline.twinText(col("text")).as("text")))
   }
 
