@@ -211,9 +211,9 @@ object MatrixKernels {
     val g = math.max(1, math.ceil(math.sqrt(m.toDouble)).toInt)
     val dim = fine.headOption.map(_.length).getOrElse(0)
     val stride = math.max(1, m / g)
-    var coarse = Array.tabulate(g)(i => fine(math.min(i * stride, m - 1)).clone())
-    var cnorms = coarse.map(c => math.sqrt(c.map(x => x * x).sum))
-    var assign = new Array[Int](m)
+    val coarse = Array.tabulate(g)(i => fine(math.min(i * stride, m - 1)).clone())
+    val cnorms = coarse.map(c => math.sqrt(c.map(x => x * x).sum))
+    val assign = new Array[Int](m)
     var iter = 0
     while (iter < 5) {
       var i = 0

@@ -1,7 +1,7 @@
 package graft.functions
 
 import java.lang.reflect.{InvocationHandler, Method, Modifier, Proxy}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** FLIP-311 stored procedures, bridged reflectively — the fourth-plus
   * kind of user code after the scalar/table/aggregate/table-aggregate

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Text-analysis column builders for the LLM-pipeline surface (north_star):
   * tokenization, quality stats, language ID, fingerprinting. All are pure

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.col
 
 /** Minimal CEP — the reference's MATCH_RECOGNIZE / CEP library
@@ -26,6 +26,12 @@ import org.apache.spark.sql.functions.col
   * and streams through the scan instead of OOMing the task. Keys are
   * processed independently and distributed by the shuffle, so the
   * operator scales with executors.
+  *
+  * Every general pattern API here, its streaming twin and the SQL
+  * MATCH_RECOGNIZE rewrite run one backtracking walk ([[walk]]) under one
+  * anchor loop ([[anchorLoop]]). Only `abcWithin` keeps its O(1) register
+  * NFA ([[step]]): when symbols coincide (`A B+ B`) the register never
+  * emits where the walk backtracks and matches.
   */
 object Cep {
 
@@ -66,14 +72,13 @@ object Cep {
     * tighter memory, more rescan passes over the retained window; the
     * scan cost per event is O(retained/chunk) extra passes.
     */
-  private val ScanChunk = 4096
+  private[graft] val ScanChunk = 4096
 
   /** Bounded-memory scan of a key-clustered, (key, ts, id)-sorted
-    * partition iterator. `scanFn(events, openEnded, wm)` is one of the
-    * shared batch/streaming scans ([[scanAlts]], [[scanRelaxed]],
-    * [[scanFunnel]], [[scanMeasures]] via adapters): it emits every match
-    * RESOLVED given events up to the horizon and returns the resume
-    * index — the first position a future event could still affect.
+    * partition iterator. `scanFn(events, openEnded, wm)` is a scan over
+    * [[anchorLoop]]: it emits every match RESOLVED given events up to the
+    * horizon and returns the resume index — the first position a future
+    * event could still affect.
     * Everything before the resume index is evicted, so the buffer
     * retains at most one WITHIN window of events (plus a chunk): with
     * `wm` = the last buffered timestamp, any anchor older than
@@ -173,7 +178,11 @@ object Cep {
     def min: Int
     def max: Int
     def reluctant: Boolean
-    def accepts(e: Event): Boolean
+    /** Whether `e` may join this step; `partial` is the events the
+      * partial match has consumed so far, in match order (built only
+      * when an iterative condition asks for it).
+      */
+    def accepts(e: Event, partial: => IndexedSeq[Event]): Boolean
     /** Step label — the pattern variable for simple steps; used by the
       * SKIP TO FIRST/LAST `<variable>` strategies to locate the step.
       */
@@ -186,7 +195,7 @@ object Cep {
   case class PStep(sym: String, min: Int, max: Int,
       reluctant: Boolean = false) extends Step {
     require(min >= 0 && max >= min, s"bad quantifier {$min,$max}")
-    override def accepts(e: Event): Boolean = e.sym == sym
+    override def accepts(e: Event, partial: => IndexedSeq[Event]): Boolean = e.sym == sym
     override def name: String = sym
   }
 
@@ -198,7 +207,7 @@ object Cep {
       reluctant: Boolean = false)(val pred: Event => Boolean)
       extends Step {
     require(min >= 0 && max >= min, s"bad quantifier {$min,$max}")
-    override def accepts(e: Event): Boolean = pred(e)
+    override def accepts(e: Event, partial: => IndexedSeq[Event]): Boolean = pred(e)
   }
 
   /** Iterative condition ([U] flink-cep pattern/conditions/
@@ -206,16 +215,13 @@ object Cep {
     * predicate also sees the events already CONSUMED by the current
     * partial match (previous steps plus this step's earlier
     * repetitions, in match order), so conditions like "price above the
-    * first event's" are expressible. Supported by the relaxed pattern
-    * API ([[matchPatternRelaxed]]); the strict kernel rejects it
-    * up front.
+    * first event's" are expressible. Every pattern API takes it.
     */
   case class CtxStep(name: String, min: Int, max: Int,
       reluctant: Boolean = false)(
       val pred: (Event, IndexedSeq[Event]) => Boolean) extends Step {
-    override def accepts(e: Event): Boolean =
-      throw new UnsupportedOperationException(
-        s"iterative condition $name needs the partial-match context")
+    override def accepts(e: Event, partial: => IndexedSeq[Event]): Boolean =
+      pred(e, partial)
   }
 
   def whenCtx(name: String, min: Int = 1, max: Int = 1, reluctant: Boolean = false)(
@@ -253,211 +259,6 @@ object Cep {
   /** Resume AT the last row the named step matched (skipToLast). */
   case class SkipToLast(variable: String) extends AfterMatch
 
-  /** Next scan position after a match at [i, end) whose per-step
-    * consumption is `takes` — shared by the batch scan, the streaming
-    * process, and the SQL rewrite's measured walks. SKIP TO FIRST/LAST
-    * resolves the variable to the FIRST step bearing that name (a
-    * variable reused across several steps lands on its first step — a
-    * documented simplification of Flink's row-level mapping).
-    */
-  private[graft] def resumeAfter(skip: AfterMatch, i: Int, end: Int,
-      steps: IndexedSeq[Step], takes: Array[Int]): Int = {
-    def stepPos(v: String, last: Boolean): Int = {
-      val si = steps.indexWhere(_.name == v)
-      if (si < 0)
-        throw new IllegalArgumentException(
-          s"AFTER MATCH SKIP TO $v: no pattern step named $v")
-      if (takes(si) == 0)
-        throw new IllegalArgumentException(
-          s"AFTER MATCH SKIP TO $v: the variable matched no rows in this match")
-      var pos = i
-      var s = 0
-      while (s < si) { pos += takes(s); s += 1 }
-      val target = if (last) pos + takes(si) - 1 else pos
-      if (target == i) // resume on the match's own first row: infinite loop
-        throw new IllegalArgumentException(
-          s"AFTER MATCH SKIP TO $v would loop on the match's first row")
-      target
-    }
-    skip match {
-      case SkipPastLastRow   => end
-      case SkipToNextRow     => i + 1
-      case SkipToFirst(v)    => stepPos(v, last = false)
-      case SkipToLast(v)     => stepPos(v, last = true)
-    }
-  }
-
-  case class PMatch(key: Long, start_id: Long, end_id: Long,
-      start_ts: Long, end_ts: Long, n_events: Int)
-
-  /** Outcome of matching at one start position. */
-  private[graft] final val Fail = -1
-  private[graft] final val Pending = -2
-
-  /** Greedy backtracking match of `steps` against `syms` anchored at
-    * `start`, strict contiguity, all events within `withinMs` of the
-    * start event. Returns the exclusive end index, [[Fail]], or — when
-    * `openEnded` (streaming: events past the buffer may still arrive) —
-    * [[Pending]] if the outcome could change with more events: any step
-    * ran into the buffer end before exhausting its quantifier. Matches of
-    * zero length are failures. On success, `takesOut` (when non-null)
-    * receives how many events each step consumed — the MEASURES hook.
-    */
-  private[graft] def tryMatchAt(events: Array[Event], ts: Array[Long], start: Int,
-      steps: IndexedSeq[Step], withinMs: Long, openEnded: Boolean,
-      takesOut: Array[Int] = null): Int = {
-    val n = events.length
-    var pending = false
-    def rec(pos: Int, si: Int): Int = {
-      if (si == steps.length) return pos
-      val st = steps(si)
-      var cnt = 0
-      while (cnt < st.max && pos + cnt < n && st.accepts(events(pos + cnt)) &&
-        ts(pos + cnt) - ts(start) <= withinMs) cnt += 1
-      val atEdge = openEnded && pos + cnt == n && cnt < st.max
-      if (st.reluctant) {
-        // fewest-first: extend only when the remainder fails. A success
-        // is RESOLVED even at the buffer edge — a future event could
-        // only extend this step, which reluctant preference rejects —
-        // so the edge makes the outcome pending only when every take
-        // fails (more events could then enable a longer take).
-        var take = st.min
-        while (take <= cnt) {
-          val r = rec(pos + take, si + 1)
-          if (r >= 0) {
-            if (takesOut != null) takesOut(si) = take
-            return r
-          }
-          take += 1
-        }
-        if (atEdge) pending = true
-        return Fail
-      }
-      // greedy stopped at the buffer end with quantifier room left: a
-      // future event could extend this step into a MORE preferred
-      // (longer) match, so even a present success is unresolved
-      if (atEdge) pending = true
-      var take = cnt
-      while (take >= st.min) {
-        val r = rec(pos + take, si + 1)
-        if (r >= 0) {
-          if (takesOut != null) takesOut(si) = take
-          return r
-        }
-        take -= 1
-      }
-      Fail
-    }
-    val r = rec(start, 0)
-    if (pending) Pending
-    else if (r == start) Fail // empty match (all steps optional): no row consumed
-    else r
-  }
-
-  /** Sequence alternation — the PERMUTE / pattern-alternative form: try
-    * each alternative step sequence in order at `start`; the FIRST that
-    * matches wins (the SQL standard's leftmost-alternative preference —
-    * PERMUTE(A, B) ≡ (A B | B A) with the permutations in lexicographic
-    * order of the listed variables). A higher-preference alternative
-    * that is [[Pending]] makes the whole outcome Pending even when a
-    * later alternative matches on the buffered events: a future event
-    * could still complete the preferred alternative, and committing the
-    * lesser one now would emit a match a full-history scan would not.
-    * Returns (altIdx, end, takes) on success; (-1, Fail/Pending, null).
-    */
-  private[graft] def tryMatchAlts(events: Array[Event], ts: Array[Long], start: Int,
-      alts: IndexedSeq[IndexedSeq[Step]], withinMs: Long, openEnded: Boolean)
-      : (Int, Int, Array[Int]) = {
-    var ai = 0
-    while (ai < alts.length) {
-      val takes = new Array[Int](alts(ai).length)
-      tryMatchAt(events, ts, start, alts(ai), withinMs, openEnded, takes) match {
-        case Pending => return (-1, Pending, null)
-        case Fail    => ai += 1
-        case end     => return (ai, end, takes)
-      }
-    }
-    (-1, Fail, null)
-  }
-
-  /** Scan a time-sorted run of events: emit resolved matches, return the
-    * resume index — the position from which a future scan must re-run
-    * (streaming keeps events from there; batch ignores it). `wm` closes
-    * the WITHIN window for pending decisions: once `wm - ts(start) >
-    * withinMs`, no future event can join a match anchored at `start`.
-    */
-  private[graft] def scan(events: Array[Event], steps: IndexedSeq[Step],
-      withinMs: Long, skip: AfterMatch, openEnded: Boolean, wm: Long)
-      : (Seq[PMatch], Int) =
-    scanAlts(events, IndexedSeq(steps), withinMs, skip, openEnded, wm)
-
-  /** [[scan]] over alternative step sequences ([[tryMatchAlts]]'
-    * preference order); AFTER MATCH SKIP resumes against the matched
-    * alternative's own steps, so SKIP TO FIRST/LAST a permuted variable
-    * lands wherever THAT permutation placed it.
-    */
-  private[graft] def scanAlts(events: Array[Event], alts: IndexedSeq[IndexedSeq[Step]],
-      withinMs: Long, skip: AfterMatch, openEnded: Boolean, wm: Long)
-      : (Seq[PMatch], Int) = {
-    val ts = events.map(_.ts)
-    val out = scala.collection.mutable.ArrayBuffer.empty[PMatch]
-    var i = 0
-    var halt = false
-    while (i < events.length && !halt) {
-      val open = openEnded && wm - ts(i) <= withinMs
-      tryMatchAlts(events, ts, i, alts, withinMs, open) match {
-        case (_, Pending, _) => halt = true // everything from i stays buffered
-        case (_, Fail, _) => i += 1
-        case (ai, end, takes) =>
-          val e0 = events(i)
-          val e1 = events(end - 1)
-          out += PMatch(e0.key, e0.id, e1.id, e0.ts, e1.ts, end - i)
-          i = resumeAfter(skip, i, end, alts(ai), takes)
-      }
-    }
-    (out.toSeq, i)
-  }
-
-  /** Batch pattern match per key: greedy quantified steps with strict
-    * contiguity, WITHIN window, and the chosen AFTER MATCH SKIP strategy.
-    * Hash shuffle on key + external sort + WITHIN-bounded lookback scan
-    * ([[boundedScanPartition]]) — task memory bounded by the window, not
-    * the key's history.
-    */
-  private[graft] def requireNonIterative(steps: Seq[Step]): Unit =
-    steps.find(_.isInstanceOf[CtxStep]).foreach(s =>
-      throw new IllegalArgumentException(s"iterative condition ${s.name} is " +
-        "supported only by the relaxed pattern API (matchPatternRelaxed)"))
-
-  def matchPattern(ds: Dataset[Event], steps: Seq[Step], withinMs: Long,
-      skip: AfterMatch = SkipPastLastRow): Dataset[PMatch] = {
-    implicit val enc = Encoders.product[PMatch]
-    requireNonIterative(steps)
-    val stepsIdx = steps.toIndexedSeq
-    sortedByKey(ds).mapPartitions { rows =>
-      boundedScanPartition(rows) { (events, open, wm) =>
-        scan(events, stepsIdx, withinMs, skip, open, wm)
-      }
-    }
-  }
-
-  /** [[matchPattern]] over alternative step sequences — the API-level
-    * PERMUTE form ([U] flink-sql-parser's Calcite row-pattern PERMUTE):
-    * alternatives try in listed order at each start position and the
-    * first match wins ([[tryMatchAlts]]).
-    */
-  def matchPatternAlts(ds: Dataset[Event], alts: Seq[Seq[Step]], withinMs: Long,
-      skip: AfterMatch = SkipPastLastRow): Dataset[PMatch] = {
-    implicit val enc = Encoders.product[PMatch]
-    alts.foreach(requireNonIterative)
-    val a = alts.map(_.toIndexedSeq).toIndexedSeq
-    sortedByKey(ds).mapPartitions { rows =>
-      boundedScanPartition(rows) { (events, open, wm) =>
-        scanAlts(events, a, withinMs, skip, open, wm)
-      }
-    }
-  }
-
   // ----- relaxed contiguity + negative patterns ([U] flink-cep
   // Pattern.next/followedBy/followedByAny/notNext/notFollowedBy) -----
 
@@ -474,7 +275,9 @@ object Cep {
   case object FollowedByC extends Contiguity
   case object FollowedByAnyC extends Contiguity
 
-  /** One element of a relaxed-contiguity pattern. */
+  /** One element of a pattern; a strict pattern is all [[NextC]]
+    * positive elements.
+    */
   sealed trait RelElem extends Serializable
   /** A positive step (consumes events) with its contiguity. The FIRST
     * positive element anchors at the scan position (Flink `begin`), so
@@ -498,117 +301,298 @@ object Cep {
   def notFollowedBy(name: String)(pred: Event => Boolean): RelElem =
     NegElem(name, strict = false)(pred)
 
-  /** Relaxed-contiguity match anchored at `start`: returns (end, consumed
-    * indices) or (Fail/Pending, null). Pending (openEnded only) when the
-    * outcome could change with more events — a quantifier or an
-    * occurrence search ran into the buffer end, or a strict negative had
-    * no next event to test yet.
+  /** Next scan position after a match at [i, end) whose per-step
+    * consumption is `takes` (a strict pattern: the match is contiguous).
+    * SKIP TO FIRST/LAST resolves the variable to the FIRST step bearing
+    * that name (a variable reused across several steps lands on its
+    * first step — a documented simplification of Flink's row-level
+    * mapping).
     */
-  private[graft] def tryMatchRelaxed(events: Array[Event], ts: Array[Long],
-      start: Int, elems: IndexedSeq[RelElem], withinMs: Long,
-      openEnded: Boolean,
-      partialOut: scala.collection.mutable.ArrayBuffer[Int] = null)
-      : (Int, IndexedSeq[Int]) = {
-    val n = events.length
-    var pending = false
-    val consumed = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val firstPos = elems.indexWhere(_.isInstanceOf[PosElem])
-    // deepest partial ever reached — the timed-out/abandoned prefix
-    def snapshotPartial(): Unit =
-      if (partialOut != null && consumed.length > partialOut.length) {
-        partialOut.clear(); partialOut ++= consumed
+  private[graft] def resumeAfter(skip: AfterMatch, i: Int, end: Int,
+      elems: IndexedSeq[RelElem], takes: Array[Int]): Int = {
+    def stepPos(v: String, last: Boolean): Int = {
+      val si = elems.indexWhere {
+        case PosElem(st, _) => st.name == v
+        case _              => false
       }
-
-    def inWindow(j: Int): Boolean = ts(j) - ts(start) <= withinMs
-
-    // guard: pending notFollowedBy predicates to verify over the span
-    // skipped before the next positive match
-    def rec(pos: Int, ei: Int, guards: List[Event => Boolean]): Int = {
-      if (ei == elems.length) return pos
-      elems(ei) match {
-        case ne: NegElem if ne.strict =>
-          if (pos >= n) { if (openEnded) pending = true; return Fail }
-          if (ne.pred(events(pos))) Fail else rec(pos, ei + 1, guards)
-        case ne: NegElem =>
-          rec(pos, ei + 1, ne.pred :: guards)
-        case PosElem(st, contig0) =>
-          // first positive element anchors at the scan position (begin)
-          val contig = if (ei == firstPos) NextC else contig0
-          def guarded(j: Int): Boolean = guards.exists(g => g(events(j)))
-          // iterative conditions see the partial match: prior steps'
-          // consumed events plus this step's earlier repetitions
-          def acceptsAt(j: Int, p: Int, taken: Int, mark: Int): Boolean = st match {
-            case cs: CtxStep =>
-              val ctx = (consumed.view.take(mark).map(events(_)) ++
-                (j until j + taken).map(events(_))).toIndexedSeq
-              cs.pred(events(p), ctx)
-            case _ => st.accepts(events(p))
-          }
-          def attempt(j: Int): Int = {
-            val mark = consumed.length
-            // greedy (or reluctant) consecutive consumption at j, then rest
-            var cnt = 0
-            while (cnt < st.max && j + cnt < n &&
-              acceptsAt(j, j + cnt, cnt, mark) && inWindow(j + cnt)) cnt += 1
-            val atEdge = openEnded && j + cnt == n && cnt < st.max
-            def tryTake(take: Int): Int = {
-              consumed.remove(mark, consumed.length - mark)
-              var k = 0
-              while (k < take) { consumed += j + k; k += 1 }
-              if (take >= st.min) snapshotPartial()
-              rec(j + take, ei + 1, Nil)
-            }
-            if (st.reluctant) {
-              var take = st.min
-              while (take <= cnt) {
-                val r = tryTake(take)
-                if (r >= 0) return r
-                take += 1
-              }
-              if (atEdge) pending = true
-              consumed.remove(mark, consumed.length - mark)
-              Fail
-            } else {
-              if (atEdge) pending = true
-              var take = cnt
-              while (take >= st.min) {
-                val r = tryTake(take)
-                if (r >= 0) return r
-                take -= 1
-              }
-              consumed.remove(mark, consumed.length - mark)
-              Fail
-            }
-          }
-          contig match {
-            case NextC =>
-              // the skipped span is empty under strict contiguity, so
-              // any pending notFollowedBy guards hold vacuously
-              attempt(pos)
-            case FollowedByC | FollowedByAnyC =>
-              var j = pos
-              while (j < n && inWindow(j)) {
-                if (guarded(j)) return Fail // negative pattern hit first
-                val occ = st.min == 0 ||
-                  acceptsAt(j, j, 0, consumed.length) // first repetition at j
-                if (occ) {
-                  val r = attempt(j)
-                  if (r >= 0) return r
-                  if (contig == FollowedByC && st.min > 0)
-                    return Fail // skip-till-next commits to the first occurrence
-                }
-                j += 1
-              }
-              if (openEnded && j == n) pending = true // occurrence may still arrive
-              Fail
-          }
-      }
+      if (si < 0)
+        throw new IllegalArgumentException(
+          s"AFTER MATCH SKIP TO $v: no pattern step named $v")
+      if (takes(si) == 0)
+        throw new IllegalArgumentException(
+          s"AFTER MATCH SKIP TO $v: the variable matched no rows in this match")
+      var pos = i
+      var s = 0
+      while (s < si) { pos += takes(s); s += 1 }
+      val target = if (last) pos + takes(si) - 1 else pos
+      if (target == i) // resume on the match's own first row: infinite loop
+        throw new IllegalArgumentException(
+          s"AFTER MATCH SKIP TO $v would loop on the match's first row")
+      target
     }
+    skip match {
+      case SkipPastLastRow   => end
+      case SkipToNextRow     => i + 1
+      case SkipToFirst(v)    => stepPos(v, last = false)
+      case SkipToLast(v)     => stepPos(v, last = true)
+    }
+  }
 
-    val r = rec(start, 0, Nil)
-    if (pending) (Pending, null)
-    else if (r == Fail || consumed.isEmpty) (Fail, null) // zero-length: no match
-    else (r, consumed.toIndexedSeq)
+  /** Outcome of matching at one start position. */
+  private[graft] final val Fail = -1
+  private[graft] final val Pending = -2
+
+  /** Decides, for the [[walk]], whether row `p` may join pattern element
+    * `ei`: a positive step's next repetition, or the row a negative
+    * element forbids. `partial` is the rows the partial match has
+    * consumed, in match order. The walk reports each row it adds to the
+    * partial match (`commit`) and takes back (`rewind`) in its LIFO
+    * backtracking order, so an acceptor may keep running state over the
+    * partial match; `reset` starts each walk afresh.
+    */
+  private[graft] trait Acceptor {
+    def accepts(ei: Int, p: Int, partial: scala.collection.IndexedSeq[Int]): Boolean
+    def commit(ei: Int, p: Int): Unit = ()
+    def rewind(ei: Int, p: Int): Unit = ()
+    def reset(): Unit = ()
+  }
+
+  /** The acceptor over [[Event]]s: each element's own condition, with no
+    * state of its own — an iterative condition reads the partial match.
+    */
+  private[graft] final class EventAcceptor(events: Array[Event],
+      elems: IndexedSeq[RelElem]) extends Acceptor {
+    override def accepts(ei: Int, p: Int,
+        partial: scala.collection.IndexedSeq[Int]): Boolean = elems(ei) match {
+      case PosElem(st, _) => st.accepts(events(p), partial.map(events(_)).toIndexedSeq)
+      case ne: NegElem    => ne.pred(events(p))
+    }
+  }
+
+  /** One anchored walk's outcome: `end` is the exclusive end index,
+    * [[Fail]] or [[Pending]]; a match also carries the alternative that
+    * matched (`alt`), each element's row count (`takes`) and the
+    * consumed row indices in match order (`rows`).
+    */
+  private[graft] final case class Walk(end: Int, alt: Int = -1,
+      takes: Array[Int] = null, rows: IndexedSeq[Int] = null)
+  private val failed = Walk(Fail)
+  private val pending = Walk(Pending)
+
+  /** The backtracking match anchored at `start` over `n` time-sorted
+    * rows with times `ts` — every pattern kernel (strict, relaxed,
+    * measured and SQL) runs this one walk. Each alternative element
+    * sequence is tried in order with its acceptor, and the FIRST that
+    * matches wins (the SQL standard's leftmost-alternative preference —
+    * PERMUTE(A, B) ≡ (A B | B A)). Quantifiers are greedy with
+    * backtracking, or fewest-first when reluctant; all consumed rows lie
+    * within `withinMs` of the start row, and a match that consumes no row
+    * fails. When `openEnded` (more rows may still arrive), the outcome is
+    * [[Pending]] if it could change with more rows: a quantifier or an
+    * occurrence search ran into the end, or a strict negative had no row
+    * to test yet. A higher-preference alternative that is Pending pends
+    * the whole outcome, since committing a lesser one now would emit a
+    * match a full-history scan would not. `partialOut` (when non-null)
+    * receives the deepest partial any anchored walk reached — the
+    * abandoned funnel row.
+    */
+  private[graft] def walk(ts: Array[Long], start: Int,
+      alts: IndexedSeq[IndexedSeq[RelElem]], accs: IndexedSeq[Acceptor],
+      withinMs: Long, openEnded: Boolean,
+      partialOut: scala.collection.mutable.ArrayBuffer[Int] = null): Walk = {
+    val n = ts.length
+    if (partialOut != null) partialOut.clear()
+    var ai = 0
+    while (ai < alts.length) {
+      val elems = alts(ai)
+      val acc = accs(ai)
+      acc.reset()
+      var isPending = false
+      val consumed = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val takes = new Array[Int](elems.length)
+      val firstPos = elems.indexWhere(_.isInstanceOf[PosElem])
+      def inWindow(j: Int): Boolean = ts(j) - ts(start) <= withinMs
+      def snapshotPartial(): Unit =
+        if (partialOut != null && consumed.length > partialOut.length) {
+          partialOut.clear(); partialOut ++= consumed
+        }
+      // guards: the relaxed negatives to verify over the span skipped
+      // before the next positive match
+      def rec(pos: Int, ei: Int, guards: List[Int]): Int = {
+        if (ei == elems.length) return pos
+        elems(ei) match {
+          case ne: NegElem if ne.strict =>
+            if (pos >= n) { if (openEnded) isPending = true; return Fail }
+            if (acc.accepts(ei, pos, consumed)) Fail else rec(pos, ei + 1, guards)
+          case _: NegElem =>
+            rec(pos, ei + 1, ei :: guards)
+          case PosElem(st, contig0) =>
+            val contig = if (ei == firstPos) NextC else contig0
+            // consecutive consumption at j (greedy count, then backtrack);
+            // a failed attempt leaves the partial match as it found it
+            def attempt(j: Int): Int = {
+              val mark = consumed.length
+              var cnt = 0
+              while (cnt < st.max && j + cnt < n && inWindow(j + cnt) &&
+                acc.accepts(ei, j + cnt, consumed)) {
+                consumed += j + cnt; acc.commit(ei, j + cnt); cnt += 1
+              }
+              val atEdge = openEnded && j + cnt == n && cnt < st.max
+              def setTaken(take: Int): Unit = {
+                while (consumed.length > mark + take)
+                  acc.rewind(ei, consumed.remove(consumed.length - 1))
+                while (consumed.length < mark + take) {
+                  val p = j + consumed.length - mark
+                  consumed += p; acc.commit(ei, p)
+                }
+              }
+              def tryTake(take: Int): Int = {
+                setTaken(take)
+                if (take >= st.min) snapshotPartial()
+                val r = rec(j + take, ei + 1, Nil)
+                if (r >= 0) takes(ei) = take
+                r
+              }
+              if (st.reluctant) {
+                // fewest-first: extend only when the remainder fails. A
+                // success is RESOLVED even at the buffer edge — a future
+                // row could only extend this step, which reluctant
+                // preference rejects — so the edge pends the outcome only
+                // when every take fails
+                var take = st.min
+                while (take <= cnt) {
+                  val r = tryTake(take)
+                  if (r >= 0) return r
+                  take += 1
+                }
+                if (atEdge) isPending = true
+              } else {
+                // greedy stopped at the buffer end with quantifier room
+                // left: a future row could extend this step into a MORE
+                // preferred (longer) match, so even a success is unresolved
+                if (atEdge) isPending = true
+                var take = cnt
+                while (take >= st.min) {
+                  val r = tryTake(take)
+                  if (r >= 0) return r
+                  take -= 1
+                }
+              }
+              setTaken(0)
+              Fail
+            }
+            contig match {
+              case NextC =>
+                // the skipped span is empty under strict contiguity, so
+                // any pending notFollowedBy guards hold vacuously
+                attempt(pos)
+              case FollowedByC | FollowedByAnyC =>
+                var j = pos
+                while (j < n && inWindow(j)) {
+                  if (guards.exists(g => acc.accepts(g, j, consumed)))
+                    return Fail // negative pattern hit first
+                  if (st.min == 0 || acc.accepts(ei, j, consumed)) { // an occurrence at j
+                    val r = attempt(j)
+                    if (r >= 0) return r
+                    if (contig == FollowedByC && st.min > 0)
+                      return Fail // skip-till-next commits to the first occurrence
+                  }
+                  j += 1
+                }
+                if (openEnded && j == n) isPending = true // occurrence may still arrive
+                Fail
+            }
+        }
+      }
+      val r = rec(start, 0, Nil)
+      if (isPending) return pending
+      if (r >= 0 && consumed.nonEmpty) return Walk(r, ai, takes, consumed.toIndexedSeq)
+      ai += 1
+    }
+    failed
+  }
+
+  /** The anchor loop every scan shares: walk at each position in turn —
+    * Pending halts (everything from there on stays buffered), Fail calls
+    * `onFail` and advances, and a match goes to `emit`, which returns the
+    * next position. `wm` closes the WITHIN window for pending decisions:
+    * once `wm - ts(i) > withinMs`, no future row can join a match
+    * anchored at `i`, so its walk is closed. Returns the resume index —
+    * the first position a future row could still affect (streaming keeps
+    * the rows from there; a closed scan resolves everything).
+    */
+  private[graft] def anchorLoop(ts: Array[Long],
+      alts: IndexedSeq[IndexedSeq[RelElem]], accs: IndexedSeq[Acceptor],
+      withinMs: Long, openEnded: Boolean, wm: Long,
+      partialOut: scala.collection.mutable.ArrayBuffer[Int] = null,
+      onFail: Int => Unit = _ => ())(emit: (Int, Walk) => Int): Int = {
+    var i = 0
+    var halt = false
+    while (i < ts.length && !halt) {
+      val w = walk(ts, i, alts, accs, withinMs,
+        openEnded && wm - ts(i) <= withinMs, partialOut)
+      if (w.end == Pending) halt = true
+      else if (w.end == Fail) { onFail(i); i += 1 }
+      else i = emit(i, w)
+    }
+    i
+  }
+
+  /** Hash shuffle on key + external sort + WITHIN-bounded lookback scan
+    * ([[boundedScanPartition]]) — task memory bounded by the window, not
+    * the key's history. The batch shape of every pattern API here.
+    */
+  private def perKey[Out: Encoder](ds: Dataset[Event])(
+      scanFn: (Array[Event], Boolean, Long) => (Seq[Out], Int)): Dataset[Out] =
+    sortedByKey(ds).mapPartitions(rows => boundedScanPartition(rows)(scanFn))
+
+  case class PMatch(key: Long, start_id: Long, end_id: Long,
+      start_ts: Long, end_ts: Long, n_events: Int)
+
+  /** Scan a time-sorted run of events against quantified steps: emit
+    * resolved matches, return the resume index ([[anchorLoop]]).
+    */
+  private[graft] def scan(events: Array[Event], steps: IndexedSeq[Step],
+      withinMs: Long, skip: AfterMatch, openEnded: Boolean, wm: Long)
+      : (Seq[PMatch], Int) =
+    scanAlts(events, IndexedSeq(steps), withinMs, skip, openEnded, wm)
+
+  /** [[scan]] over alternative step sequences ([[walk]]'s preference
+    * order); AFTER MATCH SKIP resumes against the matched alternative's
+    * own steps, so SKIP TO FIRST/LAST a permuted variable lands wherever
+    * THAT permutation placed it.
+    */
+  private[graft] def scanAlts(events: Array[Event], alts: IndexedSeq[IndexedSeq[Step]],
+      withinMs: Long, skip: AfterMatch, openEnded: Boolean, wm: Long)
+      : (Seq[PMatch], Int) = {
+    val elems = alts.map(_.map(next))
+    val out = scala.collection.mutable.ArrayBuffer.empty[PMatch]
+    val resume = anchorLoop(events.map(_.ts), elems,
+        elems.map(new EventAcceptor(events, _)), withinMs, openEnded, wm) { (i, w) =>
+      val e0 = events(i)
+      val e1 = events(w.end - 1)
+      out += PMatch(e0.key, e0.id, e1.id, e0.ts, e1.ts, w.end - i)
+      resumeAfter(skip, i, w.end, elems(w.alt), w.takes)
+    }
+    (out.toSeq, resume)
+  }
+
+  /** Batch pattern match per key: greedy quantified steps with strict
+    * contiguity, WITHIN window, and the chosen AFTER MATCH SKIP strategy.
+    */
+  def matchPattern(ds: Dataset[Event], steps: Seq[Step], withinMs: Long,
+      skip: AfterMatch = SkipPastLastRow): Dataset[PMatch] =
+    matchPatternAlts(ds, Seq(steps), withinMs, skip)
+
+  /** [[matchPattern]] over alternative step sequences — the API-level
+    * PERMUTE form ([U] flink-sql-parser's Calcite row-pattern PERMUTE):
+    * alternatives try in listed order at each start position and the
+    * first match wins.
+    */
+  def matchPatternAlts(ds: Dataset[Event], alts: Seq[Seq[Step]], withinMs: Long,
+      skip: AfterMatch = SkipPastLastRow): Dataset[PMatch] = {
+    val a = alts.map(_.toIndexedSeq).toIndexedSeq
+    perKey(ds)(scanAlts(_, a, withinMs, skip, _, _))(Encoders.product[PMatch])
   }
 
   /** One relaxed-pattern match: span ends plus how many events were
@@ -626,14 +610,9 @@ object Cep {
     */
   def matchPatternRelaxed(ds: Dataset[Event], elems: Seq[RelElem],
       withinMs: Long, overlapping: Boolean = false): Dataset[RMatch] = {
-    implicit val enc = Encoders.product[RMatch]
     val el = elems.toIndexedSeq
     validateRelaxed(el) // fail on the driver, not wrapped in a task error
-    sortedByKey(ds).mapPartitions { rows =>
-      boundedScanPartition(rows) { (events, open, wm) =>
-        scanRelaxed(events, events.map(_.ts), el, withinMs, overlapping, open, wm)
-      }
-    }
+    perKey(ds)(scanRelaxed(_, el, withinMs, overlapping, _, _))(Encoders.product[RMatch])
   }
 
   /** One funnel outcome: a COMPLETED match, or an ABANDONED start — the
@@ -656,45 +635,28 @@ object Cep {
     */
   def matchFunnel(ds: Dataset[Event], elems: Seq[RelElem],
       withinMs: Long): Dataset[FunnelOut] = {
-    implicit val enc = Encoders.product[FunnelOut]
     val el = elems.toIndexedSeq
     validateRelaxed(el)
-    sortedByKey(ds).mapPartitions { rows =>
-      boundedScanPartition(rows) { (events, open, wm) =>
-        scanFunnel(events, events.map(_.ts), el, withinMs, open, wm)
-      }
-    }
+    perKey(ds)(scanFunnel(_, el, withinMs, _, _))(Encoders.product[FunnelOut])
   }
 
-  private[graft] def scanFunnel(events: Array[Event], ts: Array[Long],
-      elems: IndexedSeq[RelElem], withinMs: Long,
-      openEnded: Boolean, wm: Long): (Seq[FunnelOut], Int) = {
+  private[graft] def scanFunnel(events: Array[Event], elems: IndexedSeq[RelElem],
+      withinMs: Long, openEnded: Boolean, wm: Long): (Seq[FunnelOut], Int) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[FunnelOut]
-    val partial = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    var halt = false
-    while (i < events.length && !halt) {
-      val open = openEnded && wm - ts(i) <= withinMs
-      partial.clear()
-      tryMatchRelaxed(events, ts, i, elems, withinMs, open, partial) match {
-        case (Pending, _) => halt = true
-        case (Fail, _) =>
-          if (partial.nonEmpty) { // anchored partial: an abandoned funnel
-            val e0 = events(partial.head)
-            val e1 = events(partial.last)
-            out += FunnelOut(e0.key, e0.id, e1.id, e0.ts, e1.ts,
-              partial.length, completed = false)
-          }
-          i += 1
-        case (_, idxs) =>
-          val e0 = events(idxs.head)
-          val e1 = events(idxs.last)
-          out += FunnelOut(e0.key, e0.id, e1.id, e0.ts, e1.ts,
-            idxs.length, completed = true)
-          i += 1 // overlapping: every anchor gets an outcome
-      }
+    def outcome(idxs: scala.collection.IndexedSeq[Int], completed: Boolean): Unit = {
+      val e0 = events(idxs.head)
+      val e1 = events(idxs.last)
+      out += FunnelOut(e0.key, e0.id, e1.id, e0.ts, e1.ts, idxs.length, completed)
     }
-    (out.toSeq, i)
+    val partial = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val resume = anchorLoop(events.map(_.ts), IndexedSeq(elems),
+        IndexedSeq(new EventAcceptor(events, elems)), withinMs, openEnded, wm,
+        partial, onFail = _ => if (partial.nonEmpty) outcome(partial, completed = false)) {
+      (i, w) =>
+        outcome(w.rows, completed = true)
+        i + 1 // overlapping: every anchor gets an outcome
+    }
+    (out.toSeq, resume)
   }
 
   private[graft] def validateRelaxed(elems: IndexedSeq[RelElem]): Unit = {
@@ -708,28 +670,21 @@ object Cep {
     }
   }
 
-  /** Shared relaxed scan (batch + streaming): emit resolved matches,
+  /** The relaxed scan (batch + streaming): emit resolved matches,
     * return the resume index for the streaming buffer.
     */
-  private[graft] def scanRelaxed(events: Array[Event], ts: Array[Long],
-      elems: IndexedSeq[RelElem], withinMs: Long, overlapping: Boolean,
+  private[graft] def scanRelaxed(events: Array[Event], elems: IndexedSeq[RelElem],
+      withinMs: Long, overlapping: Boolean,
       openEnded: Boolean, wm: Long): (Seq[RMatch], Int) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[RMatch]
-    var i = 0
-    var halt = false
-    while (i < events.length && !halt) {
-      val open = openEnded && wm - ts(i) <= withinMs
-      tryMatchRelaxed(events, ts, i, elems, withinMs, open) match {
-        case (Pending, _) => halt = true
-        case (Fail, _)    => i += 1
-        case (_, idxs)    =>
-          val e0 = events(idxs.head)
-          val e1 = events(idxs.last)
-          out += RMatch(e0.key, e0.id, e1.id, e0.ts, e1.ts, idxs.length)
-          i = if (overlapping) i + 1 else idxs.last + 1
-      }
+    val resume = anchorLoop(events.map(_.ts), IndexedSeq(elems),
+        IndexedSeq(new EventAcceptor(events, elems)), withinMs, openEnded, wm) { (i, w) =>
+      val e0 = events(w.rows.head)
+      val e1 = events(w.rows.last)
+      out += RMatch(e0.key, e0.id, e1.id, e0.ts, e1.ts, w.rows.length)
+      if (overlapping) i + 1 else w.rows.last + 1
     }
-    (out.toSeq, i)
+    (out.toSeq, resume)
   }
 
   /** Match + per-step MEASURES ([U] flink-table-runtime operators/match/
@@ -742,59 +697,41 @@ object Cep {
       step_counts: Seq[Int], step_sums: Seq[Double],
       step_first_id: Seq[Long], step_last_id: Seq[Long])
 
-  /** [[scan]]-shaped measures walk: emit resolved matches with per-step
-    * measures, halt at the first anchor whose outcome is still open
-    * (openEnded), return the resume index — so it plugs into
-    * [[boundedScanPartition]] like the other scans.
-    */
+  /** [[scan]] with per-step measures per match. */
   private[graft] def scanMeasures(events: Array[Event], steps: IndexedSeq[Step],
       withinMs: Long, skip: AfterMatch, openEnded: Boolean, wm: Long)
       : (Seq[PMeasures], Int) = {
-    val ts = events.map(_.ts)
+    val elems = steps.map(next)
     val out = scala.collection.mutable.ArrayBuffer.empty[PMeasures]
-    var i = 0
-    var halt = false
-    while (i < events.length && !halt) {
-      val open = openEnded && wm - ts(i) <= withinMs
-      val takes = new Array[Int](steps.length)
-      tryMatchAt(events, ts, i, steps, withinMs, open, takes) match {
-        case Pending => halt = true
-        case Fail    => i += 1
-        case end =>
-          var pos = i
-          val counts = new Array[Int](steps.length)
-          val sums = new Array[Double](steps.length)
-          val firsts = Array.fill(steps.length)(-1L)
-          val lasts = Array.fill(steps.length)(-1L)
-          var si = 0
-          while (si < steps.length) {
-            counts(si) = takes(si)
-            if (takes(si) > 0) {
-              firsts(si) = events(pos).id
-              lasts(si) = events(pos + takes(si) - 1).id
-              var k = 0
-              while (k < takes(si)) { sums(si) += events(pos + k).value; k += 1 }
-            }
-            pos += takes(si)
-            si += 1
-          }
-          out += PMeasures(events(i).key, events(i).id, events(end - 1).id,
-            end - i, counts.toSeq, sums.toSeq, firsts.toSeq, lasts.toSeq)
-          i = resumeAfter(skip, i, end, steps, takes)
+    val resume = anchorLoop(events.map(_.ts), IndexedSeq(elems),
+        IndexedSeq(new EventAcceptor(events, elems)), withinMs, openEnded, wm) { (i, w) =>
+      val takes = w.takes
+      var pos = i
+      val sums = new Array[Double](steps.length)
+      val firsts = Array.fill(steps.length)(-1L)
+      val lasts = Array.fill(steps.length)(-1L)
+      var si = 0
+      while (si < steps.length) {
+        if (takes(si) > 0) {
+          firsts(si) = events(pos).id
+          lasts(si) = events(pos + takes(si) - 1).id
+          var k = 0
+          while (k < takes(si)) { sums(si) += events(pos + k).value; k += 1 }
+        }
+        pos += takes(si)
+        si += 1
       }
+      out += PMeasures(events(i).key, events(i).id, events(w.end - 1).id,
+        w.end - i, takes.toSeq, sums.toSeq, firsts.toSeq, lasts.toSeq)
+      resumeAfter(skip, i, w.end, elems, takes)
     }
-    (out.toSeq, i)
+    (out.toSeq, resume)
   }
 
   def matchPatternMeasures(ds: Dataset[Event], steps: Seq[Step], withinMs: Long,
       skip: AfterMatch = SkipPastLastRow): Dataset[PMeasures] = {
-    implicit val enc = Encoders.product[PMeasures]
-    requireNonIterative(steps)
     val stepsIdx = steps.toIndexedSeq
-    sortedByKey(ds).mapPartitions { rows =>
-      boundedScanPartition(rows) { (events, open, wm) =>
-        scanMeasures(events, stepsIdx, withinMs, skip, open, wm)
-      }
-    }
+    perKey(ds)(scanMeasures(_, stepsIdx, withinMs, skip, _, _))(
+      Encoders.product[PMeasures])
   }
 }

@@ -122,7 +122,7 @@ object QualityClassifier {
   def trainNewton(df: DataFrame, fCol: String, yCol: String, dim: Int,
       iters: Int = 5, ridge: Double = 1e-6): Model = {
     val d1 = dim + 1
-    var wAug = new Array[Double](d1) // [w, b]
+    val wAug = new Array[Double](d1) // [w, b]
     val losses = Seq.newBuilder[Double]
     val cached = df.select(
       concat(col(fCol), array(lit(1.0))).as("f"),

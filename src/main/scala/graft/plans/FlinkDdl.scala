@@ -622,7 +622,7 @@ object FlinkDdl {
       fail(s"LIKE references `$base`, which is not DDL-registered in this session"))
 
     // ---- merge strategies (Flink defaults) ----
-    var modes = scala.collection.mutable.Map(
+    val modes = scala.collection.mutable.Map(
       "options" -> "overwriting", "watermarks" -> "including",
       "constraints" -> "including", "generated" -> "including",
       "metadata" -> "including", "partitions" -> "including")
@@ -844,7 +844,7 @@ object FlinkDdl {
       payloadRaw: String): String = {
     val (connector, path, fmt, schema) = registered(spark, name).getOrElse(
       fail(s"ALTER TABLE: `$name` is not DDL-registered in this session"))
-    var phys = scala.collection.mutable.ArrayBuffer(
+    val phys = scala.collection.mutable.ArrayBuffer(
       schema.fields.map(f0 => (f0.name, typeLine(f0))): _*)
     var computed = computedColumnsOf(spark, name)
     var metaC = metadataColumnsOf(spark, name)
@@ -1676,7 +1676,6 @@ object FlinkDdl {
     val outerText = select.substring(0, spanStart) + " __graft_cum " +
       select.substring(spanEnd + 1)
     val src = spark.table(table) // the streaming-bound temp view
-    val srcCols = src.columns.toSeq
     val sinkSchema = registered(spark, sinkName).get._4
     val stepUs = stepS * 1000000L
     val sizeUs = sizeS * 1000000L
@@ -2025,7 +2024,7 @@ object FlinkDdl {
 
   private def connectorRead(spark: SparkSession, schema: StructType,
       physical: Seq[(String, String)], primaryKey: Seq[String],
-      opts: Map[String, String], metaCols: Seq[MetadataCol] = Seq.empty): DataFrame =
+      opts: Map[String, String], metaCols: Seq[MetadataCol]): DataFrame =
     opts.getOrElse("connector", fail("'connector' option is required")) match {
       case "filesystem" =>
         val path = opts.getOrElse("path", fail("filesystem connector requires 'path'"))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -61,15 +61,15 @@ import graft.operators.Cep
   * natural order for those types). ALL ROWS PER MATCH emits every
   * MATCHED input row with all
   * its columns plus `match_seq`, `classifier`, and RUNNING measures
-  * (see [[runAllRows]]). Strict contiguity, greedy quantifiers —
+  * (see [[run]]). Strict contiguity, greedy quantifiers —
   * Flink's defaults.
   *
-  * Execution: DEFINE predicates are evaluated by Catalyst as boolean
-  * columns (codegen, pushdown-friendly — classification happens in the
-  * scan, not in the NFA), then the [[Cep]] greedy-backtracking kernel runs
-  * per partition key exactly as the API-level operator does: hash shuffle
-  * on the partition column, per-key time-sorted scan, state bounded by one
-  * key's history — the 100 TB shape is the groupBy's, nothing new.
+  * Execution: DEFINE predicates are evaluated by Catalyst into one
+  * bitmask column (codegen, pushdown-friendly — classification happens in
+  * the scan, not in the NFA), then the [[Cep.walk]] and [[Cep.anchorLoop]]
+  * the API-level operators use run per partition key over the masks
+  * ([[Kernel]]): hash shuffle on the partition column, per-key
+  * time-sorted scan, state bounded by one WITHIN window.
   *
   * Entry points: [[sql]] rewrites and runs a full statement under ANY
   * session; [[GraftSqlParser]] (injected via `graft.GraftExtensions`)
@@ -134,23 +134,28 @@ object MatchRecognize {
       if (alts.isEmpty) Seq(pattern) else alts
   }
 
-  final case class MrRow(k: String, ord: Long, defs: Seq[Boolean])
-
-  final case class MrMatch(k: String, match_start: Long, match_end: Long, n_events: Int)
-
-  /** `mv` carries the numeric view of every measured column (NaN for
-    * null/non-numeric), `sv` the string view — FIRST/LAST read `sv` and
-    * cast back to the column's original type, so they work on ANY
-    * atomic column; SUM/MIN/MAX/AVG require a numeric column.
+  /** One tagged input row of the kernel: the partition key's canonical
+    * string form (cast back to the original type on output), the order
+    * value (also the event time, ms), the DEFINE bitmask (bit i = the
+    * i-th variable's DEFINE held), the per-measure numeric (`mv`, NaN for
+    * null/non-numeric) and string (`sv`) views — FIRST/LAST read `sv` and
+    * cast back to the column's original type, so they work on ANY atomic
+    * column; SUM/MIN/MAX/AVG require a numeric column — the full input
+    * row as a JSON payload (streaming ALL ROWS only; null elsewhere, so
+    * buffered state stays narrow), and the DEFINE-aggregate inputs.
     */
-  final case class MrRowM(k: String, ord: Long, defs: Seq[Boolean],
-      mv: Seq[Double], sv: Seq[String], av: Seq[Double])
+  final case class MrRow(key: String, ord: Long, mask: Long,
+      mv: Seq[Double], sv: Seq[String], payload: String, av: Seq[Double])
 
-  final case class MrMatchM(k: String, match_start: Long, match_end: Long,
+  /** One resolved match with its measure values (ONE ROW PER MATCH). */
+  final case class MrMatch(key: String, match_start: Long, match_end: Long,
       n_events: Int, m: Seq[Double], sm: Seq[String])
 
-  final case class MrAllRow(k: String, ord: Long, match_seq: Long,
-      classifier: String, m: Seq[Double], sm: Seq[String])
+  /** One matched INPUT row (ALL ROWS PER MATCH) with its running
+    * measures and, when streaming, the original row as a JSON payload.
+    */
+  final case class MrAllRow(key: String, ord: Long, match_seq: Long,
+      classifier: String, m: Seq[Double], sm: Seq[String], payload: String)
 
   /** Detect (case-insensitively) whether a statement embeds the clause. */
   def containsClause(sqlText: String): Boolean =
@@ -256,7 +261,7 @@ object MatchRecognize {
         fail(s"MEASURES references ${m.variable}, which is not a pattern " +
           "variable (and not a SUBSET)")
     }
-    if (defines.size > 52) fail("at most 52 DEFINE variables")
+    if (defines.size > 64) fail("at most 64 DEFINE variables (one bit each of the row mask)")
     Clause(table, part, ord, skip, pattern, withinMs, defines, measures, allRows,
       alts = alts, subsets = subsets, aggTerms = aggTerms, aggConds = aggConds)
   }
@@ -313,7 +318,7 @@ object MatchRecognize {
     // the wrapper only changes semantics under ALL ROWS PER MATCH —
     // there RUNNING (Flink's default) is per-row and FINAL repeats the
     // completed match's value on every row; the flag is recorded and
-    // applied in runAllRows.
+    // applied in Kernel.allRows.
     val wrapRe = raw"(?is)^\s*(FINAL|RUNNING)\s*\((.+)\)\s+AS\s+([A-Za-z_]\w*)\s*$$".r
     val entries = WindowTvf.splitArgs(tail.substring(0, stop.start)).map { e =>
       wrapRe.findFirstMatchIn(e) match {
@@ -732,21 +737,12 @@ object MatchRecognize {
 
   // ---------- execution ----------
 
-  /** Bitmask NFA steps for one alternative step sequence (alternation
-    * group = union of the variables' predicate bits).
+  /** The clause's source columns: the PARTITION BY field and the ORDER
+    * BY value as a long (millis for a timestamp).
     */
-  private def buildSteps(seq: Seq[PatternStep],
-      varIdx: Map[String, Int]): IndexedSeq[Cep.Step] =
-    seq.map { s =>
-      val mask = s.variables.foldLeft(0L)((m, v) => m | (1L << varIdx(v)))
-      Cep.when(s.variables.mkString("|"), s.min, s.max, s.reluctant)(
-        e => (e.value.toLong & mask) != 0L)
-    }.toIndexedSeq
-
-  /** Build the one-row-per-match DataFrame for a parsed clause. */
-  def run(session: SparkSession, clause: Clause): DataFrame = {
-    val src0 = session.table(clause.table)
-    val schema = src0.schema
+  private def keyAndOrder(clause: Clause,
+      schema: org.apache.spark.sql.types.StructType)
+      : (org.apache.spark.sql.types.StructField, Column) = {
     val keyField = schema.find(_.name.equalsIgnoreCase(clause.partitionBy))
       .getOrElse(fail(s"unknown PARTITION BY column ${clause.partitionBy}"))
     val ordField = schema.find(_.name.equalsIgnoreCase(clause.orderBy))
@@ -755,8 +751,60 @@ object MatchRecognize {
       case TimestampType => unix_millis(col(ordField.name))
       case _             => col(ordField.name).cast(LongType)
     }
-    // stable variable order: pattern order, then any extra defines
-    val vars = (clause.pattern.flatMap(_.variables) ++ clause.defines.keys).distinct
+    (keyField, ordCol)
+  }
+
+  /** Stable variable order — pattern order, then any extra defines; a
+    * variable's index is its DEFINE bit.
+    */
+  private def variables(clause: Clause): Seq[String] =
+    (clause.pattern.flatMap(_.variables) ++ clause.defines.keys).distinct
+
+  /** Tag each source row for the kernel. DEFINE predicates are evaluated
+    * by Catalyst into one bitmask column (codegen, pushdown-friendly —
+    * classification happens in the scan, not in the NFA); a NULL
+    * predicate (e.g. PREV at the partition start) holds no bit.
+    */
+  private def tagRows(clause: Clause, src: DataFrame,
+      keyField: org.apache.spark.sql.types.StructField, ordCol: Column,
+      vars: Seq[String], defs: Map[String, String], payload: Column): Dataset[MrRow] = {
+    val mask = vars.zipWithIndex.map { case (v, i) =>
+      when(expr(defs(v)).cast("boolean"), lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    val (mvArr, svArr) = measureArrays(clause, src.schema)
+    src.select(
+      col(keyField.name).cast("string").as("key"),
+      ordCol.as("ord"),
+      mask.as("mask"),
+      mvArr.as("mv"),
+      svArr.as("sv"),
+      payload.as("payload"),
+      aggInputArr(clause, src.schema).as("av")).as[MrRow](Encoders.product[MrRow])
+  }
+
+  /** Build the DataFrame for a parsed clause: one row per match, or with
+    * ALL ROWS PER MATCH one output row per MATCHED input row, in match
+    * order, carrying every input column (recovered by an equi-join on
+    * (partition, order) — ORDER BY values must therefore be unique per
+    * partition, the same determinism Flink's time attributes provide)
+    * plus `match_seq` (MATCH_NUMBER() analog, 1-based per partition),
+    * `classifier` (the variable the row matched), and the MEASURES with
+    * RUNNING semantics — each aggregate sees the variable's rows up to
+    * and including the current row, Flink's ALL-ROWS default — except
+    * measures wrapped in `FINAL(...)`, which report the COMPLETED
+    * match's value on every row (the SQL standard's FINAL semantics).
+    * Unmatched rows are omitted (Flink omits them under AFTER MATCH
+    * SKIP PAST LAST ROW too).
+    *
+    * Execution: hash shuffle on the partition column, external sort per
+    * key, and a WITHIN-bounded lookback scan ([[Kernel.scanPartition]]):
+    * task memory holds one window of tagged rows, never a key's full
+    * history — the 100 TB shape is the groupBy's, nothing new.
+    */
+  def run(session: SparkSession, clause: Clause): DataFrame = {
+    val src0 = session.table(clause.table)
+    val (keyField, ordCol) = keyAndOrder(clause, src0.schema)
+    val vars = variables(clause)
     // PREV/NEXT physical navigation → lag/lead window columns, so every
     // DEFINE predicate stays a row-local Catalyst boolean
     val (defs, navs) = rewriteNav(clause.defines, vars.toSet)
@@ -769,59 +817,34 @@ object MatchRecognize {
           (if (nc.fn == "PREV") lag(e, nc.offset) else lead(e, nc.offset)).over(w))
       }
     }
-    // NULL predicate (e.g. PREV at the partition start) = no match
-    val defCols = vars.map(v => coalesce(expr(defs(v)).cast("boolean"), lit(false)))
-    val varIdx = vars.zipWithIndex.toMap
-    if (clause.allRows)
-      return runAllRows(clause, src, keyField, ordCol, defCols, varIdx)
-    if (clause.measures.nonEmpty || clause.aggTerms.nonEmpty)
-      // aggregate DEFINEs ride the measured kernel (it carries the
-      // per-row aggregate inputs); with no measures the output shape
-      // degenerates to the plain one-row form
-      return runMeasured(clause, src, keyField, ordCol, defCols, varIdx)
-
-    implicit val rowEnc = Encoders.product[MrRow]
-    val tagged = src.select(
-      col(keyField.name).cast("string").as("k"),
-      ordCol.as("ord"),
-      array(defCols: _*).as("defs")).as[MrRow]
-
-    val stepAlts: IndexedSeq[IndexedSeq[Cep.Step]] =
-      clause.sequences.map(buildSteps(_, varIdx)).toIndexedSeq
-    val withinMs = clause.withinMs
-    val skip = clause.skip
-
-    implicit val outEnc = Encoders.product[MrMatch]
-    // key-clustered external sort + WITHIN-bounded lookback scan: task
-    // memory holds one window of tagged rows, never a key's full history
-    val matches = tagged
-      .repartition(col("k")).sortWithinPartitions(col("k"), col("ord"))
-      .mapPartitions { part =>
-        Cep.boundedScanPartitionBy(part)(_.k, _.ord)({ (rows, open, wm) =>
-          val k = rows(0).k
-          val events = rows.map { r =>
-            var mask = 0L
-            var i = 0
-            while (i < r.defs.length) { if (r.defs(i)) mask |= (1L << i); i += 1 }
-            Cep.Event(0L, r.ord, r.ord, "", mask.toDouble)
-          }
-          val (ms, resume) = Cep.scanAlts(events, stepAlts, withinMs, skip, open, wm)
-          (ms.map(m => MrMatch(k, m.start_ts, m.end_ts, m.n_events)), resume)
-        })
-      }
-    matches.select(
-      col("k").cast(keyField.dataType).as(keyField.name),
-      col("match_start"), col("match_end"), col("n_events"))
+    val schema = src.schema
+    val kernel = kernelOf(clause, vars, schema)
+    val sorted = tagRows(clause, src, keyField, ordCol, vars, defs, lit(null).cast("string"))
+      .repartition(col("key")).sortWithinPartitions(col("key"), col("ord"))
+    if (!clause.allRows) {
+      val matches = sorted.mapPartitions(
+        kernel.scanPartition(_)(kernel.oneRow))(Encoders.product[MrMatch])
+      return matches.select(Seq(
+        col("key").cast(keyField.dataType).as(keyField.name),
+        col("match_start"), col("match_end"), col("n_events")) ++
+        measureOutCols(clause.measures, schema, col("m"), col("sm")): _*)
+    }
+    val kernelRows = sorted.mapPartitions(
+      kernel.scanPartition(_)(kernel.allRows))(Encoders.product[MrAllRow])
+    // recover the full input row: equi-join on (partition, order) —
+    // aliased, since the kernel frame derives from src (self-join lineage)
+    val withOrd = src.withColumn("__mr_ord", ordCol).as("__mr_src")
+    kernelRows.toDF().as("__mr_k")
+      .join(withOrd,
+        col("__mr_k.key") === col(s"__mr_src.${keyField.name}").cast("string") &&
+          col("__mr_k.ord") === col("__mr_src.__mr_ord"))
+      .select(schema.fieldNames.filterNot(_.startsWith("__mr_nav"))
+          .map(n => col(s"__mr_src.$n")) ++
+        Seq(col("__mr_k.match_seq").as("match_seq"),
+          col("__mr_k.classifier").as("classifier")) ++
+        measureOutCols(clause.measures, schema, col("__mr_k.m"), col("__mr_k.sm")): _*)
   }
 
-  /** The MEASURES execution path: same NFA, but each match also walks
-    * its consumed rows once to evaluate the measures. A consumed row is
-    * CLASSIFIED to the first listed variable of its step whose DEFINE
-    * held (single-variable steps trivially; alternation groups pick the
-    * first matching alternative, Flink's greedy classifier order). A
-    * variable that matched zero rows (optional step) measures as NULL —
-    * except COUNT, which is 0.
-    */
   /** Non-numeric types whose natural order equals the lexicographic
     * order of their canonical string form (Spark's fixed-width
     * date/timestamp rendering and "false" < "true" make this exact), so
@@ -945,97 +968,60 @@ object MatchRecognize {
       clause.aggConds.map { case (v, cs) => varIdx(v) -> cs },
       clause.aggTerms.toIndexedSeq)
 
-  /** DEFINE bit-vector → bitmask. */
-  private[graft] def maskOf(defs: Seq[Boolean]): Long = {
-    var mask = 0L
-    var i = 0
-    while (i < defs.length) { if (defs(i)) mask |= (1L << i); i += 1 }
-    mask
-  }
-
-  /** Match-ordered (row index, classifier) pairs for a match at `start`
-    * with per-step consumption `takes`: each consumed row is CLASSIFIED
-    * to the first listed variable of its step whose DEFINE held
-    * (single-variable steps trivially; alternation groups pick the first
-    * matching alternative, Flink's greedy classifier order).
-    */
-  private def classifyRows(masks: Array[Long],
-      stepVars: IndexedSeq[Seq[(String, Int)]], start: Int, takes: Array[Int])
-      : IndexedSeq[(Int, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
-    var pos = start
-    var si = 0
-    while (si < stepVars.length) {
-      var r = 0
-      while (r < takes(si)) {
-        val idx = pos + r
-        val cls = stepVars(si)
-          .find { case (_, bit) => ((masks(idx) >> bit) & 1L) == 1L }
-          .map(_._1).getOrElse(stepVars(si).head._1)
-        out += ((idx, cls))
-        r += 1
-      }
-      pos += takes(si)
-      si += 1
-    }
-    out.toIndexedSeq
-  }
-
-  /** One resolved measured match in a per-key time-ordered run.
-    * `rowCls` (buffer index, classifier) pairs are populated only when
-    * the caller asked for per-row output (`wantRows` — the streaming
-    * ALL ROWS walk).
-    */
-  private[graft] final case class MMatch(start: Long, end: Long, n: Int,
-      m: Seq[Double], sm: Seq[String],
-      rowCls: IndexedSeq[(Int, String)] = IndexedSeq.empty)
-
   /** Serializable agg-DEFINE plan: each term's variable bit and the
-    * conditions keyed by the DEFINED variable's bit — rides into the
-    * streaming processes' constructors.
+    * conditions keyed by the DEFINED variable's bit.
     */
   private[graft] final case class AggSpec(termBit: Array[Int],
       condsByBit: Map[Int, Seq[AggCond]], terms: IndexedSeq[AggTerm])
 
-  /** [[AggSpec]] plus the per-run row accessor for the aggregate input
-    * values — what the scan kernels actually consume.
+  /** One resolved measured match in a per-key time-ordered run, with
+    * its consumed rows as (buffer index, classifier) pairs in match order.
     */
-  private[graft] final case class AggEval(av: Int => Seq[Double], spec: AggSpec)
+  private[graft] final case class MMatch(start: Long, end: Long, n: Int,
+      m: Seq[Double], sm: Seq[String], rowCls: IndexedSeq[(Int, String)])
 
-  /** Strict-contiguity matcher with running-aggregate DEFINE conditions
-    * — [[Cep.tryMatchAt]]'s greedy/reluctant backtracking walk, plus
-    * per-term running (count, sum) state over the rows the partial match
-    * has assigned to each variable. Acceptance of a row by a step:
-    * the row's mask bit for a member variable holds AND that variable's
-    * aggregate conditions hold with the row tentatively included
-    * (running semantics — the condition sees the row it classifies).
-    * State commits/rewinds exactly follow the backtracking order, so a
-    * failed branch leaves the running aggregates untouched.
+  /** The mask acceptor: row `p` joins step `ei` when its DEFINE mask
+    * holds a bit of one of the step's variables.
     */
-  private[plans] def tryMatchAtAgg(masks: Array[Long], ts: Array[Long],
-      start: Int, steps: IndexedSeq[Cep.Step],
-      stepVars: IndexedSeq[Seq[(String, Int)]], agg: AggEval,
-      withinMs: Long, openEnded: Boolean, takesOut: Array[Int]): Int = {
-    val n = masks.length
-    val nT = agg.spec.termBit.length
-    val runCnt = new Array[Long](nT)
-    val runSum = new Array[Double](nT)
+  private final class MaskAcceptor(masks: Array[Long], stepMasks: Array[Long])
+      extends Cep.Acceptor {
+    override def accepts(ei: Int, p: Int,
+        partial: scala.collection.IndexedSeq[Int]): Boolean =
+      (masks(p) & stepMasks(ei)) != 0L
+  }
+
+  /** The running-aggregate acceptor for aggregate DEFINE conditions:
+    * row `p` joins step `ei` when its mask bit for a member variable
+    * holds AND that variable's aggregate conditions hold with the row
+    * tentatively included (running semantics — the condition sees the
+    * row it classifies). Per-term running (count, sum) state over the
+    * rows the partial match has assigned to each variable follows the
+    * walk's commits and rewinds, so a failed branch leaves the running
+    * aggregates untouched.
+    */
+  private final class AggAcceptor(rows: Array[MrRow],
+      stepVars: IndexedSeq[Seq[(String, Int)]], spec: AggSpec) extends Cep.Acceptor {
+    private val nT = spec.termBit.length
+    private val runCnt = new Array[Long](nT)
+    private val runSum = new Array[Double](nT)
     // MIN/MAX need the committed values (a scalar cannot undo): commits
     // and rewinds are globally LIFO (the backtracking order), so a
     // per-term value stack replays exactly
-    val runVals: Array[scala.collection.mutable.ArrayBuffer[Double]] =
-      Array.tabulate(nT)(t => agg.spec.terms(t).fn match {
+    private val runVals: Array[scala.collection.mutable.ArrayBuffer[Double]] =
+      Array.tabulate(nT)(t => spec.terms(t).fn match {
         case "MIN" | "MAX" => scala.collection.mutable.ArrayBuffer.empty[Double]
         case _             => null
       })
-    var pending = false
+    // the variable bit each committed row was assigned, in commit order
+    private val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
 
-    def condsHold(bit: Int, p: Int): Boolean =
-      agg.spec.condsByBit.getOrElse(bit, Nil).forall { c =>
-        val own = agg.spec.termBit(c.term) == bit
+    private def condsHold(bit: Int, p: Int): Boolean =
+      spec.condsByBit.getOrElse(bit, Nil).forall { c =>
+        val own = spec.termBit(c.term) == bit
+        val v = rows(p).av(c.term)
         val cnt = runCnt(c.term) + (if (own) 1L else 0L)
-        val sum = runSum(c.term) + (if (own) agg.av(p)(c.term) else 0.0)
-        val fn = agg.spec.terms(c.term).fn
+        val sum = runSum(c.term) + (if (own) v else 0.0)
+        val fn = spec.terms(c.term).fn
         if (fn != "COUNT" && cnt == 0) false // SUM/AVG/MIN/MAX over no rows: NULL
         else {
           val x = fn match {
@@ -1044,14 +1030,10 @@ object MatchRecognize {
             case "AVG"   => sum / cnt
             case "MIN" =>
               val vs = runVals(c.term)
-              if (own) (if (vs.isEmpty) agg.av(p)(c.term)
-                        else math.min(vs.min, agg.av(p)(c.term)))
-              else vs.min
+              if (own) (if (vs.isEmpty) v else math.min(vs.min, v)) else vs.min
             case "MAX" =>
               val vs = runVals(c.term)
-              if (own) (if (vs.isEmpty) agg.av(p)(c.term)
-                        else math.max(vs.max, agg.av(p)(c.term)))
-              else vs.max
+              if (own) (if (vs.isEmpty) v else math.max(vs.max, v)) else vs.max
           }
           c.op match {
             case "<"         => x < c.lit
@@ -1067,174 +1049,134 @@ object MatchRecognize {
     // first member variable whose DEFINE holds for row p — the same
     // greedy order classifyRows uses (agg-defined vars are barred from
     // multi-variable steps, so the two classifiers cannot disagree)
-    def assignVar(si: Int, p: Int): Int = {
-      val vars = stepVars(si)
+    private def assignVar(ei: Int, p: Int): Int = {
+      val vars = stepVars(ei)
       var k = 0
       while (k < vars.length) {
         val bit = vars(k)._2
-        if (((masks(p) >> bit) & 1L) == 1L && condsHold(bit, p)) return bit
+        if (((rows(p).mask >> bit) & 1L) == 1L && condsHold(bit, p)) return bit
         k += 1
       }
       -1
     }
-    def commit(p: Int, bit: Int): Unit = {
+
+    private def add(p: Int, bit: Int, sign: Int): Unit = {
       var t = 0
       while (t < nT) {
-        if (agg.spec.termBit(t) == bit) {
-          runCnt(t) += 1; runSum(t) += agg.av(p)(t)
-          if (runVals(t) != null) runVals(t) += agg.av(p)(t)
-        }
-        t += 1
-      }
-    }
-    def rewind(p: Int, bit: Int): Unit = {
-      var t = 0
-      while (t < nT) {
-        if (agg.spec.termBit(t) == bit) {
-          runCnt(t) -= 1; runSum(t) -= agg.av(p)(t)
-          if (runVals(t) != null) runVals(t).remove(runVals(t).length - 1): Unit
+        if (spec.termBit(t) == bit) {
+          val v = rows(p).av(t)
+          runCnt(t) += sign
+          runSum(t) += sign * v
+          if (runVals(t) != null) {
+            if (sign > 0) runVals(t) += v
+            else runVals(t).remove(runVals(t).length - 1): Unit
+          }
         }
         t += 1
       }
     }
 
-    def rec(pos: Int, si: Int): Int = {
-      if (si == steps.length) return pos
-      val st = steps(si)
-      val room = math.max(0, math.min(st.max.toLong, (n - pos).toLong).toInt)
-      val bits = new Array[Int](room) // assignment per consumed repetition
-      var cnt = 0
-      while (cnt < st.max && pos + cnt < n &&
-        ts(pos + cnt) - ts(start) <= withinMs && {
-          val b = assignVar(si, pos + cnt)
-          if (b >= 0) { bits(cnt) = b; commit(pos + cnt, b); true } else false
-        }) cnt += 1
-      val atEdge = openEnded && pos + cnt == n && cnt < st.max
-      var committed = cnt
-      def setCommitted(target: Int): Unit = {
-        while (committed > target) {
-          committed -= 1; rewind(pos + committed, bits(committed))
-        }
-        while (committed < target) {
-          commit(pos + committed, bits(committed)); committed += 1
-        }
-      }
-      if (st.reluctant) {
-        var take = st.min
-        while (take <= cnt) {
-          setCommitted(take)
-          val r = rec(pos + take, si + 1)
-          if (r >= 0) {
-            if (takesOut != null) takesOut(si) = take
-            return r
-          }
-          take += 1
-        }
-        if (atEdge) pending = true
-        setCommitted(0)
-        Cep.Fail
-      } else {
-        if (atEdge) pending = true
-        var take = cnt
-        while (take >= st.min) {
-          setCommitted(take)
-          val r = rec(pos + take, si + 1)
-          if (r >= 0) {
-            if (takesOut != null) takesOut(si) = take
-            return r
-          }
-          take -= 1
-        }
-        setCommitted(0)
-        Cep.Fail
-      }
+    override def accepts(ei: Int, p: Int,
+        partial: scala.collection.IndexedSeq[Int]): Boolean = assignVar(ei, p) >= 0
+    // the walk commits a row right after accepting it, or re-commits it
+    // after rewinding to the same state, so assignVar agrees with accepts
+    override def commit(ei: Int, p: Int): Unit = {
+      val bit = assignVar(ei, p)
+      bits += bit
+      add(p, bit, 1)
     }
-
-    val r = rec(start, 0)
-    if (pending) Cep.Pending
-    else if (r == start) Cep.Fail // empty match: no row consumed
-    else r
+    override def rewind(ei: Int, p: Int): Unit =
+      add(p, bits.remove(bits.length - 1), -1)
+    override def reset(): Unit = {
+      java.util.Arrays.fill(runCnt, 0L)
+      java.util.Arrays.fill(runSum, 0.0)
+      runVals.foreach(v => if (v != null) v.clear())
+      bits.clear()
+    }
   }
 
-  /** [[Cep.tryMatchAlts]] with running-aggregate conditions: alternatives
-    * in preference order, fresh aggregate state per alternative; a
-    * pending higher-preference alternative pends the whole outcome.
+  /** Match-ordered (row index, classifier) pairs for the consumed `rows`
+    * with per-step consumption `takes`: each consumed row is CLASSIFIED
+    * to the first listed variable of its step whose DEFINE held
+    * (single-variable steps trivially; alternation groups pick the first
+    * matching alternative, Flink's greedy classifier order).
     */
-  private[plans] def tryMatchAltsAgg(masks: Array[Long], ts: Array[Long],
-      start: Int, alts: IndexedSeq[IndexedSeq[Cep.Step]],
-      stepVarsAlts: IndexedSeq[IndexedSeq[Seq[(String, Int)]]], agg: AggEval,
-      withinMs: Long, openEnded: Boolean): (Int, Int, Array[Int]) = {
-    var ai = 0
-    while (ai < alts.length) {
-      val takes = new Array[Int](alts(ai).length)
-      tryMatchAtAgg(masks, ts, start, alts(ai), stepVarsAlts(ai), agg,
-        withinMs, openEnded, takes) match {
-        case Cep.Pending => return (-1, Cep.Pending, null)
-        case Cep.Fail    => ai += 1
-        case end         => return (ai, end, takes)
+  private def classifyRows(masks: Array[Long], stepVars: IndexedSeq[Seq[(String, Int)]],
+      rows: IndexedSeq[Int], takes: Array[Int]): IndexedSeq[(Int, String)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+    var r = 0
+    var si = 0
+    while (si < stepVars.length) {
+      var k = 0
+      while (k < takes(si)) {
+        val idx = rows(r)
+        val cls = stepVars(si)
+          .find { case (_, bit) => ((masks(idx) >> bit) & 1L) == 1L }
+          .map(_._1).getOrElse(stepVars(si).head._1)
+        out += ((idx, cls))
+        r += 1
+        k += 1
       }
+      si += 1
     }
-    (-1, Cep.Fail, null)
+    out.toIndexedSeq
   }
 
-  /** Shared measured scan over one key's time-sorted rows — the batch
-    * [[runMeasured]] kernel and the streaming process run this same
-    * code. `ords` are the order values (also the event times), `masks`
-    * the DEFINE bitmasks, `mv`/`sv` the per-row measure views. Under
-    * `openEnded` (streaming: events past the buffer may still arrive)
-    * only RESOLVED matches emit — a pending higher-preference outcome
-    * halts the scan exactly like [[Cep.scanAlts]] — and the returned
-    * resume index is where a future scan must re-run. `agg` (when
-    * non-null) switches the matcher to the running-aggregate kernel
-    * ([[tryMatchAtAgg]]) for aggregate DEFINE conditions.
+  /** A parsed clause compiled for the [[Cep.walk]]: each alternative's
+    * step shapes (quantifier and name — the mask or aggregate acceptor
+    * decides which rows they take), the (variable, bit) pairs of each
+    * step, the MEASURES and the aggregate DEFINE plan (null when none).
+    * The batch rewrite and the streaming process run the same kernel.
+    * Each match's consumed rows are CLASSIFIED ([[classifyRows]]) and the
+    * measures walk them once; a variable that matched zero rows
+    * (optional step) measures as NULL — except COUNT, which is 0.
     */
-  private[graft] def scanMeasured(ords: Array[Long], masks: Array[Long],
-      mv: Int => Seq[Double], sv: Int => Seq[String],
-      stepAlts: IndexedSeq[IndexedSeq[Cep.Step]],
-      stepVarsAlts: IndexedSeq[IndexedSeq[Seq[(String, Int)]]],
+  private[graft] final case class Kernel(
+      alts: IndexedSeq[IndexedSeq[Cep.RelElem]],
+      stepVars: IndexedSeq[IndexedSeq[Seq[(String, Int)]]],
       measures: Seq[Measure], strOrd: Array[Boolean],
       withinMs: Long, skip: Cep.AfterMatch,
-      openEnded: Boolean, wm: Long,
-      subsets: Map[String, Seq[String]] = Map.empty,
-      matchSeqBase: Long = 0L,
-      wantRows: Boolean = false,
-      agg: AggEval = null): (Seq[MMatch], Int) = {
-    val events = Array.tabulate(ords.length)(i =>
-      Cep.Event(0L, ords(i), ords(i), "", masks(i).toDouble))
-    // a SUBSET measure listens to the union of its members' rows
-    val memberSets: IndexedSeq[Option[Set[String]]] =
-      measures.map(m => subsets.get(m.variable).map(_.toSet)).toIndexedSeq
-    val out = scala.collection.mutable.ArrayBuffer.empty[MMatch]
-    var i = 0
-    var halt = false
-    while (i < events.length && !halt) {
-      val open = openEnded && wm - ords(i) <= withinMs
-      val (ai, end, takes) =
-        if (agg == null) Cep.tryMatchAlts(events, ords, i, stepAlts, withinMs, open)
-        else tryMatchAltsAgg(masks, ords, i, stepAlts, stepVarsAlts, agg,
-          withinMs, open)
-      if (end == Cep.Pending) halt = true
-      else if (end == Cep.Fail) i += 1
-      else {
-        val rowCls = classifyRows(masks, stepVarsAlts(ai), i, takes)
+      subsets: Map[String, Seq[String]], agg: AggSpec) {
+
+    /** The measured scan over one key's ord-sorted rows: emit RESOLVED
+      * matches (under `openEnded`, a pending higher-preference outcome
+      * halts the scan — [[Cep.anchorLoop]]) with MATCH_NUMBER counted on
+      * from `seqBase`, and return the resume index.
+      */
+    def scan(rows: Array[MrRow], openEnded: Boolean, wm: Long,
+        seqBase: Long): (Seq[MMatch], Int) = {
+      val masks = rows.map(_.mask)
+      val accs: IndexedSeq[Cep.Acceptor] =
+        if (agg == null) stepVars.map(sv =>
+          new MaskAcceptor(masks, sv.map(_.foldLeft(0L)((m, v) => m | (1L << v._2))).toArray))
+        else stepVars.map(new AggAcceptor(rows, _, agg))
+      // a SUBSET measure listens to the union of its members' rows
+      val memberSets: IndexedSeq[Option[Set[String]]] =
+        measures.map(m => subsets.get(m.variable).map(_.toSet)).toIndexedSeq
+      val out = scala.collection.mutable.ArrayBuffer.empty[MMatch]
+      val resume = Cep.anchorLoop(rows.map(_.ord), alts, accs, withinMs,
+          openEnded, wm) { (i, w) =>
+        val rowCls = classifyRows(masks, stepVars(w.alt), w.rows, w.takes)
         val byVar = rowCls.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
         def idxsOf(mi: Int): IndexedSeq[Int] = memberSets(mi) match {
           case Some(set) => rowCls.collect { case (ix, c) if set(c) => ix }
           case None => byVar.getOrElse(measures(mi).variable, IndexedSeq.empty)
         }
+        def mv(ix: Int, mi: Int): Double = rows(ix).mv(mi)
+        def sv(ix: Int, mi: Int): String = rows(ix).sv(mi)
         val mvals = measures.zipWithIndex.map { case (m, mi) =>
           val idxs = idxsOf(mi)
-          def vals = idxs.iterator.map(ix => mv(ix)(mi))
+          def vals = idxs.iterator.map(mv(_, mi))
           m.agg match {
-            case "MATCH_NUMBER"    => (matchSeqBase + out.length + 1).toDouble
+            case "MATCH_NUMBER"    => (seqBase + out.length + 1).toDouble
             case "CLASSIFIER"      => Double.NaN // string-side measure
             case "COUNT"           => idxs.length.toDouble
             case _ if idxs.isEmpty => Double.NaN // optional step, no rows
             case _ if strOrd(mi)   => Double.NaN // MIN/MAX on the string view
             case "FIRST" =>
-              if (m.offset < idxs.length) mv(idxs(m.offset))(mi) else Double.NaN
+              if (m.offset < idxs.length) mv(idxs(m.offset), mi) else Double.NaN
             case "LAST" =>
-              if (m.offset < idxs.length) mv(idxs(idxs.length - 1 - m.offset))(mi)
+              if (m.offset < idxs.length) mv(idxs(idxs.length - 1 - m.offset), mi)
               else Double.NaN
             case "SUM"             => vals.sum
             case "MIN"             => vals.min
@@ -1244,75 +1186,77 @@ object MatchRecognize {
         }
         val svals = measures.zipWithIndex.map { case (m, mi) =>
           val idxs = idxsOf(mi)
-          lazy val nn = idxs.map(ix => sv(ix)(mi)).filter(_ != null)
+          lazy val nn = idxs.map(sv(_, mi)).filter(_ != null)
           m.agg match {
             case "CLASSIFIER"             => rowCls.last._2
-            case "FIRST" if m.offset < idxs.length => sv(idxs(m.offset))(mi)
+            case "FIRST" if m.offset < idxs.length => sv(idxs(m.offset), mi)
             case "LAST" if m.offset < idxs.length =>
-              sv(idxs(idxs.length - 1 - m.offset))(mi)
+              sv(idxs(idxs.length - 1 - m.offset), mi)
             case "MIN" if strOrd(mi)      => if (nn.isEmpty) null else nn.min
             case "MAX" if strOrd(mi)      => if (nn.isEmpty) null else nn.max
             case _                        => null
           }
         }
-        out += MMatch(ords(i), ords(end - 1), end - i, mvals, svals,
-          if (wantRows) rowCls else IndexedSeq.empty)
-        i = Cep.resumeAfter(skip, i, end, stepAlts(ai), takes)
+        out += MMatch(rows(i).ord, rows(w.end - 1).ord, w.end - i, mvals, svals, rowCls)
+        Cep.resumeAfter(skip, i, w.end, alts(w.alt), w.takes)
+      }
+      (out.toSeq, resume)
+    }
+
+    /** The batch kernel over a key-clustered, ord-sorted partition: a
+      * bounded lookback scan ([[Cep.boundedScanPartitionBy]]) whose
+      * resolved matches go to `out` with their MATCH_NUMBER, which
+      * carries across rescans of a key and restarts at each new key.
+      */
+    def scanPartition[Out](part: Iterator[MrRow])(
+        out: (Array[MrRow], MMatch, Long) => Seq[Out]): Iterator[Out] = {
+      var seqBase = 0L
+      Cep.boundedScanPartitionBy(part)(_.key, _.ord)({ (rows, open, wm) =>
+        val (ms, resume) = scan(rows, open, wm, seqBase)
+        val o = ms.zipWithIndex.flatMap { case (m, mi) => out(rows, m, seqBase + mi + 1) }
+        seqBase += ms.size
+        (o, resume)
+      }, onNewKey = () => seqBase = 0L)
+    }
+
+    /** ONE ROW PER MATCH output of match number `seq`. */
+    def oneRow(rows: Array[MrRow], m: MMatch, seq: Long): Seq[MrMatch] =
+      Seq(MrMatch(rows(0).key, m.start, m.end, m.n, m.m, m.sm))
+
+    /** ALL ROWS PER MATCH output of match number `seq`: its consumed rows
+      * in match order with their classifier and RUNNING measures (FINAL
+      * ones read the completed match).
+      */
+    def allRows(rows: Array[MrRow], m: MMatch, seq: Long): Seq[MrAllRow] = {
+      val finAcc = if (measures.exists(_.isFinal)) {
+        val a = new RunAcc(measures, strOrd, subsets)
+        m.rowCls.foreach { case (ix, cls) => a.update(cls, rows(ix).mv, rows(ix).sv) }
+        a
+      } else null
+      val acc = new RunAcc(measures, strOrd, subsets)
+      m.rowCls.map { case (ix, cls) =>
+        acc.update(cls, rows(ix).mv, rows(ix).sv)
+        val snapM = measures.indices.map(i =>
+          if (measures(i).isFinal) finAcc.snapM(i) else acc.snapM(i))
+        val snapS = measures.indices.map(i =>
+          if (measures(i).isFinal) finAcc.snapS(i) else acc.snapS(i))
+        MrAllRow(rows(ix).key, rows(ix).ord, seq, cls, snapM, snapS, rows(ix).payload)
       }
     }
-    (out.toSeq, i)
   }
 
-  private def runMeasured(clause: Clause, src: DataFrame,
-      keyField: org.apache.spark.sql.types.StructField, ordCol: Column,
-      defCols: Seq[Column], varIdx: Map[String, Int]): DataFrame = {
-    val schema = src.schema
-    val (mvArr, svArr) = measureArrays(clause, schema)
-    val strOrd = strOrdFlags(clause.measures, schema)
-    implicit val rowEnc = Encoders.product[MrRowM]
-    val tagged = src.select(
-      col(keyField.name).cast("string").as("k"),
-      ordCol.as("ord"),
-      array(defCols: _*).as("defs"),
-      mvArr.as("mv"),
-      svArr.as("sv"),
-      aggInputArr(clause, schema).as("av")).as[MrRowM]
-    val stepAlts: IndexedSeq[IndexedSeq[Cep.Step]] =
-      clause.sequences.map(buildSteps(_, varIdx)).toIndexedSeq
-    val stepVarsAlts: IndexedSeq[IndexedSeq[Seq[(String, Int)]]] =
+  /** Compile a clause whose variables are `vars` (index = DEFINE bit). */
+  private def kernelOf(clause: Clause, vars: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Kernel = {
+    val varIdx = vars.zipWithIndex.toMap
+    Kernel(
+      clause.sequences.map(_.map(s => Cep.next(
+        Cep.PStep(s.variables.mkString("|"), s.min, s.max, s.reluctant))).toIndexedSeq)
+        .toIndexedSeq,
       clause.sequences.map(_.map(s => s.variables.map(v => v -> varIdx(v))).toIndexedSeq)
-        .toIndexedSeq
-    val measures = clause.measures
-    val withinMs = clause.withinMs
-    val skip = clause.skip
-    val subsets = clause.subsets
-    val aggSpec = aggSpecOf(clause, varIdx)
-    val hasAgg = aggSpec != null
-
-    implicit val outEnc = Encoders.product[MrMatchM]
-    // bounded lookback scan (see `run`); MATCH_NUMBER carries across
-    // rescans of a key via seqBase, reset at each key boundary
-    val matches = tagged
-      .repartition(col("k")).sortWithinPartitions(col("k"), col("ord"))
-      .mapPartitions { part =>
-        var seqBase = 0L
-        Cep.boundedScanPartitionBy(part)(_.k, _.ord)({ (rows, open, wm) =>
-          val k = rows(0).k
-          val masks = rows.map(r => maskOf(r.defs))
-          val (ms, resume) = scanMeasured(rows.map(_.ord), masks,
-            i => rows(i).mv, i => rows(i).sv,
-            stepAlts, stepVarsAlts, measures, strOrd, withinMs, skip,
-            openEnded = open, wm = wm, subsets = subsets, matchSeqBase = seqBase,
-            agg = if (hasAgg) AggEval(i => rows(i).av, aggSpec) else null)
-          seqBase += ms.size
-          (ms.map(mm => MrMatchM(k, mm.start, mm.end, mm.n, mm.m, mm.sm)), resume)
-        }, onNewKey = () => seqBase = 0L)
-      }
-    val base = Seq(
-      col("k").cast(keyField.dataType).as(keyField.name),
-      col("match_start"), col("match_end"), col("n_events"))
-    matches.select(base ++
-      measureOutCols(measures, schema, col("m"), col("sm")): _*)
+        .toIndexedSeq,
+      clause.measures, strOrdFlags(clause.measures, schema), clause.withinMs,
+      clause.skip, clause.subsets, aggSpecOf(clause, varIdx))
   }
 
   /** Running MEASURES accumulator for the ALL ROWS walk — one instance
@@ -1413,122 +1357,24 @@ object MatchRecognize {
     }
   }
 
-  /** ALL ROWS PER MATCH: one output row per MATCHED input row, in match
-    * order, carrying every input column (recovered by an equi-join on
-    * (partition, order) — ORDER BY values must therefore be unique per
-    * partition, the same determinism Flink's time attributes provide)
-    * plus `match_seq` (MATCH_NUMBER() analog, 1-based per partition),
-    * `classifier` (the variable the row matched), and the MEASURES with
-    * RUNNING semantics — each aggregate sees the variable's rows up to
-    * and including the current row, Flink's ALL-ROWS default — except
-    * measures wrapped in `FINAL(...)`, which report the COMPLETED
-    * match's value on every row (the SQL standard's FINAL semantics).
-    * Unmatched rows are omitted (Flink omits them under AFTER MATCH
-    * SKIP PAST LAST ROW too).
-    */
-  private def runAllRows(clause: Clause, src: DataFrame,
-      keyField: org.apache.spark.sql.types.StructField, ordCol: Column,
-      defCols: Seq[Column], varIdx: Map[String, Int]): DataFrame = {
-    val schema = src.schema
-    val (mvArr, svArr) = measureArrays(clause, schema)
-    val strOrd = strOrdFlags(clause.measures, schema)
-    implicit val rowEnc = Encoders.product[MrRowM]
-    val tagged = src.select(
-      col(keyField.name).cast("string").as("k"),
-      ordCol.as("ord"),
-      array(defCols: _*).as("defs"),
-      mvArr.as("mv"),
-      svArr.as("sv"),
-      aggInputArr(clause, schema).as("av")).as[MrRowM]
-    val stepAlts: IndexedSeq[IndexedSeq[Cep.Step]] =
-      clause.sequences.map(buildSteps(_, varIdx)).toIndexedSeq
-    val stepVarsAlts: IndexedSeq[IndexedSeq[Seq[(String, Int)]]] =
-      clause.sequences.map(_.map(s => s.variables.map(v => v -> varIdx(v))).toIndexedSeq)
-        .toIndexedSeq
-    val measures = clause.measures
-    val withinMs = clause.withinMs
-    val skip = clause.skip
-    val subsets = clause.subsets
-    val anyFinal = measures.exists(_.isFinal)
-    val aggSpec = aggSpecOf(clause, varIdx)
-    val hasAgg = aggSpec != null
-
-    implicit val outEnc = Encoders.product[MrAllRow]
-    // bounded lookback scan; each resolved match replays its consumed
-    // rows with the RUNNING/FINAL accumulators (the streaming all-rows
-    // walk, StreamingMatchAllRowsProcess, run against a batch buffer).
-    // rowCls indices are buffer-relative, so rows resolve inside scanFn.
-    val kernel = tagged
-      .repartition(col("k")).sortWithinPartitions(col("k"), col("ord"))
-      .mapPartitions { part =>
-        var seqBase = 0L
-        Cep.boundedScanPartitionBy(part)(_.k, _.ord)({ (rows, open, wm) =>
-          val k = rows(0).k
-          val masks = rows.map(r => maskOf(r.defs))
-          val (ms, resume) = scanMeasured(rows.map(_.ord), masks,
-            i => rows(i).mv, i => rows(i).sv,
-            stepAlts, stepVarsAlts, measures, strOrd, withinMs, skip,
-            openEnded = open, wm = wm, subsets = subsets,
-            matchSeqBase = seqBase, wantRows = true,
-            agg = if (hasAgg) AggEval(i => rows(i).av, aggSpec) else null)
-          val out = scala.collection.mutable.ArrayBuffer.empty[MrAllRow]
-          ms.zipWithIndex.foreach { case (m, mi) =>
-            val matchSeq = seqBase + mi + 1
-            // FINAL measures read the completed match: pre-aggregate once
-            val finAcc = if (anyFinal) {
-              val a = new RunAcc(measures, strOrd, subsets)
-              m.rowCls.foreach { case (idx, cls) =>
-                a.update(cls, rows(idx).mv, rows(idx).sv) }
-              a
-            } else null
-            val acc = new RunAcc(measures, strOrd, subsets)
-            m.rowCls.foreach { case (idx, cls) =>
-              acc.update(cls, rows(idx).mv, rows(idx).sv)
-              val snapshot = measures.indices.map(mj =>
-                if (measures(mj).isFinal) finAcc.snapM(mj) else acc.snapM(mj))
-              val snapshotS = measures.indices.map(mj =>
-                if (measures(mj).isFinal) finAcc.snapS(mj) else acc.snapS(mj))
-              out += MrAllRow(k, rows(idx).ord, matchSeq, cls, snapshot, snapshotS)
-            }
-          }
-          seqBase += ms.size
-          (out.toSeq, resume)
-        }, onNewKey = () => seqBase = 0L)
-      }
-    // recover the full input row: equi-join on (partition, order) —
-    // aliased, since the kernel frame derives from src (self-join lineage)
-    val withOrd = src.withColumn("__mr_ord", ordCol).as("__mr_src")
-    kernel.toDF().as("__mr_k")
-      .join(withOrd,
-        col("__mr_k.k") === col(s"__mr_src.${keyField.name}").cast("string") &&
-          col("__mr_k.ord") === col("__mr_src.__mr_ord"))
-      .select(schema.fieldNames.filterNot(_.startsWith("__mr_nav"))
-          .map(n => col(s"__mr_src.$n")) ++
-        Seq(col("__mr_k.match_seq").as("match_seq"),
-          col("__mr_k.classifier").as("classifier")) ++
-        measureOutCols(measures, schema, col("__mr_k.m"), col("__mr_k.sm")): _*)
-  }
-
   /** STREAMING MATCH_RECOGNIZE — the clause over an unbounded source
     * (Flink's MATCH_RECOGNIZE is streaming-first; [U] flink-table-runtime
-    * operators/match/ behind a watermark): the same parsed body runs as
-    * [[graft.streaming.StreamingMatchProcess]], so matches emit
-    * append-only as the watermark closes them and the state bound is the
-    * pending suffix per key. `df` must be a STREAMING DataFrame carrying
-    * an event-time watermark on the ORDER BY column (e.g.
-    * `FlinkDdl.readStream`). The PARTITION BY key may be any atomic
+    * operators/match/ behind a watermark): the same parsed body and the
+    * same [[Kernel]] run as [[graft.streaming.StreamingMatchProcess]], so
+    * matches emit append-only as the watermark closes them and the state
+    * bound is the pending suffix per key. `df` must be a STREAMING
+    * DataFrame carrying an event-time watermark on the ORDER BY column
+    * (e.g. `FlinkDdl.readStream`). The PARTITION BY key may be any atomic
     * non-binary column (keyed by its canonical string form, cast back on
-    * output), and the MEASURES subset is the batch one — the measured
-    * scan is literally the batch kernel ([[scanMeasured]]) behind the
-    * watermark, with MATCH_NUMBER numbered continuously across
-    * micro-batches by a per-key counter state. ALL ROWS PER MATCH is
-    * supported too: matches resolve only behind the watermark, so
-    * replaying their consumed rows is still append-only — the full input
-    * row rides through state as a JSON payload and is parsed back with
-    * the source schema ([[graft.streaming.StreamingMatchAllRowsProcess]]).
-    * Out of the streaming subset: PREV/NEXT navigation (a physical-offset
-    * window over an unbounded stream). Output: the batch shape — one-row:
-    * key (original name/type) + match_start/match_end/n_events + measure
+    * output), and the MEASURES subset is the batch one, with
+    * MATCH_NUMBER numbered continuously across micro-batches by a per-key
+    * counter state. ALL ROWS PER MATCH is supported too: matches resolve
+    * only behind the watermark, so replaying their consumed rows is still
+    * append-only — the full input row rides through state as a JSON
+    * payload and is parsed back with the source schema. Out of the
+    * streaming subset: PREV/NEXT navigation (a physical-offset window
+    * over an unbounded stream). Output: the batch shape — one-row: key
+    * (original name/type) + match_start/match_end/n_events + measure
     * aliases; all-rows: every input column + match_seq/classifier +
     * running measures.
     */
@@ -1537,72 +1383,36 @@ object MatchRecognize {
     require(df.isStreaming, "MatchRecognize.stream expects a streaming DataFrame")
     val clause = parseBody("<stream>", mrBody)
     val schema = df.schema
-    val keyField = schema.find(_.name.equalsIgnoreCase(clause.partitionBy))
-      .getOrElse(fail(s"unknown PARTITION BY column ${clause.partitionBy}"))
+    val (keyField, ordCol) = keyAndOrder(clause, schema)
     keyField.dataType match {
       case BinaryType | _: StructType | _: ArrayType | _: MapType =>
         fail(s"streaming MATCH_RECOGNIZE needs an atomic non-binary " +
           s"PARTITION BY key, got ${keyField.dataType.simpleString}")
       case _ =>
     }
-    val ordField = schema.find(_.name.equalsIgnoreCase(clause.orderBy))
-      .getOrElse(fail(s"unknown ORDER BY column ${clause.orderBy}"))
-    val ordCol: Column = ordField.dataType match {
-      case TimestampType => unix_millis(col(ordField.name))
-      case _             => col(ordField.name).cast(LongType)
-    }
-    val vars = (clause.pattern.flatMap(_.variables) ++ clause.defines.keys).distinct
-    val varIdx = vars.zipWithIndex.toMap
+    val vars = variables(clause)
     val (defs, navs) = rewriteNav(clause.defines, vars.toSet)
     if (navs.nonEmpty) fail("PREV/NEXT navigation is batch-only — a " +
       "physical-offset window over an unbounded stream is not append-only")
-    // DEFINE bits folded into one long bitmask, evaluated by Catalyst in
-    // the scan projection (same trick as the batch path)
-    val maskCol = vars.map(v =>
-        when(expr(defs(v)).cast("boolean"), lit(1L << varIdx(v)))
-          .otherwise(lit(0L)))
-      .reduce(_ + _)
-    val (mvArr, svArr) = measureArrays(clause, schema)
-    val strOrd = strOrdFlags(clause.measures, schema)
-    implicit val evEnc = Encoders.product[graft.streaming.StreamingMatch.MrSEvent]
     // ALL ROWS carries the full input row through state as a JSON
-    // payload (parsed back below with the known schema); one-row mode
-    // keeps the buffered state narrow with a null payload
-    val payloadCol: Column =
+    // payload (parsed back below with the known schema)
+    val payload: Column =
       if (clause.allRows) to_json(struct(schema.fieldNames.map(col): _*))
       else lit(null).cast("string")
-    val events = df.select(
-      col(keyField.name).cast("string").as("key"),
-      ordCol.as("ord"),
-      maskCol.as("mask"),
-      mvArr.as("mv"),
-      svArr.as("sv"),
-      payloadCol.as("payload"),
-      aggInputArr(clause, schema).as("av"))
-      .as[graft.streaming.StreamingMatch.MrSEvent]
-    val stepAlts: IndexedSeq[IndexedSeq[Cep.Step]] =
-      clause.sequences.map(buildSteps(_, varIdx)).toIndexedSeq
-    val stepVarsAlts: IndexedSeq[IndexedSeq[Seq[(String, Int)]]] =
-      clause.sequences.map(_.map(s => s.variables.map(v => v -> varIdx(v))).toIndexedSeq)
-        .toIndexedSeq
-    val aggSpec = aggSpecOf(clause, varIdx)
+    val events = tagRows(clause, df, keyField, ordCol, vars, defs, payload)
+    val kernel = kernelOf(clause, vars, schema)
     if (clause.allRows) {
-      val matches = graft.streaming.StreamingMatch.runAllRows(events, stepAlts,
-        stepVarsAlts, clause.measures, strOrd, clause.withinMs, clause.skip,
-        clause.subsets, aggSpec)
+      val matches = graft.streaming.StreamingMatch.runAllRows(events, kernel)
       return matches.toDF()
         .withColumn("__row", from_json(col("payload"), schema))
         .select(schema.fieldNames.map(n => col(s"__row.`$n`")) ++
           Seq(col("match_seq"), col("classifier")) ++
           measureOutCols(clause.measures, schema, col("m"), col("sm")): _*)
     }
-    val matches = graft.streaming.StreamingMatch.run(events, stepAlts,
-      stepVarsAlts, clause.measures, strOrd, clause.withinMs, clause.skip,
-      clause.subsets, aggSpec)
-    val base = Seq(
+    val matches = graft.streaming.StreamingMatch.run(events, kernel)
+    matches.select(Seq(
       col("key").cast(keyField.dataType).as(keyField.name),
-      col("match_start"), col("match_end"), col("n_events"))
-    matches.select(base ++
+      col("match_start"), col("match_end"), col("n_events")) ++
       measureOutCols(clause.measures, schema, col("m"), col("sm")): _*)
   }
 

@@ -85,5 +85,6 @@ private[streaming] object StateEncoders {
   lazy val stringSeqs: Encoder[Seq[Seq[String]]] = ExpressionEncoder()
   lazy val cepEvent: Encoder[Cep.Event] = Encoders.product[Cep.Event]
   lazy val cepNfaState: Encoder[Cep.NfaState] = Encoders.product[Cep.NfaState]
-  lazy val mrsEvent: Encoder[StreamingMatch.MrSEvent] = Encoders.product[StreamingMatch.MrSEvent]
+  lazy val mrRow: Encoder[graft.plans.MatchRecognize.MrRow] =
+    Encoders.product[graft.plans.MatchRecognize.MrRow]
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 import graft.operators.Cep
@@ -51,91 +53,70 @@ class StreamingCepProcess(a: String, b: String, c: String, withinMs: Long)
   }
 }
 
-/** Streaming general pattern match (quantifiers, optional steps, AFTER
-  * MATCH SKIP) — the unbounded-stream counterpart of [[Cep.matchPattern]],
-  * sharing its scan/backtracking core. Events buffer in ListState until
-  * the watermark passes; the scan emits only RESOLVED matches — a match
-  * whose greedy quantifiers touch the buffer end stays pending (its
-  * events remain buffered) until either a later event resolves it or the
-  * watermark moves past the WITHIN window of its start event, after which
-  * no future event can join it. Consumed events are physically dropped
-  * from state, so state per key is the pending suffix + in-flight events
-  * — the same bound Flink's NFA SharedBuffer carries under a watermark.
+/** The watermark buffer every streaming pattern kernel runs behind:
+  * events buffer in ListState with a timer per event time; when the
+  * watermark passes, the buffered events at or before it are sorted and
+  * scanned, and the scan emits only RESOLVED matches — a match that could
+  * still change with later events stays pending (its events remain
+  * buffered) until a later event resolves it or the watermark moves past
+  * the WITHIN window of its start, after which no future event can join
+  * it. Events before the scan's resume index are dropped from state, so
+  * state per key is the pending suffix + in-flight events — the same
+  * bound Flink's NFA SharedBuffer carries under a watermark.
   */
-class StreamingPatternProcess(alts: IndexedSeq[IndexedSeq[Cep.Step]], withinMs: Long,
-    skip: Cep.AfterMatch)
-    extends KeyedProcess[Long, Cep.Event, Cep.PMatch] {
-  @transient private var buf: ListState[Cep.Event] = _
+abstract class BufferedScanProcess[K, E: ClassTag, O] extends KeyedProcess[K, E, O] {
+  @transient private var buf: ListState[E] = _
 
-  override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
-  }
+  protected def stateEncoder: Encoder[E]
+  protected def tsOf(e: E): Long
+  protected def order: Ordering[E]
+  /** Scan the sorted, watermark-ready events of `key`: emit the resolved
+    * matches and return the resume index.
+    */
+  protected def scan(key: K, ready: Array[E], wm: Long, emit: O => Unit): Int
 
-  override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
-      emit: Cep.PMatch => Unit): Unit = {
+  override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit =
+    buf = h.getListState[E]("buf", stateEncoder, TTLConfig.NONE)
+
+  override def onElement(key: K, v: E, tv: TimerValues, emit: O => Unit): Unit = {
     buf.appendValue(v)
-    registerTimer(v.ts)
+    registerTimer(tsOf(v))
   }
 
-  override def onTimer(key: Long, expiryMs: Long, tv: TimerValues,
-      emit: Cep.PMatch => Unit): Unit = {
+  override def onTimer(key: K, expiryMs: Long, tv: TimerValues, emit: O => Unit): Unit = {
     val wm = math.max(tv.getCurrentWatermarkInMs, expiryMs)
-    val (readyRaw, pending) = buf.get().toArray.partition(_.ts <= wm)
+    val (readyRaw, pending) = buf.get().toArray.partition(tsOf(_) <= wm)
     if (readyRaw.nonEmpty) {
-      val ready = readyRaw.sortBy(e => (e.ts, e.id))
-      val (matches, resume) =
-        Cep.scanAlts(ready, alts, withinMs, skip, openEnded = true, wm = wm)
-      matches.foreach(emit)
+      val ready = readyRaw.sorted(order)
+      val resume = scan(key, ready, wm, emit)
       buf.clear()
       val keep = ready.drop(resume) ++ pending
       if (keep.nonEmpty) {
         buf.appendList(keep)
         // pending events need a revisit when the watermark advances —
-        // their own ts-timers have already fired
+        // their own timers have already fired
         registerTimer(wm + 1)
       }
     }
   }
 }
 
-/** Relaxed-contiguity pattern (followedBy / notFollowedBy chains) over a
-  * watermarked stream — [[StreamingPatternProcess]] with the relaxed
-  * scan ([U] flink-cep NFA under SKIP_TILL_NEXT/SKIP_TILL_ANY). The
-  * same resolution rule applies: an occurrence search or quantifier
-  * that runs into the buffer end stays pending until more events or the
-  * watermark close the WITHIN window.
+/** A [[Cep]] scan over a watermarked keyed event stream — the
+  * unbounded-stream counterpart of the batch pattern APIs, running the
+  * same scan ([[Cep.scanAlts]], [[Cep.scanRelaxed]], [[Cep.scanFunnel]])
+  * behind the watermark with `openEnded` set.
   */
-class StreamingRelaxedProcess(elems: IndexedSeq[Cep.RelElem], withinMs: Long,
-    overlapping: Boolean)
-    extends KeyedProcess[Long, Cep.Event, Cep.RMatch] {
-  @transient private var buf: ListState[Cep.Event] = _
-
-  override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
-  }
-
-  override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
-      emit: Cep.RMatch => Unit): Unit = {
-    buf.appendValue(v)
-    registerTimer(v.ts)
-  }
-
-  override def onTimer(key: Long, expiryMs: Long, tv: TimerValues,
-      emit: Cep.RMatch => Unit): Unit = {
-    val wm = math.max(tv.getCurrentWatermarkInMs, expiryMs)
-    val (readyRaw, pending) = buf.get().toArray.partition(_.ts <= wm)
-    if (readyRaw.nonEmpty) {
-      val ready = readyRaw.sortBy(e => (e.ts, e.id))
-      val (matches, resume) = Cep.scanRelaxed(ready, ready.map(_.ts), elems,
-        withinMs, overlapping, openEnded = true, wm = wm)
-      matches.foreach(emit)
-      buf.clear()
-      val keep = ready.drop(resume) ++ pending
-      if (keep.nonEmpty) {
-        buf.appendList(keep)
-        registerTimer(wm + 1)
-      }
-    }
+class StreamingScanProcess[O](
+    scanFn: (Array[Cep.Event], Boolean, Long) => (Seq[O], Int))
+    extends BufferedScanProcess[Long, Cep.Event, O] {
+  override protected def stateEncoder: Encoder[Cep.Event] = StateEncoders.cepEvent
+  override protected def tsOf(e: Cep.Event): Long = e.ts
+  override protected def order: Ordering[Cep.Event] = StreamingCep.eventOrder
+  override protected def scan(key: Long, ready: Array[Cep.Event], wm: Long,
+      emit: O => Unit): Int = {
+    val (matches, resume) = scanFn(ready, true, wm)
+    matches.foreach(emit)
+    resume
   }
 }
 
@@ -145,41 +126,20 @@ class StreamingRelaxedProcess(elems: IndexedSeq[Cep.RelElem], withinMs: Long,
   * ([U] flink-cep TimedOutPartialMatchHandler behind event time).
   */
 class StreamingFunnelProcess(elems: IndexedSeq[Cep.RelElem], withinMs: Long)
-    extends KeyedProcess[Long, Cep.Event, Cep.FunnelOut] {
-  @transient private var buf: ListState[Cep.Event] = _
-
-  override def open(h: StatefulProcessorHandle, om: OutputMode, tm: TimeMode): Unit = {
-    buf = h.getListState[Cep.Event]("buf", StateEncoders.cepEvent, TTLConfig.NONE)
-  }
-
+    extends StreamingScanProcess[Cep.FunnelOut](
+      Cep.scanFunnel(_, elems, withinMs, _, _)) {
   override def onElement(key: Long, v: Cep.Event, tv: TimerValues,
       emit: Cep.FunnelOut => Unit): Unit = {
-    buf.appendValue(v)
-    registerTimer(v.ts)
+    super.onElement(key, v, tv, emit)
     // the anchor resolves as abandoned when its window closes
     if (withinMs < Long.MaxValue / 8) registerTimer(v.ts + withinMs + 1)
-  }
-
-  override def onTimer(key: Long, expiryMs: Long, tv: TimerValues,
-      emit: Cep.FunnelOut => Unit): Unit = {
-    val wm = math.max(tv.getCurrentWatermarkInMs, expiryMs)
-    val (readyRaw, pending) = buf.get().toArray.partition(_.ts <= wm)
-    if (readyRaw.nonEmpty) {
-      val ready = readyRaw.sortBy(e => (e.ts, e.id))
-      val (matches, resume) = Cep.scanFunnel(ready, ready.map(_.ts), elems,
-        withinMs, openEnded = true, wm = wm)
-      matches.foreach(emit)
-      buf.clear()
-      val keep = ready.drop(resume) ++ pending
-      if (keep.nonEmpty) {
-        buf.appendList(keep)
-        registerTimer(wm + 1)
-      }
-    }
   }
 }
 
 object StreamingCep {
+  private[streaming] val eventOrder: Ordering[Cep.Event] =
+    Ordering.by((e: Cep.Event) => (e.ts, e.id))
+
   /** `a b+ c WITHIN withinMs` over a watermarked keyed event stream. */
   def abcWithin(ds: Dataset[Cep.Event], a: String, b: String, c: String,
       withinMs: Long): Dataset[Cep.Match] = {
@@ -197,15 +157,15 @@ object StreamingCep {
 
   /** [[matchPattern]] over alternative step sequences (PERMUTE): first
     * matching alternative wins; a pending higher-preference alternative
-    * keeps the scan buffered (Cep.tryMatchAlts' preference rule).
+    * keeps the scan buffered (Cep.walk's preference rule).
     */
   def matchPatternAlts(ds: Dataset[Cep.Event], alts: IndexedSeq[IndexedSeq[Cep.Step]],
       withinMs: Long, skip: Cep.AfterMatch = Cep.SkipPastLastRow)
       : Dataset[Cep.PMatch] = {
     implicit val out: Encoder[Cep.PMatch] = Encoders.product[Cep.PMatch]
-    alts.foreach(Cep.requireNonIterative)
     ds.groupByKey(_.key)(Encoders.scalaLong)
-      .transformWithState(new StreamingPatternProcess(alts, withinMs, skip),
+      .transformWithState(
+        new StreamingScanProcess(Cep.scanAlts(_, alts, withinMs, skip, _, _)),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -233,7 +193,8 @@ object StreamingCep {
     val el = elems.toIndexedSeq
     Cep.validateRelaxed(el)
     ds.groupByKey(_.key)(Encoders.scalaLong)
-      .transformWithState(new StreamingRelaxedProcess(el, withinMs, overlapping),
+      .transformWithState(
+        new StreamingScanProcess(Cep.scanRelaxed(_, el, withinMs, overlapping, _, _)),
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.{GraftSession, SparkEntry}
+import graft.GraftSession
 
 /** Regenerates the committed golden CSVs for [[Golden.pinned]] at the
   * sf0.01 fixture. Run after an INTENTIONAL kernel-contract change only:

@@ -126,7 +126,6 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   test("q148 production-recall LSH chain: recall floor + precision 1 vs the FULL exact pair kernel") {
-    import spark.implicits._
     // the deployment parameter rule (lshParams default target 0.99) —
     // scored against the exhaustive all-pairs oracle, not just the
     // planted-twin subset the declared query's in-engine contract uses

@@ -388,7 +388,6 @@ class CepSimilaritySpec extends AnyFunSuite {
   }
 
   test("semantic dedup: drop rule re-derived from the exact pair kernel across probe cells") {
-    import org.apache.spark.sql.functions._
     // the q119/q128 planted corpus: base ∪ perturbed twins (cos ≈ 0.97)
     val emb = graft.queries.Vector.plantedCorpus(spark, TestSpark.sfDir, 1)
     def probesOf(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Int]] =
@@ -544,7 +543,6 @@ class CepSimilaritySpec extends AnyFunSuite {
   }
 
   test("semantic dedup above the hierarchy knee: the probe-rule re-derivation still holds") {
-    import org.apache.spark.sql.functions._
     // nCells = 300 > the 256 knee → the hierarchical assignment engages;
     // the DROP RULE stays exact GIVEN the assignment, so the keep set
     // must still re-derive from the output's probe cells + the exact

@@ -216,7 +216,6 @@ class FlinkDdlSpec extends AnyFunSuite with TempDirs {
   }
 
   test("streaming datagen: the rate source drives the declared shape with field options") {
-    import spark.implicits._
     FlinkDdl.execute(spark,
       """CREATE TABLE ddl_gen_stream (
         |  id BIGINT,

@@ -653,7 +653,6 @@ class FlinkScriptSpec extends AnyFunSuite with TempDirs {
   }
 
   test("CREATE FUNCTION aliases resolvable functions; unresolvable classes error with guidance") {
-    import spark.implicits._
     // alias a builtin under a Flink-script name
     FlinkSql.sql(spark, "CREATE TEMPORARY FUNCTION my_upper AS 'upper'")
     assert(FlinkSql.sql(spark, "SELECT my_upper('ab') AS u").head().getString(0) == "AB")
@@ -777,7 +776,6 @@ class FlinkScriptSpec extends AnyFunSuite with TempDirs {
   }
 
   test("CREATE FUNCTION invocations take FLIP-387 named arguments (scalar + table)") {
-    import spark.implicits._
     val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udf_named"))
     java.nio.file.Files.writeString(dir.resolve("GraftPadUdf.java"),
       """public class GraftPadUdf {
@@ -857,7 +855,6 @@ class FlinkScriptSpec extends AnyFunSuite with TempDirs {
   }
 
   test("FLIP-387 optional named arguments via @ArgumentHint (scalar + procedure, javac-jar e2e)") {
-    import spark.implicits._
     val dir = java.nio.file.Paths.get(TestSpark.exitTempDir("graft_udf_opt"))
     // the user jar carries its OWN ArgumentHint annotation (Flink's
     // lives in flink-table-common, absent here) — the bridge duck-types
@@ -2015,7 +2012,6 @@ class FlinkScriptSpec extends AnyFunSuite with TempDirs {
   }
 
   test("namespace bookkeeping survives the review's failure scenarios") {
-    import spark.implicits._
     val dir = tempDir("flink_ns2")
     // -- a failed USE cat.db must not half-switch the session
     FlinkSql.run(spark,

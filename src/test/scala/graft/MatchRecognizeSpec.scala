@@ -611,6 +611,27 @@ class MatchRecognizeSpec extends AnyFunSuite {
     assert(bad("""SELECT * FROM mr_err MATCH_RECOGNIZE (
       | ORDER BY ord PATTERN (A) DEFINE A AS sym = 'a')""".stripMargin)
       .getMessage.contains("PARTITION BY"))
+    // one mask bit per variable: a 65th would wrap onto bit 0
+    val defines65 = (0 until 65).map(i => s"V$i AS TRUE").mkString(", ")
+    assert(bad(s"""SELECT * FROM mr_err MATCH_RECOGNIZE (
+      | PARTITION BY k ORDER BY ord
+      | PATTERN (V0) DEFINE $defines65)""".stripMargin)
+      .getMessage.contains("at most 64 DEFINE variables"))
+  }
+
+  test("DEFINE masks keep every bit up to 64 variables") {
+    // 55 variables that all hold on every row: a mask packed into a
+    // double would round 2^55-1 up to 2^55 and lose V0 and V1
+    mkView("mr_wide", Seq((1L, 0L, "a", 0.0), (1L, 1L, "b", 0.0)))
+    val defines = (0 until 55).map(i => s"V$i AS TRUE").mkString(", ")
+    val got = MatchRecognize.sql(spark,
+      s"""SELECT * FROM mr_wide MATCH_RECOGNIZE (
+         |  PARTITION BY k ORDER BY ord
+         |  PATTERN (V0 V1)
+         |  DEFINE $defines
+         |)""".stripMargin)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
+    assert(got == Seq((0L, 1L, 2)))
   }
 
   test("statements without the clause pass through untouched") {

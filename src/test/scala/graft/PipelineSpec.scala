@@ -58,7 +58,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stage 3 removes the benchmark slice and its contaminated neighbors — verified by the exact kernel") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val (in3, out3) = stages("3_decontamination")
     // the eval ids (< 200) present after stages 1-2 must all leave, plus
     // their surviving TEXT twins (2M+i for i < 200, i % 4 == 0, whose

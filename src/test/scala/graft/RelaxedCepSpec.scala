@@ -151,11 +151,15 @@ class RelaxedCepSpec extends AnyFunSuite {
     val got2 = Cep.matchPatternRelaxed(es2.toDS(), strictlyRising, Long.MaxValue / 4)
       .collect().map(m => (m.start_ts, m.end_ts, m.n_events)).toSeq
     assert(got2 == Seq((1L, 2L, 2))) // 6.0 > 5.0, but the second 6.0 is not > 6.0
-    // the strict kernel rejects iterative conditions up front
-    val e = intercept[IllegalArgumentException](
-      Cep.matchPattern(es.toDS(), Seq(Cep.whenCtx("B")((e, _) => true)),
-        Long.MaxValue / 4))
-    assert(e.getMessage.contains("relaxed"))
+    // the strict API runs the same walk: its steps are `next` elements
+    val steps = Seq(Cep.once("a"), Cep.whenCtx("B", 1, Cep.MaxTimes) { (e, ctx) =>
+      e.sym == "b" && e.value > ctx.last.value
+    })
+    val strict = Cep.matchPattern(es2.toDS(), steps, Long.MaxValue / 4)
+      .collect().map(m => (m.start_ts, m.end_ts, m.n_events)).toSeq
+    val relaxed = Cep.matchPatternRelaxed(es2.toDS(), steps.map(Cep.next),
+      Long.MaxValue / 4).collect().map(m => (m.start_ts, m.end_ts, m.n_events)).toSeq
+    assert(strict == relaxed && strict == Seq((1L, 2L, 2)))
   }
 
   test("funnel: every anchored start resolves to completed or abandoned") {

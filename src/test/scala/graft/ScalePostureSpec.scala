@@ -202,14 +202,28 @@ class ScalePostureSpec extends AnyFunSuite with TempDirs {
 
   test("CEP bounded scan fuzz: random patterns, skips, windows vs unbounded") {
     import graft.operators.Cep
+    import graft.plans.MatchRecognize
     val rnd = new scala.util.Random(77)
     val syms = Array("A", "B", "C", "X")
-    for (trial <- 0 until 40) {
+    // bounded ≡ unbounded per key, keyed runs back-to-back in one sorted run
+    def check[E, O](name: String, trial: Int, events: Seq[E], keyOf: E => Any)(
+        bounded: Iterator[E] => Iterator[O], unbounded: Array[E] => Seq[O])(
+        implicit tag: scala.reflect.ClassTag[E]): Unit = {
+      val want = events.groupBy(keyOf).toSeq.sortBy(_._1.toString)
+        .flatMap { case (_, ks) => unbounded(ks.toArray) }.map(_.toString).toVector
+      val got = bounded(events.iterator).map(_.toString).toVector
+      assert(got == want, s"$name trial $trial")
+    }
+    for (trial <- 0 until 8) {
+      // keys longer than a scan chunk, so each key is rescanned open-ended
       val events = (0 until 2).flatMap { k =>
-        val n = 200 + rnd.nextInt(400)
-        (0 until n).map(i => Cep.Event(key = k.toLong, id = i.toLong,
-          ts = i.toLong * (1 + rnd.nextInt(3)),
-          sym = syms(rnd.nextInt(syms.length)), value = rnd.nextInt(10).toDouble))
+        val n = Cep.ScanChunk + 500 + rnd.nextInt(2000)
+        var ts = 0L
+        (0 until n).map { i =>
+          ts += 1 + rnd.nextInt(3)
+          Cep.Event(key = k.toLong, id = i.toLong, ts = ts,
+            sym = syms(rnd.nextInt(syms.length)), value = rnd.nextInt(10).toDouble)
+        }
       }
       def randStep(): Cep.Step = {
         val sym = syms(rnd.nextInt(3)) // A/B/C
@@ -224,15 +238,63 @@ class ScalePostureSpec extends AnyFunSuite with TempDirs {
       val steps = IndexedSeq.fill(2 + rnd.nextInt(3))(randStep())
       val skip = if (rnd.nextBoolean()) Cep.SkipPastLastRow else Cep.SkipToNextRow
       val within = Seq(30L, 120L, 600L, Long.MaxValue / 4)(rnd.nextInt(4))
-      val bounded = Cep.boundedScanPartition(events.iterator) { (ev, open, wm) =>
-        Cep.scan(ev, steps, within, skip, open, wm)
-      }.toVector
-      val unbounded = events.groupBy(_.key).toSeq.sortBy(_._1).flatMap { case (_, ks) =>
-        Cep.scan(ks.toArray, steps, within, skip,
-          openEnded = false, wm = Long.MaxValue)._1
-      }.toVector
-      assert(bounded == unbounded,
-        s"trial $trial steps=$steps skip=$skip within=$within")
+      val ctx = s"steps=$steps skip=$skip within=$within"
+      check(s"strict $ctx", trial, events, (_: Cep.Event).key)(
+        it => Cep.boundedScanPartition(it)(Cep.scan(_, steps, within, skip, _, _)),
+        ks => Cep.scan(ks, steps, within, skip, openEnded = false, wm = Long.MaxValue)._1)
+
+      // relaxed contiguity and negatives over a closed window (an open
+      // window never resolves a relaxed search before the key ends)
+      val relWithin = Seq(30L, 120L, 600L)(rnd.nextInt(3))
+      val elems = Cep.next(randStep()) +: IndexedSeq.fill(1 + rnd.nextInt(3)) {
+        val neg = if (rnd.nextInt(4) == 0) {
+          val sym = syms(rnd.nextInt(4))
+          Seq(if (rnd.nextBoolean()) Cep.notNext(sym)(_.sym == sym)
+              else Cep.notFollowedBy(sym)(_.sym == sym))
+        } else Nil
+        neg :+ (rnd.nextInt(3) match {
+          case 0 => Cep.next(randStep())
+          case 1 => Cep.followedBy(randStep())
+          case 2 => Cep.followedByAny(randStep())
+        })
+      }.flatten
+      val overlapping = rnd.nextBoolean()
+      val rctx = s"elems=$elems within=$relWithin overlapping=$overlapping"
+      check(s"relaxed $rctx", trial, events, (_: Cep.Event).key)(
+        it => Cep.boundedScanPartition(it)(
+          Cep.scanRelaxed(_, elems, relWithin, overlapping, _, _)),
+        ks => Cep.scanRelaxed(ks, elems, relWithin, overlapping,
+          openEnded = false, wm = Long.MaxValue)._1)
+      check(s"funnel $rctx", trial, events, (_: Cep.Event).key)(
+        it => Cep.boundedScanPartition(it)(Cep.scanFunnel(_, elems, relWithin, _, _)),
+        ks => Cep.scanFunnel(ks, elems, relWithin, openEnded = false, wm = Long.MaxValue)._1)
+
+      // the measured MATCH_RECOGNIZE kernel: variables A/B/C are the
+      // symbols, MATCH_NUMBER carries across rescans of a key, and some
+      // trials cap B with a running SUM(B.value) DEFINE
+      val rows = events.map(e => MatchRecognize.MrRow(s"k${e.key}", e.ts,
+        e.sym match { case "A" => 1L; case "B" => 2L; case "C" => 4L; case _ => 0L },
+        Seq(0.0, 0.0, e.value, e.value), Seq(null, null, e.value.toString,
+          e.value.toString), null, Seq(e.value)))
+      val varOf = Map("A" -> 0, "B" -> 1, "C" -> 2)
+      val agg = if (rnd.nextBoolean()) null else MatchRecognize.AggSpec(Array(1),
+        Map(1 -> Seq(MatchRecognize.AggCond(0, "<", 5.0 + rnd.nextInt(20)))),
+        IndexedSeq(MatchRecognize.AggTerm("SUM", "B", "value")))
+      val kernel = MatchRecognize.Kernel(IndexedSeq(steps.map(Cep.next)),
+        IndexedSeq(steps.map {
+          case s: Cep.PStep => Seq(s.sym -> varOf(s.sym))
+          case s            => fail(s"unexpected step $s")
+        }),
+        Seq(MatchRecognize.Measure("MATCH_NUMBER", "", "*", "mn"),
+          MatchRecognize.Measure("COUNT", "B", "*", "nb"),
+          MatchRecognize.Measure("SUM", "B", "value", "sb"),
+          MatchRecognize.Measure("LAST", "A", "value", "la")),
+        Array.fill(4)(false), within, skip, Map.empty, agg)
+      check(s"measured $ctx agg=${agg != null}", trial, rows,
+        (_: MatchRecognize.MrRow).key)(
+        it => kernel.scanPartition(it)((_, m, _) => Seq(m.copy(rowCls = Vector.empty))),
+        ks => kernel.scan(ks, openEnded = false, wm = Long.MaxValue, 0L)._1
+          .map(_.copy(rowCls = Vector.empty))) // row indices are buffer-relative
     }
   }
 }
